@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default: the sf0.1 fixtures) on a session sized by
+``session.host_profile()``.
 
 Prints ONE compact JSON line:
   {"metric": "...", "value": N, "unit": "sec", "protocol": "prepared-v3-noop",
@@ -63,7 +64,7 @@ def _execute(df):
     df.write.format("noop").mode("overwrite").save()
 
 from hive_metadata_collect_spark import registry
-from hive_metadata_collect_spark.session import configure
+from hive_metadata_collect_spark.session import configure, get_spark, host_profile
 
 # BENCH key → registry operator name (BASELINE.md table rows).
 HEADLINE = {
@@ -226,28 +227,15 @@ def main() -> None:
         if only
         else DEMO
     )
-    # 16 shuffle partitions measured fastest for the sf0.1 suite on
-    # local[32] (AQE coalesces further at runtime); env-overridable.
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "16"))
-    from pyspark.sql import SparkSession
-
-    master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-
-    # Driver heap: Spark's local-mode default is 1g, which starves 32
+    # Driver heap: Spark's local-mode default is 1g, which starves the
     # executor threads (the sf1 LSH candidate set OOMs a 1g heap while
-    # the machine has 128 GiB idle; DuckDB meanwhile uses all machine
-    # memory by default). 32g ≈ 1g/thread — the per-executor sizing a
-    # real cluster would run.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    # DuckDB uses all machine memory by default), so the session takes
+    # the host profile: master, heap and shuffle partitions.
+    profile = host_profile()
 
     # ---- pass 1: timed, UNinstrumented (event logging costs ~7% of
     # suite wall, so the reported numbers come from a clean session) --
-    spark = configure(
-        SparkSession.builder.appName("hmcs-bench")
-        .master(master)
-        .config("spark.driver.memory", mem),
-        shuffle_partitions=shuffle,
-    ).getOrCreate()
+    spark = get_spark(app_name="hmcs-bench")
     ops = registry.load_all()
 
     # Warm pass: run every headline query once untimed so the timed
@@ -346,8 +334,8 @@ def main() -> None:
         # carrying the honored value as first-class fields makes a
         # floor-bound ≈1 ratio at sf0.1 distinguishable from an
         # ignored env var without reading the provenance string.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "master": master,
+        "cpus": profile["cores"],
+        "master": profile["master"],
         "sf": sf,
     }
     # Provenance carried INSIDE every artifact (r9/r10 verdicts: the
@@ -371,13 +359,14 @@ def main() -> None:
         head = "unknown"
     stamp = (
         f"protocol v3 noop; code {head}; {datetime.date.today()}; "
-        f"{master}, {mem} driver, shuffle={shuffle}"
+        f"{profile['master']}, {profile['driver_mem']} driver, "
+        f"shuffle={profile['shuffle_partitions']}"
     )
     note = os.environ.get("SPARK_GRAFT_NOTE")
     payload["provenance"] = f"{note}; {stamp}" if note else stamp
     headline_json = json.dumps(payload)
     try:
-        _stage_sidecar(headline, ops, sf_dir, sf, master, mem, shuffle, total)
+        _stage_sidecar(headline, ops, sf_dir, sf, total)
     except Exception as exc:  # pragma: no cover - diagnostic path
         sys.stderr.write(f"bench: stage sidecar pass failed: {exc}\n")
         sys.stderr.flush()
@@ -385,7 +374,7 @@ def main() -> None:
     sys.stdout.flush()
 
 
-def _stage_sidecar(headline, ops, sf_dir, sf, master, mem, shuffle, total):
+def _stage_sidecar(headline, ops, sf_dir, sf, total):
     """Pass 2: event-logged session over BREAKDOWN queries; writes the
     per-stage wall breakdown to BENCH_STAGES.json (never stdout)."""
     from pyspark.sql import SparkSession
@@ -412,12 +401,7 @@ def _stage_sidecar(headline, ops, sf_dir, sf, master, mem, shuffle, total):
     # driver's stdout tail buffer is bounded (see module docstring). --
     event_dir = tempfile.mkdtemp(prefix="hmcs-bench-events-")
     spark = (
-        configure(
-            SparkSession.builder.appName("hmcs-bench-stages")
-            .master(master)
-            .config("spark.driver.memory", mem),
-            shuffle_partitions=shuffle,
-        )
+        configure(SparkSession.builder.appName("hmcs-bench-stages"))
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", event_dir)
         .config("spark.eventLog.compress", "false")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.operators.numerics import cents
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import scoped_conf
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 # Gate threshold for data-derived broadcast candidates: well under the
@@ -1131,20 +1132,15 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states. Configs are restored after plan construction —
     the returned frame's QueryExecution is forced (and thereby
     cached) under the modified session first."""
-    cfgs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in cfgs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         ).select("o_orderkey")
@@ -1168,12 +1164,6 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a separate plan and leave this one to re-optimize later.
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(

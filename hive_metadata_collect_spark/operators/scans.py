@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import scoped_conf
 from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -353,18 +354,13 @@ def scan_agg_pushdown_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the timestamp freshness probe as its own query instead. At
     100 TB this is the difference between touching ~KB of footers
     per file and re-scanning every page of every column."""
-    cfgs = {
-        "spark.sql.parquet.aggregatePushdown": "true",
-        "spark.sql.sources.useV1SourceList": "",
-    }
-    saved = {}
-    for k, v in cfgs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.parquet.aggregatePushdown": "true",
+            "spark.sql.sources.useV1SourceList": "",
+        },
+    ):
         # fresh read: load_table's cached relation was resolved under
         # the V1 reader and would bypass the DSv2 pushdown path
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -377,12 +373,6 @@ def scan_agg_pushdown_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(

@@ -202,6 +202,29 @@ def src_jdbc_embedded_metastore(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KAFKA_QUERY_SEQ = [0]
 
 
+def _sweep_stale_feeds(scratch: str, app_id: str) -> None:
+    """Remove other sessions' staged feeds idle for over an hour.
+    Checkpoints are skipped by name: a live query writes below its
+    checkpoint dir, which leaves the dir's own mtime stale. New ones
+    are ``kafka_ckpt_*``; ``kafka_feed_ckpt_*`` ones come from older
+    builds that may still be running."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    for stale in glob.glob(os.path.join(scratch, "kafka_feed_*")):
+        name = os.path.basename(stale)
+        if name.startswith(("kafka_feed_ckpt_", f"kafka_feed_{app_id}_")):
+            continue
+        try:
+            idle = time.time() - os.path.getmtime(stale)
+        except OSError:
+            continue
+        if idle > 3600:
+            shutil.rmtree(stale, ignore_errors=True)
+
+
 @register(
     "src_kafka_shaped_feed",
     survey_row=1,
@@ -279,16 +302,7 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         except OSError:
             pass
     else:
-        import glob as _glob
-        import time as _time
-
-        for stale in _glob.glob(_os.path.join(scratch, "kafka_feed_*")):
-            try:
-                idle = _time.time() - _os.path.getmtime(stale)
-            except OSError:
-                continue
-            if f"kafka_feed_{app_id}_" not in stale and idle > 3600:
-                _shutil.rmtree(stale, ignore_errors=True)
+        _sweep_stale_feeds(scratch, app_id)
         ev = load_table(spark, sf_dir, "events")
         rec = ev.select(
             F.col("event_id").cast("string").cast("binary").alias("key"),
@@ -336,7 +350,7 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _KAFKA_QUERY_SEQ[0] += 1
     name = f"kafka_feed_rollup_{_KAFKA_QUERY_SEQ[0]}"
-    ckpt = _tempfile.mkdtemp(prefix="kafka_feed_ckpt_", dir=scratch)
+    ckpt = _tempfile.mkdtemp(prefix="kafka_ckpt_", dir=scratch)
     out = run_available_now(agg, name, ckpt, output_mode="complete")
     result = out.select(
         F.col("window.start").alias("window_start"),

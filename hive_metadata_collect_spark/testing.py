@@ -17,6 +17,7 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
+from hive_metadata_collect_spark.session import host_profile
 from hive_metadata_collect_spark.sources.fixtures import TABLES
 
 # Floats rendered at 12 significant digits: engine-order-dependent
@@ -28,13 +29,13 @@ _FLOAT_FMT = ".12g"
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET timezone='UTC'")
-    # Bounded-memory discipline (r12): cap the allocator and give it a
-    # spill dir, the same guard tools/baseline_duck.py applies. The
-    # uncapped sf10 dedup_ngram_jaccard oracle grew to 109 GB RSS and
-    # was kernel-OOM-killed mid-sweep (taking the whole sweep process
-    # with it — unrecoverable from Python); capped, DuckDB spills and
+    # Bounded-memory discipline: cap the allocator at the host
+    # profile's DuckDB cap and give it a spill dir. The uncapped sf10
+    # dedup_ngram_jaccard oracle grew to 109 GB RSS and was
+    # kernel-OOM-killed mid-sweep (taking the whole sweep process with
+    # it — unrecoverable from Python); capped, DuckDB spills and
     # completes. No effect at the driver's sf0.01 gate scale.
-    mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", "24GB")
+    mem = host_profile()["duck_mem"]
     spill = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scratch", "duck_spill",

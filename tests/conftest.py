@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="hmcs-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="hmcs-tests")
     yield spark
 
 

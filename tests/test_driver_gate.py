@@ -13,8 +13,10 @@ Knobs:
   same check).
 - ``SPARK_GRAFT_DRIVER_GATE_ONLY=a,b`` restricts to named ops.
 
-Full run is ~5 minutes on local[32] — inside the "one command gives
-the full local gate in <10 min" budget the verdict set.
+The session is sized from the host (``session.host_profile()``): a
+full run is ~5 minutes on 32 cores and ~7 minutes on 4 — inside the
+"one command gives the full local gate in <10 min" budget the verdict
+set.
 """
 
 from __future__ import annotations

@@ -544,3 +544,27 @@ def test_dedup_keys_restart_no_reemission(spark, sf_dir, checkpoint, tmp_path):
         for r in second.select("user_id", "event_type").distinct().collect()
     } & r1
     assert repeats, "no key recurred across the restart — split is broken"
+
+
+def test_feed_sweep_spares_checkpoints(tmp_path):
+    """The stale-feed sweep removes another session's idle feed but
+    never a checkpoint dir, however old its top-level mtime."""
+    import os
+    import time
+
+    from hive_metadata_collect_spark.sources.connectors import (
+        _sweep_stale_feeds,
+    )
+
+    old = time.time() - 2 * 3600
+    names = [
+        "kafka_feed_local-1_sf0.001",  # another session's feed
+        "kafka_feed_local-2_sf0.001",  # this session's feed
+        "kafka_feed_ckpt_abc123",
+        "kafka_ckpt_def456",
+    ]
+    for name in names:
+        (tmp_path / name / "offsets").mkdir(parents=True)
+        os.utime(tmp_path / name, (old, old))
+    _sweep_stale_feeds(str(tmp_path), "local-2")
+    assert sorted(os.listdir(tmp_path)) == sorted(names[1:])

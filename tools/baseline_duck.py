@@ -15,10 +15,13 @@ materialization at sf10 SIGSEGVed inside the DuckDB allocator (not a
 catchable Python exception; `.scratch/r13/duck_sf10_r13.err` run 2),
 which no amount of in-process rebuild hardening survives. Process
 isolation also returns every key's memory to the kernel before the
-next key starts. A crashed key is retried once in a fresh child at
-SPARK_GRAFT_DUCK_MEM_RETRY (default 64GB) and the line annotated;
---inproc restores the single-process behavior (used by the children,
-and available for debugging).
+next key starts. The base memory cap is the host profile's
+(``session.host_profile()``); a crashed key is retried in a fresh
+child at SPARK_GRAFT_DUCK_MEM_RETRY (default half of MemTotal) and the
+line annotated. A deterministic SQL error ends the ladder at once and
+is printed as the child reported it. --inproc restores the
+single-process behavior (used by the children, and available for
+debugging).
 """
 
 from __future__ import annotations
@@ -38,6 +41,8 @@ import duckdb
 
 from bench import DEMO, HEADLINE
 from hive_metadata_collect_spark import registry
+from hive_metadata_collect_spark.session import host_profile, mem_total_kb
+from hive_metadata_collect_spark.testing import duck_connection
 
 
 def _meminfo_available_gb() -> float:
@@ -51,18 +56,26 @@ def _meminfo_available_gb() -> float:
     return float("inf")  # no meminfo — skip the gate
 
 
+def _caps() -> tuple[str, str]:
+    """The base DuckDB memory cap and the larger retry cap."""
+    retry = f"{max(1, mem_total_kb() // (2 << 20))}GB"
+    return (
+        host_profile()["duck_mem"],
+        os.environ.get("SPARK_GRAFT_DUCK_MEM_RETRY", retry),
+    )
+
+
 def _parent(sf_dir: str, only: set[str] | None) -> None:
     """Drive one child process per key; aggregate TOTAL lines."""
     print(f"# DuckDB {duckdb.__version__} @ {sf_dir} (per-key process isolation)")
     total = 0.0
     demo_total = 0.0
     line_re = re.compile(r"^(q_\w+)\s+([0-9.]+) ms\b")
+    base_mem, retry_mem = _caps()
     for key in list(HEADLINE) + list(DEMO):
         if only is not None and key not in only:
             continue
         is_demo = key in DEMO
-        base_mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", "24GB")
-        retry_mem = os.environ.get("SPARK_GRAFT_DUCK_MEM_RETRY", "64GB")
         printed = False
         # Attempt ladder: base cap → bigger cap → bigger cap at 8
         # threads. The last rung exists because DuckDB 1.0.0 has a
@@ -86,7 +99,7 @@ def _parent(sf_dir: str, only: set[str] | None) -> None:
                 # kernel reclaims asynchronously; launching the retry
                 # into that pressure reproduces the crash. Wait until
                 # the memory is actually back (or 90 s).
-                need_gb = 1.2 * float(re.sub(r"[^0-9.]", "", mem) or 24)
+                need_gb = 1.2 * float(re.sub(r"[^0-9.]", "", mem))
                 for _ in range(18):
                     if _meminfo_available_gb() >= need_gb:
                         break
@@ -129,6 +142,11 @@ def _parent(sf_dir: str, only: set[str] | None) -> None:
                 print(out_line + note)
                 printed = True
                 break
+            if proc.returncode == 0 and "(error:" in (fallback_line or ""):
+                # a SQL error: more memory or fewer threads won't fix it
+                print(fallback_line)
+                printed = True
+                break
             # crashed or failed child — annotate and climb the ladder
             sys.stderr.write(
                 f"# {key}: child rc={proc.returncode} at {mem}"
@@ -159,39 +177,13 @@ def main() -> None:
         return
 
     def fresh_con():
-        con = duckdb.connect()
-        con.execute("SET timezone='UTC'")
-        # Bounded-memory discipline (r12, r11 verdict item 6): cap the
-        # allocator and give it a spill dir, mirroring the 32g-bounded
-        # Spark driver it is paired against. Uncapped, the
-        # q_hashed_features oracle at sf10 grows past RAM and the
-        # KERNEL kills the process (unrecoverable from Python — the r11
-        # sweep had to run as two processes); capped, DuckDB spills and
-        # completes in 26.6 s, a real timed point (Spark: ~4.9 s).
-        mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", "24GB")
-        spill = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".scratch", "duck_spill",
-        )
-        os.makedirs(spill, exist_ok=True)
-        con.execute(f"SET memory_limit='{mem}'")
-        con.execute(f"SET temp_directory='{spill}'")
+        con = duck_connection(sf_dir)
         # Set only by the parent's crash-fallback rung (see _parent):
         # works around DuckDB 1.0.0's thread-count-dependent SIGSEGV
         # in large external hash aggregations.
         threads = os.environ.get("SPARK_GRAFT_DUCK_THREADS")
         if threads:
             con.execute(f"SET threads={int(threads)}")
-        for t in [
-            "region", "nation", "customer", "supplier", "part", "orders",
-            "lineitem", "events", "documents", "embeddings",
-        ]:
-            path = f"{sf_dir}/{t}.parquet"
-            if os.path.isdir(path):  # multi-file (tools/make_sf10x.py)
-                path = f"{path}/*.parquet"
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
         return con
 
     def _timed(con, sql):
@@ -237,6 +229,7 @@ def main() -> None:
         return fresh_con()  # final attempt — let a real failure raise
 
     con = fresh_con()
+    base_mem, retry_mem = _caps()
     ops = registry.load_all()
     total = 0.0
     demo_total = 0.0
@@ -300,9 +293,6 @@ def main() -> None:
         except duckdb.Error as e:
             con = _rebuild(con)
             if isinstance(e, duckdb.OutOfMemoryException):
-                retry_mem = os.environ.get(
-                    "SPARK_GRAFT_DUCK_MEM_RETRY", "64GB"
-                )
                 try:
                     con.execute(f"SET memory_limit='{retry_mem}'")
                     rows, med = _timed(con, sql)
@@ -314,10 +304,7 @@ def main() -> None:
                     continue
                 finally:
                     try:
-                        mem0 = os.environ.get(
-                            "SPARK_GRAFT_DUCK_MEM", "24GB"
-                        )
-                        con.execute(f"SET memory_limit='{mem0}'")
+                        con.execute(f"SET memory_limit='{base_mem}'")
                     except duckdb.Error:
                         pass
             else:

@@ -24,7 +24,8 @@ which is fine at its sf0.01 gate; a FULL 448-op sweep at sf1 in one
 1g session dies of heap around op ~90 even with per-op cache clearing
 (ops that pass standalone at sf1 fail in sequence — broadcast blocks
 and shuffle buffers outlive clearCache). bench.py documents the same
-1g-starves-32-threads constant for its sf1 runs.
+1g-starves-the-executor-threads reason for its sf1 runs. The master
+is the host profile's (``session.host_profile()``).
 
 --max-rows N (scale-sweep mode): before comparing, count the Spark
 side; if it exceeds N, record rows-only instead of collecting both
@@ -80,6 +81,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from hive_metadata_collect_spark.session import host_profile
     from hive_metadata_collect_spark.testing import (
         compare_frames,
         compare_frames_driverlike,
@@ -88,7 +90,7 @@ def main() -> int:
 
     compare = compare_frames_driverlike if driverlike else compare_frames
 
-    builder = SparkSession.builder.master("local[32]").appName(
+    builder = SparkSession.builder.master(host_profile()["master"]).appName(
         "contract-sweep"
     )
     if driver_mem:

@@ -21,13 +21,14 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    spark = get_spark(app_name="hmcs-plans", shuffle_partitions=16)
+    spark = get_spark(app_name="hmcs-plans")
     ops = registry.load_all()
     out = [
         "# PLANS — physical plans of the benchmark headline queries",
         "",
         f"Generated by `tools/dump_plans.py` at sf=0.01 "
-        f"(spark {spark.version}, AQE on, shuffle=16). Things to check",
+        f"(spark {spark.version}, AQE on, "
+        f"shuffle={spark.conf.get('spark.sql.shuffle.partitions')}). Things to check",
         "per plan: `PushedFilters`/`ReadSchema` on every parquet scan,",
         "`BroadcastHashJoin` for dim joins, partial+final `HashAggregate`",
         "pairs around a single `Exchange`, `TakeOrderedAndProject` for",

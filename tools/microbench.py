@@ -29,8 +29,7 @@ def main() -> None:
     names = sys.argv[1].split(",")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/root/testdata/sf0.1"
     stages = "--stages" in sys.argv
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "16"))
-    spark = get_spark(app_name="hmcs-microbench", shuffle_partitions=shuffle)
+    spark = get_spark(app_name="hmcs-microbench")
     ops = registry.load_all()
     out = {}
     for name in names:
