@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hive_metadata_collect_spark.operators.joins import _BROADCAST_GATE_BYTES
 from hive_metadata_collect_spark.registry import register
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
@@ -1024,11 +1025,11 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange the cascade already creates (repartition(l_orderkey)
     # satisfies the join AND both aggregations — the orders exchange
     # is the only added cost, and it is narrow). Plan-time stats gate,
-    # same device as join_multiway_star.
+    # the same gate join_multiway_star uses.
     o_est = int(
         str(o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )
-    if o_est < 8 << 20:
+    if o_est < _BROADCAST_GATE_BYTES:
         lines = li.join(
             F.broadcast(o), li.l_orderkey == o.o_orderkey
         ).repartition("l_orderkey")

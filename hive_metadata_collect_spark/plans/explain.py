@@ -32,6 +32,32 @@ def scan_summary(df: DataFrame) -> str:
     )
 
 
+def shuffled_hash_joins(df: DataFrame) -> list[tuple[str, str, list[str]]]:
+    """(build side plan, probe side plan, probe side columns) of every
+    ShuffledHashJoin in the physical plan, outermost first. Before the
+    query runs, an adaptive plan shows its initial physical plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    joins, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "ShuffledHashJoin":
+            build_right = node.buildSide().toString() == "BuildRight"
+            build, probe = (
+                (node.right(), node.left()) if build_right
+                else (node.left(), node.right())
+            )
+            cols = [a.name() for a in _seq(probe.output())]
+            joins.append((build.toString(), probe.toString(), cols))
+        stack.extend(reversed(_seq(node.children())))
+    return joins
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
 def has_node(df: DataFrame, node: str) -> bool:
     return node in physical_plan(df)
 

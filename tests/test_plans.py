@@ -4,13 +4,17 @@ BE the scale-appropriate plans, not merely produce correct rows.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark import registry
+from hive_metadata_collect_spark.operators import composites, joins
 from hive_metadata_collect_spark.plans.explain import (
     assert_plan,
     physical_plan,
     scan_summary,
+    shuffled_hash_joins,
 )
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
@@ -147,6 +151,49 @@ def test_salted_join_is_shuffled_hash(spark, sf_dir):
     plan = physical_plan(OPS["join_skew_salted"].fn(spark, sf_dir))
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan
+
+
+#: plan-time size gates that send join_multiway_star and
+#: tpch_q21_waiting_suppliers to their shuffle_hash branch; the sf0.001
+#: fixtures sit under every gate, so the test lowers them to 0
+_SHJ_GATES = {
+    "join_multiway_star": (
+        (joins, "_BROADCAST_GATE_BYTES"),
+        (joins, "_DIM_BCAST_GATE_BYTES"),
+    ),
+    "join_skew_unsalted": (),
+    "tpch_q21_waiting_suppliers": ((composites, "_BROADCAST_GATE_BYTES"),),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SHJ_GATES))
+def test_shuffle_hash_hints_build_the_small_side(spark, sf_dir, monkeypatch, name):
+    """Every ``shuffle_hash`` hint must put the hash table on the small
+    side: no ShuffledHashJoin builds from lineitem, and the fact probes.
+    join_multiway_star builds customers into orders, then the joined
+    dim into lineitem; join_skew_unsalted probes with lineitem already
+    narrowed to (l_orderkey, rev_e4) before its exchange; q21 builds
+    the status-F orders. The forced branch returns the default
+    branch's rows."""
+    default_rows = sorted(OPS[name].fn(spark, sf_dir).collect())
+    for module, gate in _SHJ_GATES[name]:
+        monkeypatch.setattr(module, gate, 0)
+    df = OPS[name].fn(spark, sf_dir)
+    shj = shuffled_hash_joins(df)
+    assert len(shj) == (2 if name == "join_multiway_star" else 1), shj
+    for build, probe, _ in shj:
+        assert "lineitem.parquet" not in build, build
+        assert "orders.parquet" in build or "customer.parquet" in build, build
+    fact_build, fact_probe, fact_cols = shj[0]
+    assert "lineitem.parquet" in fact_probe, fact_probe
+    if name == "join_multiway_star":
+        assert "orders.parquet" in fact_build and "customer.parquet" in fact_build
+        dim_build, dim_probe, _ = shj[1]
+        assert "customer.parquet" in dim_build and "orders.parquet" not in dim_build
+        assert "orders.parquet" in dim_probe
+    if name == "join_skew_unsalted":
+        assert fact_cols == ["l_orderkey", "rev_e4"], fact_cols
+    assert sorted(df.collect()) == default_rows
 
 
 def test_lineage_iterations_broadcast(spark, sf_dir):
