@@ -2,57 +2,53 @@
 (default: the sf0.1 fixtures) on a session sized by
 ``session.host_profile()``.
 
-Prints ONE compact JSON line:
+Prints ONE compact JSON line, the last line of output:
   {"metric": "...", "value": N, "unit": "sec", "protocol": "prepared-v3-noop",
    "queries": {...}, "total_cold": N, "queries_cold": {...}, "sf": ...}
 
-`value`/`queries` time the PREPARED frame (plan built once, warm —
-the serving path; round-4 protocol). `total_cold`/`queries_cold`
-rebuild the DataFrame inside the timed region (rounds ≤3 protocol) so
-cross-round comparisons stay honest in both forms.
+`value`/`queries` time the PREPARED frame: the plan is built once and
+executed warm, the serving path. `total_cold`/`queries_cold` rebuild
+the DataFrame inside the timed region, so frame build and analysis are
+timed too.
 
-Query keys mirror BASELINE.md's measured-baseline table so the judge
-can line BENCH_r{N}.json up against it row by row. One SparkSession is
-reused for the whole suite (BASELINE.md "interpretation" note); each
-query is fully executed via a noop-sink WRITE (protocol v3), which
-materializes EVERY output column of every row.
+Query keys mirror BASELINE.md's measured-baseline table. One
+SparkSession is reused for the whole suite, and each query is fully
+executed via a noop-sink write (see ``_execute``), which materializes
+every output column of every row.
 
-PROTOCOL v3 (r10): rounds 4-9 timed `df.count()`. count() discards
-the output columns, so Catalyst prunes every expression and even
-row-preserving joins (unique-key outer joins with unused columns) out
-of the executed plan — for sim_semdedup the entire pair join vanished
-(2 joins in the count plan vs 7 in the real plan) and the committed
-sf10 number timed a skeleton (1.27 s) while the honest execution is
-minutes. `df.write.format("noop")` keeps the full output schema in
-the executed plan (the Spark-native benchmarking sink). Numbers for
-queries whose work survived count-pruning are comparable to the v2
-series within noise; queries with pruned work (q_semdedup above all)
-are NOT comparable to their v2 numbers — v2 understated them.
+Per-stage metrics come from the same timed runs: each run gets its own
+job group, and after a key's runs the best run's jobs and stages are
+read from Spark's in-process status store (perfbench/spark_status.py),
+outside the timed region. They go to BENCH_STAGES.json next to this
+script, one record per timed key, and are never printed: the driver's
+stdout capture keeps only a bounded tail, so the stdout line must stay
+small.
 
-The per-stage wall-timing evidence for the above-floor queries (the
-floor-vs-fixable breakdown) is written to BENCH_STAGES.json NEXT TO
-this script, NOT printed: round 3 proved the driver's stdout capture
-keeps only a bounded tail, and inlining the breakdown pushed the JSON
-line past that buffer, so BENCH_r03.json recorded "parsed": null.
-The stdout line must stay small. Set SPARK_GRAFT_STAGES=0 to skip the
-second (event-logged) pass entirely.
+Environment: SPARK_GRAFT_SF_DIR (fixture dir), SPARK_GRAFT_ONLY=q_a,q_b
+(time only these keys) and SPARK_GRAFT_NOTE (prepended to the
+provenance stamp).
 """
 
 from __future__ import annotations
 
-import glob
+import datetime
 import json
 import os
-import shutil
+import subprocess
 import sys
-import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "perfbench")]
+
+from hive_metadata_collect_spark import registry  # noqa: E402
+from hive_metadata_collect_spark.session import get_spark, host_profile  # noqa: E402
+from measure import stage_cover  # noqa: E402
+from spark_status import StatusReader  # noqa: E402
 
 
 def _execute(df):
-    """Materialize every output column of every row (protocol v3).
+    """Materialize every output column of every row.
 
     NOT count(): count() lets Catalyst prune unused output columns —
     and with them whole expression trees and row-preserving joins —
@@ -63,8 +59,6 @@ def _execute(df):
     """
     df.write.format("noop").mode("overwrite").save()
 
-from hive_metadata_collect_spark import registry
-from hive_metadata_collect_spark.session import configure, get_spark, host_profile
 
 # BENCH key → registry operator name (BASELINE.md table rows).
 HEADLINE = {
@@ -96,147 +90,187 @@ HEADLINE = {
     # natural form) — Spark's fold beats it 21x at sf0.1, which
     # would flatter the suite ratio dishonestly.
     "q_vocab": "text_vocab_coverage",
-    # Round-7 (r6 verdict item 3): the LLM-pipeline path with real
-    # compute on the bench — banding-join dedup, shingle
-    # decontamination, sequence packing, feature hashing.
-    # r11 (r10 verdict item 3/7): the timed LSH representative is now
-    # dedup_lsh_components — the r10 clustering form whose oracle CTE
-    # chain is hash-exact at every SF through sf10 — so every
-    # headline query is PAIRED. The old representative
-    # (dedup_near_minhash_lsh_pairs, the banding pair-emitter) was
-    # 23 % of suite wall with NO DuckDB twin by design (no seeded
-    # xxhash64 in DuckDB); it stays registered as an engine-only
-    # artifact and in the r7–r10 bench history. Cross-round note:
-    # q_minhash_lsh values before r11 time the OLD pair query — the
-    # series breaks here deliberately (BASELINE.md r11 section).
+    # The LLM-pipeline path with real compute: banding-join dedup,
+    # shingle decontamination, sequence packing, feature hashing.
+    # The timed LSH representative is dedup_lsh_components, the
+    # clustering form whose oracle CTE chain is hash-exact at every SF
+    # through sf10, so every headline query is paired. The banding
+    # pair-emitter (llm.dedup.minhash_lsh_candidates) has no DuckDB
+    # twin (no seeded xxhash64 in DuckDB), so it is not timed.
     "q_minhash_lsh": "dedup_lsh_components",
     "q_decontaminate": "pipeline_decontaminate",
     "q_pack": "pipeline_pack_sequences",
     "q_hashed_features": "text_hashed_features",
-    # Round-8: the completed TPC-H suite's new deep shape (Q2: derived
-    # supply relation + window-min decorrelation), the Gopher curation
-    # battery (map-only integer rules — the filter pass a 100 TB crawl
-    # pays per document), and the autocorrelation profile (window +
-    # explode-pivot + exact integer moments). All three pair against
-    # oracles that are DuckDB's natural formulation.
+    # TPC-H Q2's deep shape (derived supply relation + window-min
+    # decorrelation), the Gopher curation battery (map-only integer
+    # rules — the filter pass a 100 TB crawl pays per document), and
+    # the autocorrelation profile (window + explode-pivot + exact
+    # integer moments). All three pair against oracles that are
+    # DuckDB's natural formulation.
     "q_tpch_q2": "tpch_q2_min_cost_supplier",
     "q_gopher": "text_gopher_quality_rules",
     "q_autocorr": "win_autocorr_profile",
-    # Round-8 continuation: the trained-and-applied Naive Bayes
+    # The iterative-ML path: the trained-and-applied Naive Bayes
     # classifier (broadcast model joins over two token passes) and
     # distributed two-iteration Lloyd's k-means (broadcast-centroid
-    # assignment, integer trajectory) — the iterative-ML path on the
-    # bench. Both oracles are DuckDB's natural CTE formulation of the
-    # same integer-exact algorithm.
+    # assignment, integer trajectory). Both oracles are DuckDB's
+    # natural CTE formulation of the same integer-exact algorithm.
     "q_nb_lang": "text_naive_bayes_lang",
-    # r10: the array-native assignment twin (map-only Arrow assignment,
+    # The array-native k-means assignment (map-only Arrow assignment,
     # no K×|corpus| grouped shuffle) measured 3.1× faster at sf1 and
-    # 3.8× at sf10 than the posexplode form on identical output — it
-    # is the headliner per the r9 verdict's measure-and-keep-the-winner
-    # directive; the posexplode twin stays registered as the
-    # pure-Catalyst form (pair recorded in BASELINE.md §r10).
+    # 3.8× at sf10 than the posexplode form on identical output, so it
+    # is the one timed; the posexplode twin stays registered as the
+    # pure-Catalyst form (pair recorded in BASELINE.md).
     "q_kmeans": "sim_kmeans_lloyd_arrays",
-    # Round-8 continuation (second session): SemDeDup (cluster-scoped
-    # integer-cosine pair pruning — the semantic-dedup scale shape)
-    # and cross-document duplicate 8-gram coverage (the exact-substr
-    # dedup signal: gram inverted index + join-back). Both oracles are
-    # the natural DuckDB formulation of the same exact-integer logic.
+    # SemDeDup (cluster-scoped integer-cosine pair pruning — the
+    # semantic-dedup scale shape) and cross-document duplicate 8-gram
+    # coverage (the exact-substr dedup signal: gram inverted index +
+    # join-back). Both oracles are the natural DuckDB formulation of
+    # the same exact-integer logic.
     "q_semdedup": "sim_semdedup",
     "q_dup_ngram": "text_dup_ngram_coverage",
-    # r12: the parse-once ingest twin of q_json (r11 verdict item 1's
-    # production answer) — warm runs time the typed-column scan; the
-    # first (untimed) warm call pays the one-off materialization.
+    # The parse-once ingest twin of q_json: warm runs time the
+    # typed-column scan; the first (untimed) warm call pays the
+    # one-off materialization.
     "q_json_ingested": "fn_json_extract_ingested",
 }
 
-# By-design-pessimal demos (r11 verdict item 7): the salted-join twin
-# exists to measure the cost of salting itself (docstring) — ~10 s of
-# sf10 suite wall for a lesson, not an engine number. The driver
-# contract forbids removing or renaming entries in "queries", so demo
-# keys STAY in "queries"/"queries_cold" and in value/total_cold
-# exactly as in r1–r11; the engine-only reading the r11 verdict asked
-# for is emitted as the ADDITIONAL fields "value_ex_demos"/
-# "total_cold_ex_demos" plus "demo_keys" naming the exclusions
-# (documented in OPTIMIZATION_r12.md and BASELINE.md).
+# By-design-pessimal demos: the salted-join twin exists to measure the
+# cost of salting itself (docstring) — ~10 s of sf10 suite wall for a
+# lesson, not an engine number. The driver contract forbids removing or
+# renaming entries in "queries", so demo keys STAY in
+# "queries"/"queries_cold" and in value/total_cold; the engine-only
+# reading is emitted as the ADDITIONAL fields "value_ex_demos"/
+# "total_cold_ex_demos" plus "demo_keys" naming the exclusions.
 DEMO = {
     "q_salted_join": "join_skew_salted",
 }
 
-#: Queries that get a per-stage breakdown in the output (the ones
-#: sitting above the local floor — evidence for floor-vs-fixable).
-BREAKDOWN = [
-    "q_join_agg",
-    "q_unsalted_join",
-    "q_lineage",
-    "q_sessions",
-    "q_funnel",
-    "q_bigrams",
-    "q_minhash_lsh",
-    "q_decontaminate",
-]
+#: Local properties that ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 
-def _parse_stage_windows(event_dir: str) -> list[dict]:
-    """Completed stages from the (single-app) event log: submission /
-    completion epoch ms, task count, first line of the stage name."""
-    stages = []
-    paths = [
-        os.path.join(root, name)
-        for root, _dirs, files in os.walk(event_dir)
-        for name in files
-        if "appstatus" not in name
-    ]
-    for path in paths:
-        with open(path, encoding="utf-8") as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if ev.get("Event") != "SparkListenerStageCompleted":
-                    continue
-                si = ev.get("Stage Info", {})
-                sub, comp = si.get("Submission Time"), si.get("Completion Time")
-                if sub is None or comp is None:
-                    continue
-                stages.append(
-                    {
-                        "stage": si.get("Stage ID"),
-                        "name": str(si.get("Stage Name", ""))[:60],
-                        "tasks": si.get("Number of Tasks"),
-                        "sub_ms": sub,
-                        "wall_ms": comp - sub,
-                    }
-                )
-    return stages
+def _run_record(reader: StatusReader, group: str, start_ms: float, wall: float) -> dict:
+    """Jobs and stages of one timed run (job group ``group``), and the
+    split of its wall into time some stage covers and time none does."""
+    jobs = reader.job_ids(group)
+    stages = sorted(
+        reader.stages(s for j in jobs for s in reader.job_stage_ids(j)).values(),
+        key=lambda s: (s["start_ms"], s["stage"]),
+    )
+    covered, unattributed = stage_cover(
+        [(s["start_ms"], s["end_ms"]) for s in stages], start_ms, start_ms + wall * 1000
+    )
+    return {
+        "wall_s": round(wall, 4),
+        "jobs": len(jobs),
+        "covered_s": round(covered / 1000, 4),
+        "unattributed_s": round(unattributed / 1000, 4),
+        "stages": [
+            {
+                "stage": s["stage"],
+                "attempt": s["attempt"],
+                "tasks": s["tasks"],
+                "wall_ms": int(s["end_ms"] - s["start_ms"]),
+                "run_ms": s["run_ms"],
+                "cpu_ms": round(s["cpu_ns"] / 1e6, 1),
+                "gc_ms": s["gc_ms"],
+                "shuffle_write_bytes": s["shuffle_write_bytes"],
+                "spill_bytes": s["spill_bytes"],
+            }
+            for s in stages
+        ],
+    }
+
+
+def _time_prepared(spark, mapping: dict[str, str], sf_dir: str) -> tuple[dict, dict]:
+    """Best-of-3 wall of each key's prepared frame, and the stage
+    record of that best run. Run ``i`` of a key runs in job group
+    ``bench|<key>|<i>``, set before the clock starts; the status store
+    is read after the key's runs. The caller's job group is restored."""
+    sc = spark.sparkContext
+    reader = StatusReader(spark)
+    caller = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
+    timings: dict[str, float] = {}
+    records: dict[str, dict] = {}
+    try:
+        for key, op_name in mapping.items():
+            best = None  # (wall, run, epoch ms at start)
+            for run in range(3):
+                sc.setJobGroup(f"bench|{key}|{run}", key)
+                start_ms = time.time() * 1000
+                t0 = time.perf_counter()
+                _execute(registry.prepared_frame(spark, op_name, sf_dir))
+                dt = time.perf_counter() - t0
+                if best is None or dt < best[0]:
+                    best = (dt, run, start_ms)
+            timings[key] = round(best[0], 4)
+            # Job and stage ends reach the status store through the
+            # asynchronous listener bus; drain it before reading.
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            records[key] = _run_record(reader, f"bench|{key}|{best[1]}", best[2], best[0])
+    finally:
+        for prop, value in caller.items():
+            sc.setLocalProperty(prop, value)
+    return timings, records
+
+
+def _time_cold(spark, mapping: dict[str, str], sf_dir: str) -> dict[str, float]:
+    """Best-of-2 wall of each key with the frame rebuilt and
+    re-analyzed inside the timed region (the relation cache stays
+    warm)."""
+    out: dict[str, float] = {}
+    for key, op_name in mapping.items():
+        best = None
+        for _ in range(2):
+            t0 = time.perf_counter()
+            _execute(registry.build_frame(spark, op_name, sf_dir))
+            dt = time.perf_counter() - t0
+            best = dt if best is None or dt < best else best
+        out[key] = round(best, 4)
+    return out
+
+
+def _provenance(profile: dict) -> str:
+    """Code state and session shape, so a stale artifact is detectable
+    without cross-referencing other files; SPARK_GRAFT_NOTE prepends a
+    condition note ("idle machine", ...)."""
+    try:
+        head = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, timeout=10, cwd=HERE,
+        ).stdout.strip() or "unknown"
+    except Exception:
+        head = "unknown"
+    stamp = (
+        f"protocol v3 noop; code {head}; {datetime.date.today()}; "
+        f"{profile['master']}, {profile['driver_mem']} driver, "
+        f"shuffle={profile['shuffle_partitions']}"
+    )
+    note = os.environ.get("SPARK_GRAFT_NOTE")
+    return f"{note}; {stamp}" if note else stamp
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    # SPARK_GRAFT_ONLY=q_a,q_b restricts the suite (the sf10
+    # SPARK_GRAFT_ONLY=q_a,q_b restricts the suite (e.g. the sf10
     # scaling-point runs time only the compute-carrying subset).
     only = os.environ.get("SPARK_GRAFT_ONLY")
-    headline = (
-        {k: v for k, v in HEADLINE.items() if k in set(only.split(","))}
-        if only
-        else HEADLINE
-    )
-    demo = (
-        {k: v for k, v in DEMO.items() if k in set(only.split(","))}
-        if only
-        else DEMO
-    )
+    keep = set(only.split(",")) if only else None
+    headline = {k: v for k, v in HEADLINE.items() if keep is None or k in keep}
+    demo = {k: v for k, v in DEMO.items() if keep is None or k in keep}
     # Driver heap: Spark's local-mode default is 1g, which starves the
     # executor threads (the sf1 LSH candidate set OOMs a 1g heap while
     # DuckDB uses all machine memory by default), so the session takes
     # the host profile: master, heap and shuffle partitions.
     profile = host_profile()
-
-    # ---- pass 1: timed, UNinstrumented (event logging costs ~7% of
-    # suite wall, so the reported numbers come from a clean session) --
     spark = get_spark(app_name="hmcs-bench")
-    ops = registry.load_all()
+    registry.load_all()
 
     # Warm pass: run every headline query once untimed so the timed
     # runs measure steady-state execution, not JVM JIT / codegen /
@@ -246,11 +280,9 @@ def main() -> None:
     # the PREPARED form: plan built once, executed per run — the
     # serving path of a query engine (DuckDB's per-run SQL parse is
     # sub-ms; Spark's Python DAG rebuild + re-analysis is 50–270 ms of
-    # driver overhead that no served query pays twice). Protocol change
-    # vs rounds ≤3, which rebuilt the frame inside the timed region.
+    # driver overhead that no served query pays twice).
     for op_name in list(headline.values()) + list(demo.values()):
-        if registry.resolvable(op_name):
-            _execute(registry.prepared_frame(spark, op_name, sf_dir))
+        _execute(registry.prepared_frame(spark, op_name, sf_dir))
 
     # Settle between warm and timed passes: the warm pass materializes
     # every result set (the LSH pair query alone is tens of millions
@@ -261,44 +293,8 @@ def main() -> None:
     spark._jvm.System.gc()
     time.sleep(1.0)
 
-    def _time_prepared(mapping: dict[str, str]) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for key, op_name in mapping.items():
-            if not registry.resolvable(op_name):
-                continue
-            best = None
-            for _ in range(3):
-                t0 = time.perf_counter()
-                # force full execution of every partition AND column
-                _execute(registry.prepared_frame(spark, op_name, sf_dir))
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            out[key] = round(best, 4)
-        return out
-
-    timings = _time_prepared({**headline, **demo})
-
-    # Cold timings (rounds ≤3 protocol): the Python DAG is rebuilt and
-    # re-analyzed INSIDE the timed region (relation cache stays warm,
-    # as it was in round 3). Reported beside the prepared numbers so
-    # BENCH_r{N} stays comparable across rounds in BOTH protocols
-    # (round-4 verdict item 4 / advice: the prepared-only headline
-    # conflated engine speed with the protocol change).
-    def _time_cold(mapping: dict[str, str]) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for key, op_name in mapping.items():
-            if not registry.resolvable(op_name):
-                continue
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                _execute(registry.build_frame(spark, op_name, sf_dir))
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            out[key] = round(best, 4)
-        return out
-
-    timings_cold = _time_cold({**headline, **demo})
+    timings, stages = _time_prepared(spark, {**headline, **demo}, sf_dir)
+    timings_cold = _time_cold(spark, {**headline, **demo}, sf_dir)
     spark.stop()
 
     total = round(sum(timings.values()), 4)
@@ -308,13 +304,6 @@ def main() -> None:
     total_cold_ex = round(
         total_cold - sum(timings_cold[k] for k in demo_keys), 4
     )
-    # The headline JSON is printed at the END of main() (after the
-    # pass-2 sidecar work) so it is the LAST line of output: the
-    # grading driver merges stdout+stderr and parses the tail — any
-    # output after the JSON line breaks it (BENCH_r07 "parsed": null
-    # came from pass-2 console progress bars trailing the line).
-    # Pass 2 is wrapped in try/except for the same reason: its
-    # failure must neither prevent the print nor trail a traceback.
     payload = {
         "metric": "headline_suite_total_wall",
         "value": total,
@@ -329,125 +318,30 @@ def main() -> None:
         "demo_keys": demo_keys,
         "value_ex_demos": total_ex,
         "total_cold_ex_demos": total_cold_ex,
-        # Core-count legibility (r12 verdict item 2): the driver's
-        # scaling probe compares runs at different $SPARK_GRAFT_CPUS;
-        # carrying the honored value as first-class fields makes a
-        # floor-bound ≈1 ratio at sf0.1 distinguishable from an
-        # ignored env var without reading the provenance string.
+        # The driver's scaling probe compares runs at different
+        # $SPARK_GRAFT_CPUS; the honored value as first-class fields
+        # tells a floor-bound ≈1 ratio at sf0.1 apart from an ignored
+        # env var without reading the provenance string.
         "cpus": profile["cores"],
         "master": profile["master"],
         "sf": sf,
+        "provenance": _provenance(profile),
     }
-    # Provenance carried INSIDE every artifact (r9/r10 verdicts: the
-    # committed BENCH json should say which code state and machine
-    # condition produced it, so a stale artifact is detectable
-    # without cross-referencing SURVEY — BENCH_r10.json lacked the
-    # key and drifted 33 % from the promoted pairing). A default
-    # stamp (git HEAD, date, session shape) is always emitted;
-    # SPARK_GRAFT_NOTE prepends the human condition note
-    # ("idle machine", ...).
-    import datetime
-    import subprocess
-
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        ).stdout.strip() or "unknown"
-    except Exception:
-        head = "unknown"
-    stamp = (
-        f"protocol v3 noop; code {head}; {datetime.date.today()}; "
-        f"{profile['master']}, {profile['driver_mem']} driver, "
-        f"shuffle={profile['shuffle_partitions']}"
-    )
-    note = os.environ.get("SPARK_GRAFT_NOTE")
-    payload["provenance"] = f"{note}; {stamp}" if note else stamp
-    headline_json = json.dumps(payload)
-    try:
-        _stage_sidecar(headline, ops, sf_dir, sf, total)
-    except Exception as exc:  # pragma: no cover - diagnostic path
-        sys.stderr.write(f"bench: stage sidecar pass failed: {exc}\n")
-        sys.stderr.flush()
-    print(headline_json)
-    sys.stdout.flush()
-
-
-def _stage_sidecar(headline, ops, sf_dir, sf, total):
-    """Pass 2: event-logged session over BREAKDOWN queries; writes the
-    per-stage wall breakdown to BENCH_STAGES.json (never stdout)."""
-    from pyspark.sql import SparkSession
-
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_STAGES.json"
-    )
-    # A stages-disabled run must leave the previous (still valid,
-    # headline-stamped) sidecar intact rather than destroy it and
-    # write nothing (ADVICE r5) — so the opt-out check comes BEFORE
-    # the stale-sidecar removal.
-    if os.environ.get("SPARK_GRAFT_STAGES", "1") == "0":
-        return
-
-    # Never leave a stale sidecar beside a fresh headline (advice r4):
-    # remove it up front; pass 2 rewrites it stamped with this run's
-    # headline total so the two artifacts can be paired.
-    if os.path.exists(sidecar):
-        os.remove(sidecar)
-
-    # ---- pass 2: event-logged session, breakdown queries only — the
-    # per-stage evidence (floor vs fixable), not the headline time.
-    # Written to BENCH_STAGES.json (sidecar), never printed: the
-    # driver's stdout tail buffer is bounded (see module docstring). --
-    event_dir = tempfile.mkdtemp(prefix="hmcs-bench-events-")
-    spark = (
-        configure(SparkSession.builder.appName("hmcs-bench-stages"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
-    windows: dict[str, tuple[float, float]] = {}  # best run's epoch-ms span
-    for key in BREAKDOWN:
-        if key not in headline:
-            continue
-        op_name = headline.get(key)
-        if not registry.resolvable(op_name):
-            continue
-        df = registry.prepared_frame(spark, op_name, sf_dir)
-        _execute(df)  # warm
-        best = None
-        for _ in range(2):
-            e0 = time.time() * 1000
-            t0 = time.perf_counter()
-            _execute(df)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-                windows[key] = (e0, time.time() * 1000)
-    spark.stop()  # flush + finalize the event log before parsing
-
-    stages = _parse_stage_windows(event_dir)
-    breakdown: dict[str, list] = {}
-    for key, (lo, hi) in windows.items():
-        breakdown[key] = [
-            {k: s[k] for k in ("stage", "name", "tasks", "wall_ms")}
-            for s in sorted(stages, key=lambda s: s["sub_ms"])
-            if lo <= s["sub_ms"] <= hi
-        ]
-    shutil.rmtree(event_dir, ignore_errors=True)
-
-    with open(sidecar, "w", encoding="utf-8") as f:
+    with open(os.path.join(HERE, "BENCH_STAGES.json"), "w", encoding="utf-8") as f:
         json.dump(
             {
                 "sf": sf,
                 "headline_total": total,
                 "protocol": "prepared-v3-noop",
-                "stage_breakdown": breakdown,
+                "queries": stages,
             },
             f,
             indent=1,
         )
+    # Printed last: the grading driver merges stdout+stderr and parses
+    # the tail, so any output after this line breaks it.
+    print(json.dumps(payload))
+    sys.stdout.flush()
 
 
 if __name__ == "__main__":

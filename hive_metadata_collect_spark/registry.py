@@ -77,26 +77,17 @@ def load_all() -> dict[str, Op]:
 
 
 # The driver's CORRECTNESS check samples the FIRST 50 entries of
-# ``queries()`` (dict insertion order). Rounds 1-7 confirmed 143
-# distinct operators driver-side; the round-6 verdict ("Next round"
-# item 1) asks each round to rotate the front of the ordering to 50
-# NEVER-sampled operators so driver-side confirmation sweeps the whole
-# inventory (463 declared = 457 oracle-gated + 6 rows-only as of
-# round 9) over successive rounds. Rounds 1-8 confirmed 193 distinct
-# operators driver-side; 270 remained never-sampled entering round 9.
-#
-# ROUND 10: the r9 verdict (item 3) directs the rotation at the
-# never-sampled tail (227 entering round 10), "weighted toward cat_*
-# (66 never sampled of 96) and the mm_* decode family (driver has
-# never hashed a mapInPandas decode op)". The 50 below are ALL
-# never-driver-sampled: every remaining mm_* (11 — the binary
-# decode/mapInPandas family), every remaining dedup_* (7, incl. the
-# minhash-LSH bound contract), every remaining stream_* (6), and 26
-# cat_* spanning each catalog subfamily (quality/anomaly gates, the
-# r9-rewritten lineage_2hop and attribution_linear, both new Iceberg
-# manifest ops, partition/layout planning, usage analytics). Every
-# name carries a full DuckDB oracle. The superseded round-9 list is
-# in git history; remaining operators follow in registration order.
+# ``queries()`` (dict insertion order). The front of the ordering is
+# rotated to operators the driver has not hashed before, so driver-side
+# confirmation sweeps the whole inventory over successive runs. The 50
+# below were all never driver-sampled when chosen: every mm_* (the
+# binary decode/mapInPandas family), every remaining dedup_* (incl. the
+# minhash-LSH bound contract), every remaining stream_*, and 26 cat_*
+# spanning each catalog subfamily (quality/anomaly gates, lineage_2hop
+# and attribution_linear, both Iceberg manifest ops, partition/layout
+# planning, usage analytics). Every name carries a full DuckDB oracle.
+# Earlier lists are in git history; remaining operators follow in
+# registration order.
 #
 _SAMPLE_ORDER = [
     # mm_* — the mapInPandas binary-decode family, never hashed
@@ -127,10 +118,9 @@ _SAMPLE_ORDER = [
     "stream_threshold_alerts",
     "stream_state_size_estimate",
     "stream_sink_python_datasource",
-    # cat_* — 26 spanning every catalog subfamily (66 of 96 never
-    # sampled entering the round; these cover quality gates, the r9
-    # lineage/attribution rewrites, both new Iceberg ops,
-    # partition/layout planning, and usage analytics)
+    # cat_* — 26 spanning every catalog subfamily: quality gates,
+    # lineage/attribution, both Iceberg manifest ops, partition/layout
+    # planning, and usage analytics
     "cat_quality_observe",
     "cat_anomaly_zscore",
     "cat_key_uniqueness",
@@ -187,36 +177,10 @@ def oracle_sql() -> dict[str, str]:
 # session so stopped sessions don't pin frames.
 _FRAME_CACHE: "WeakKeyDictionary" = WeakKeyDictionary()
 
-# Production-path helper frames benchable BY NAME but deliberately not
-# registry entries: since the r9 bound contracts, the registered
-# approximate ops (dedup_near_minhash_lsh, sim_pairs_lsh, …) emit
-# 1-row driver-hashable recall reports that ALSO execute their exact
-# twins — the right correctness gate, the wrong thing to time. The
-# bench keys that historically measured the production candidate
-# paths resolve here so BENCH_r{N} stays comparable across rounds.
-_BENCH_HELPERS = {
-    "dedup_near_minhash_lsh_pairs": (
-        "hive_metadata_collect_spark.llm.dedup",
-        "minhash_lsh_candidates",
-    ),
-}
-
-
-def resolvable(name: str) -> bool:
-    """True if prepared_frame can build this name (registry operator
-    or bench helper)."""
-    return name in load_all() or name in _BENCH_HELPERS
-
-
 def build_frame(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Build the operator's DataFrame fresh (no cache) — the
-    cold-protocol path. Resolves registry names first, then bench
-    helper names."""
-    ops = load_all()
-    if name in ops:
-        return ops[name].fn(spark, sf_dir)
-    mod, attr = _BENCH_HELPERS[name]
-    return getattr(importlib.import_module(mod), attr)(spark, sf_dir)
+    cold-protocol path."""
+    return load_all()[name].fn(spark, sf_dir)
 
 
 def prepared_frame(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:

@@ -241,20 +241,15 @@ def main() -> None:
         is_demo = key in DEMO
         if only is not None and key not in only:
             continue
-        # Bench-helper names (registry._BENCH_HELPERS, e.g. the
-        # q_minhash_lsh production path) have no oracle BY DESIGN —
-        # the registered contract op's oracle times the exact twin,
-        # which is a different (quadratic) computation and would be
-        # the dishonest pairing BASELINE.md's q_token_bucket
-        # precedent bans.
-        op = ops.get(op_name)
-        sql = op.oracle if op is not None else None
+        # Every bench key names a registry operator; one registered
+        # without an oracle (rows-only) has nothing to pair against.
+        sql = ops[op_name].oracle
         if sql is None:
             print(f"{key:<22} (no oracle)")
             continue
         note0 = ""
         if key == "q_json_ingested":
-            # Same-work pairing (r12 verdict item 7): Spark's side of
+            # Same-work pairing: Spark's side of
             # this op is parse-once-at-ingest — the JSON parse happens
             # in the UNTIMED warm pass and the timed runs scan the
             # typed column. Pairing that against an oracle that
