@@ -20,6 +20,7 @@ the business key once.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import build_dir
 from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
 
 
@@ -147,20 +149,11 @@ def cat_partition_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     range predicate prunes at the listing level (PartitionFilters), so
     the scan never opens out-of-range directories; the oracle
     re-derives the same inventory from the raw stream."""
-    import os as _os
-
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    repo_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    target = _os.path.join(
-        repo_root,
-        ".scratch",
-        f"part_listing_{_os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(target)
+    target = os.path.join(build_dir(spark), "part_listing")
+    ev.write.partitionBy("event_date").parquet(target)
     back = spark.read.parquet(target)
     return (
         back.filter(F.col("event_date").between("2024-01-05", "2024-01-25"))
@@ -1079,7 +1072,6 @@ def cat_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts against DuckDB's parquet_metadata() on the same files
     (two independent footer parsers agreeing)."""
     import glob as _glob
-    import os
     from collections.abc import Iterator
 
     import pandas as pd

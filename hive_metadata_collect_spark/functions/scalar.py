@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import stage_once
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
@@ -304,82 +305,44 @@ def fn_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_json_extract_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse-once ingest twin of `fn_json_extract` (r11 verdict item 1's
-    production answer): JSON params are parsed ONE time at ingest —
-    the extracted `$.k` lands as a typed BIGINT column in the
-    materialized table — and every subsequent query scans the typed
-    column without touching the JSON strings at all. At 100 TB this is
-    the only sane design: N analytical queries pay the string-parse
-    cost once, not N times, and the hot scan shrinks from a ~9-byte
-    string per row to a dictionary-encoded int.
+    """Parse-once ingest twin of `fn_json_extract`: JSON params are
+    parsed ONE time at ingest — the extracted `$.k` lands as a typed
+    BIGINT column in the materialized table — and every subsequent
+    query scans the typed column without touching the JSON strings at
+    all. At 100 TB this is the only sane design: N analytical queries
+    pay the string-parse cost once, not N times, and the hot scan
+    shrinks from a ~9-byte string per row to a dictionary-encoded int.
 
-    The materialization is keyed by (SparkSession applicationId, scale
-    factor): every session — and therefore every bench or oracle
-    invocation — re-parses the JSON from the parquet inputs before its
-    first query, and the timed warm runs then scan the typed column.
-    Nothing persists across invocations (a cross-run cache of work
-    derived from the test data would be result caching, which the
-    measurement rules forbid); stale tables from earlier sessions are
-    swept on build. The dir is written to a tmp path and os.rename'd
-    atomically so a concurrent reader in the same session can never
-    observe a half-written table.
+    The table is staged once per session and scale factor in the
+    session's scratch dir (``session.stage_once``): every session —
+    and therefore every bench or oracle invocation — re-parses the
+    JSON from the parquet inputs before its first query, and the timed
+    warm runs then scan the typed column. Nothing persists across
+    sessions (a cross-run cache of work derived from the test data
+    would be result caching, which the measurement rules forbid):
+    ``spark.stop()`` removes the table with the scratch dir.
     Measured sf10 (idle session, v3 noop): typed-column query 0.21 s vs
     0.41 s for the in-query fast-path parse and 1.43 s for full
     from_json — the scan floor with the props column not read.
     """
-    import glob
     import os
-    import shutil
-    import uuid
 
-    from hive_metadata_collect_spark.operators.scans import _SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app_id = spark.sparkContext.applicationId
-    target = os.path.join(_SCRATCH, f"params_ingested_{app_id}_{sf_tag}")
-    if os.path.isdir(target):
-        # Heartbeat: reading parquet does not update dir mtime, and a
-        # session can run for hours, so without this a concurrent
-        # session's >1h-idle sweep below could remove a LIVE table
-        # between its builds and its later reuse (r12 ADVICE item 2).
-        try:
-            os.utime(target, None)
-        except OSError:
-            pass
-    else:
-        # Sweep tables left by finished sessions (bounded disk). Only
-        # dirs idle for >1h; live sessions touch their dir on every
-        # reuse (above), so an active table is never swept.
-        import time as _time
-
-        for stale in glob.glob(
-            os.path.join(_SCRATCH, "params_ingested_*")
-        ):
-            try:
-                idle = _time.time() - os.path.getmtime(stale)
-            except OSError:
-                continue
-            if f"params_ingested_{app_id}_" not in stale and idle > 3600:
-                shutil.rmtree(stale, ignore_errors=True)
+    def ingest(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         flat_k = F.expr(
             r"""try_cast(nullif(regexp_extract(props,"""
             r""" '^\\{\\s*"k"\\s*:\\s*(-?\\d+)\\s*\\}$', 1), '') AS BIGINT)"""
         )
-        parsed = ev.select(
+        ev.select(
             "event_type",
             F.coalesce(
                 flat_k,
                 F.from_json(F.col("props"), "k bigint").getField("k"),
             ).alias("k_val"),
-        )
-        tmp = f"{target}.tmp.{uuid.uuid4().hex[:8]}"
-        parsed.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            # Another process renamed first — use theirs.
-            shutil.rmtree(tmp, ignore_errors=True)
+        ).write.parquet(path)
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    target = stage_once(spark, f"params_ingested_{sf_tag}", ingest)
     return (
         spark.read.parquet(target)
         .groupBy("event_type")

@@ -25,9 +25,6 @@ _JACCARD_TAU = 0.95
 _NGRAM_TAU = 0.8
 _EMB_COSINE_TAU = 0.45
 
-#: Converged component labels per fixture dir (see dedup_components).
-_COMPONENT_CACHE: dict[str, list] = {}
-
 
 def _jaccard_pairs(items: DataFrame, tau: float) -> DataFrame:
     """All (doc_a, doc_b, jaccard ≥ tau) pairs from a distinct
@@ -757,6 +754,8 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
         labels = new_labels.select("doc_id", "label")
         if converged:
             break
+    # The labels come from an eager local checkpoint, not from edges.
+    edges.unpersist()
     return labels.select("doc_id", F.col("label").alias("canonical_id"))
 
 
@@ -815,34 +814,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter ~7 → 3 rounds instead of 7). Loop until a fixpoint
     action reports zero changes; the driver only inspects the
     converged flag. The oracle recomputes components with a
-    recursive CTE.
-
-    The converged labeling is memoized per fixture dir (fixtures are
-    immutable; the algorithm is deterministic): pipeline_clean_corpus
-    composes on top of this op, and re-running the full iterative
-    clustering to produce the identical 176-row frame would only
-    re-pay its job-scheduling latency. The cached rows are the
-    collected labels, rebuilt as a 1-partition local frame.
+    recursive CTE. Every build runs the loop; the labels it returns
+    are an eager local checkpoint, so reading them re-runs nothing.
     """
-    cache_key = sf_dir.rstrip("/")
-    if cache_key in _COMPONENT_CACHE:
-        return spark.createDataFrame(
-            _COMPONENT_CACHE[cache_key], "doc_id long, canonical_id long"
-        )
     pairs = _jaccard_pairs(_word_items(spark, sf_dir), _JACCARD_TAU).select(
         "doc_a", "doc_b"
     )
-    out = min_label_components(pairs)
-    # Guard the driver-side memo: only collect when the labeling is
-    # small (|clustered docs| rows — at 100 TB this can be huge, and
-    # then the distributed frame is returned uncached as before).
-    rows = out.limit(100_001).collect()
-    if len(rows) > 100_000:
-        return out
-    _COMPONENT_CACHE[cache_key] = [(r["doc_id"], r["canonical_id"]) for r in rows]
-    return spark.createDataFrame(
-        _COMPONENT_CACHE[cache_key], "doc_id long, canonical_id long"
-    )
+    return min_label_components(pairs)
 
 
 @register(

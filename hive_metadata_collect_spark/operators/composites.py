@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from hive_metadata_collect_spark.operators.joins import _BROADCAST_GATE_BYTES
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import scratch_dir
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
@@ -1094,7 +1095,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q21 ON A BUCKETED LINEITEM LAYOUT — the r8-verdict lever for
+    """Q21 ON A BUCKETED LINEITEM LAYOUT — the lever for
     the suite's stubbornest residual: the unbucketed form's one
     remaining fact-width exchange (hash(l_orderkey) feeding the
     per-(order,supplier) cascade) disappears when lineitem is stored
@@ -1112,43 +1113,23 @@ def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-build time per (sf, session) — the serving path never pays
     it, mirroring the production write-once amortization; the
     headline bench keeps timing the UNBUCKETED form so the BASELINE
-    pairing stays on identical storage for both engines."""
+    pairing stays on identical storage for both engines. The table
+    lives in the session's catalog and its files in the session's
+    scratch dir, so both die with the session. The catalog entry is
+    created only after the write succeeds, so a failed write is never
+    reused."""
     import os
 
-    scratch = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        ".scratch",
-    )
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    # Key the cached bucketed copy on a fingerprint of the SOURCE
-    # parquet (mtime+size over the path and its direct children), not
-    # just the sf-dir basename: if the source under sf_dir is ever
-    # regenerated, a basename-only key would silently serve the stale
-    # bucketed rows (r9 advisory). A changed source now hashes to a
-    # new table/path and triggers a fresh bucketed write.
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    stats = [os.stat(src)]
-    if os.path.isdir(src):
-        stats += [
-            os.stat(os.path.join(src, f)) for f in sorted(os.listdir(src))
-        ]
-    fp = abs(hash(tuple((s.st_mtime_ns, s.st_size) for s in stats))) % 10**8
-    name = f"bk_q21_lineitem_{sf_tag}_{fp:08d}"
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    have = name in [t.name for t in spark.catalog.listTables()]
-    if have and not os.path.isdir(os.path.join(scratch, name)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        have = False
-    if not have:
+    name = f"bk_q21_lineitem_{sf_tag}"
+    if not spark.catalog.tableExists(name):
         (
-            li.write.mode("overwrite")
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_suppkey", "l_shipdate")
+            .write.mode("overwrite")
             .bucketBy(8, "l_orderkey")
             .sortBy("l_orderkey")
-            .option("path", os.path.join(scratch, name))
+            .option("path", os.path.join(scratch_dir(spark), name))
             .format("parquet")
             .saveAsTable(name)
         )

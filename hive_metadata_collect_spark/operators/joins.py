@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.operators.numerics import cents
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import scoped_conf
+from hive_metadata_collect_spark.session import build_dir, scoped_conf
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 # Gate threshold for data-derived broadcast candidates: well under the
@@ -41,15 +41,10 @@ _BROADCAST_GATE_BYTES = 8 << 20
 _DIM_BCAST_GATE_BYTES = 256 << 20
 
 
-#: (sf_dir, region) → [(n_nationkey, n_name)] — see _region_nations.
-_REGION_NATIONS_MEMO: dict[tuple[str, str], list[tuple[int, str]]] = {}
-
-
 def _region_nations(
     spark: SparkSession, sf_dir: str, region_name: str
 ) -> list[tuple[int, str]]:
-    """(n_nationkey, n_name) pairs for one region, collected once per
-    (sf_dir, region).
+    """(n_nationkey, n_name) pairs for one region, read on the driver.
 
     nation and region are SCHEMA-bounded dims (25 and 5 rows at any
     TPC-H scale factor), so this driver-side collect is O(1) regardless
@@ -58,20 +53,16 @@ def _region_nations(
     + literal key→name map instead of two broadcast joins) removes two
     serial broadcast-build job waves from every star query: locally
     that is ~2 stage latencies, and on a real cluster it removes two
-    barrier round-trips before the fact scan can start."""
-    key = (sf_dir, region_name)
-    if key not in _REGION_NATIONS_MEMO:
-        n = load_table(spark, sf_dir, "nation")
-        r = load_table(spark, sf_dir, "region").filter(
-            F.col("r_name") == region_name
-        )
-        _REGION_NATIONS_MEMO[key] = [
-            (row["n_nationkey"], row["n_name"])
-            for row in n.join(r, n.n_regionkey == r.r_regionkey)
-            .select("n_nationkey", "n_name")
-            .collect()
-        ]
-    return _REGION_NATIONS_MEMO[key]
+    barrier round-trips before the fact scan can start. Each build
+    reads the dims again: no value is kept beyond the build."""
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == region_name)
+    return [
+        (row["n_nationkey"], row["n_name"])
+        for row in n.join(r, n.n_regionkey == r.r_regionkey)
+        .select("n_nationkey", "n_name")
+        .collect()
+    ]
 
 
 def _stats_gated_broadcast(df: DataFrame) -> DataFrame:
@@ -709,19 +700,17 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, reuse it on every read."""
     import os
 
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
+    scratch = build_dir(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderstatus")
-    # Table/path names carry the scale factor so runs at different
-    # sf_dirs never clobber each other's buckets or leave stale
-    # catalog entries behind.
+    # Table names carry the scale factor so builds at different
+    # sf_dirs never replace each other's catalog entries; each build
+    # writes its buckets into a fresh dir, so an earlier frame keeps
+    # its files.
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     for name, df, key in (
         (f"bk_lineitem_{sf_tag}", li, "l_orderkey"),

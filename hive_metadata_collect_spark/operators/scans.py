@@ -7,6 +7,10 @@ reads ~20% of the bytes. #3 is a metadata-ish rowcount sweep: each
 no wide shuffle. #4 demonstrates the parquet sink roundtrip; at scale
 the same ``write.parquet`` call takes ``partitionBy`` for a
 date-partitioned layout (partition pruning on re-read).
+
+Every sink writes into a fresh ``build_dir(spark)`` inside the
+session's scratch dir: a rebuild never deletes files that an earlier
+frame still lists, and ``spark.stop()`` removes them all.
 """
 
 from __future__ import annotations
@@ -18,11 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import scoped_conf
+from hive_metadata_collect_spark.session import build_dir, scoped_conf
 from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_SCRATCH = os.path.join(_REPO_ROOT, ".scratch")
 
 
 @register(
@@ -75,12 +76,11 @@ def scan_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a filtered result to parquet, read it back. Values must
     survive the roundtrip bit-exactly (timestamps as TIMESTAMP_MICROS)."""
-    target = os.path.join(_SCRATCH, "roundtrip_orders.parquet")
+    target = os.path.join(build_dir(spark), "roundtrip_orders.parquet")
     (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
-        .write.mode("overwrite")
-        .parquet(target)
+        .write.parquet(target)
     )
     return spark.read.parquet(target)
 
@@ -97,8 +97,8 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    target = os.path.join(_SCRATCH, "roundtrip_customer.csv")
-    src.write.mode("overwrite").option("header", "true").csv(target)
+    target = os.path.join(build_dir(spark), "roundtrip_customer.csv")
+    src.write.option("header", "true").csv(target)
     return spark.read.schema(src.schema).option("header", "true").csv(target)
 
 
@@ -111,8 +111,8 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a filtered result to JSON lines, read it back with the
     source's schema. Same losslessness rule as the CSV twin."""
     src = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") < 10)
-    target = os.path.join(_SCRATCH, "roundtrip_supplier.json")
-    src.write.mode("overwrite").json(target)
+    target = os.path.join(build_dir(spark), "roundtrip_supplier.json")
+    src.write.json(target)
     return spark.read.schema(src.schema).json(target)
 
 
@@ -124,8 +124,8 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write to ORC, read it back — third columnar sink format beside
     parquet; ORC preserves types natively (no schema needed on read)."""
-    target = os.path.join(_SCRATCH, "roundtrip_nation.orc")
-    load_table(spark, sf_dir, "nation").write.mode("overwrite").orc(target)
+    target = os.path.join(build_dir(spark), "roundtrip_nation.orc")
+    load_table(spark, sf_dir, "nation").write.orc(target)
     return spark.read.orc(target)
 
 
@@ -147,8 +147,8 @@ def sink_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    target = os.path.join(_SCRATCH, "events_by_date.parquet")
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(target)
+    target = os.path.join(build_dir(spark), "events_by_date.parquet")
+    ev.write.partitionBy("event_date").parquet(target)
     back = spark.read.parquet(target)
     return back.filter(
         F.col("event_date").between("2024-01-10", "2024-01-12")
@@ -198,16 +198,14 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     without rewriting history; merge-on-read costs one footer merge,
     not a data pass. (Dropping/retyping columns is NOT covered by
     mergeSchema — that needs a real table format.)"""
-    import os as _os
-
     o = load_table(spark, sf_dir, "orders")
-    base = _os.path.join(_SCRATCH, f"schema_evo_{_os.path.basename(sf_dir.rstrip('/'))}")
+    base = build_dir(spark)
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    v1.write.mode("overwrite").parquet(_os.path.join(base, "v=1"))
-    v2.write.mode("overwrite").parquet(_os.path.join(base, "v=2"))
+    v1.write.parquet(os.path.join(base, "v=1"))
+    v2.write.parquet(os.path.join(base, "v=2"))
     merged = spark.read.option("mergeSchema", "true").option(
         "recursiveFileLookup", "true"
     ).parquet(base)
@@ -240,8 +238,8 @@ def scan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    target = os.path.join(_SCRATCH, "events_by_date_dpp.parquet")
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(target)
+    target = os.path.join(build_dir(spark), "events_by_date_dpp.parquet")
+    ev.write.partitionBy("event_date").parquet(target)
     back = spark.read.parquet(target)
     dim = (
         spark.range(1, 32)
@@ -299,8 +297,8 @@ def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(
         F.to_json(F.struct("event_id", "event_type"))
     )
-    target = os.path.join(_SCRATCH, "corrupt_feed.jsonl")
-    ev.select(line.alias("value")).write.mode("overwrite").text(target)
+    target = os.path.join(build_dir(spark), "corrupt_feed.jsonl")
+    ev.select(line.alias("value")).write.text(target)
     feed = (
         spark.read.schema(
             "event_id long, event_type string, _corrupt string"
@@ -486,10 +484,10 @@ def scan_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_plans.py) checks clerk_note is absent from the
     scan's ReadSchema; this gate checks the values survive.
 
-    The roundtrip file is rebuilt per run (same _SCRATCH discipline
-    as the sink ops); the oracle recomputes from the flat source —
+    The roundtrip file is written per build (same build_dir rule as
+    the sink ops); the oracle recomputes from the flat source —
     the struct nesting must be value-transparent."""
-    target = os.path.join(_SCRATCH, "nested_orders.parquet")
+    target = os.path.join(build_dir(spark), "nested_orders.parquet")
     (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -501,8 +499,7 @@ def scan_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("o_totalprice"), 2).alias("price"),
             ).alias("meta"),
         )
-        .write.mode("overwrite")
-        .parquet(target)
+        .write.parquet(target)
     )
     return (
         spark.read.parquet(target)
@@ -600,12 +597,11 @@ def scan_file_metadata_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
     empty); the Spark side must reconstruct it purely from file
     metadata. repartition(1, status) before partitionBy keeps exactly
     one file per partition so the accounting is deterministic."""
-    target = os.path.join(_SCRATCH, "meta_accounting_orders")
+    target = os.path.join(build_dir(spark), "meta_accounting_orders")
     (
         load_table(spark, sf_dir, "orders")
         .repartition(1, F.col("o_orderstatus"))
-        .write.mode("overwrite")
-        .partitionBy("o_orderstatus")
+        .write.partitionBy("o_orderstatus")
         .parquet(target)
     )
     read = spark.read.parquet(target).select(
@@ -649,10 +645,9 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_nationkey") >= 20
     ).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    target = os.path.join(_SCRATCH, "roundtrip_supplier_xml")
+    target = os.path.join(build_dir(spark), "roundtrip_supplier_xml")
     (
-        src.write.mode("overwrite")
-        .format("xml")
+        src.write.format("xml")
         .option("rootTag", "suppliers")
         .option("rowTag", "supplier")
         .save(target)
@@ -710,10 +705,10 @@ def sink_dynamic_partition_overwrite(
     state."""
     ev = load_table(spark, sf_dir, "events")
     cents = F.floor(F.round("value", 2) * 100 + 0.5).cast("long")
-    target = os.path.join(_SCRATCH, "events_dpo.parquet")
+    target = os.path.join(build_dir(spark), "events_dpo.parquet")
     ev.select(
         "event_id", "event_type", cents.alias("value_cents")
-    ).write.mode("overwrite").partitionBy("event_type").parquet(target)
+    ).write.partitionBy("event_type").parquet(target)
     patch = (
         ev.filter(
             (F.col("event_type") == "click") & (F.col("event_id") % 2 == 0)

@@ -6,6 +6,15 @@ the affinity mask, a driver heap of a quarter of MemTotal (at least
 heap. SPARK_GRAFT_CPUS (``*`` = all), _DRIVER_MEM, _SHUFFLE and
 _DUCK_MEM override them.
 
+Scratch rule: an operator that writes files puts them under
+``scratch_dir(spark)``, one directory per SparkContext inside Spark's
+own driver dir (``SparkFiles.getRootDirectory()``, created under
+``spark.local.dir``). Spark deletes it on ``spark.stop()``, so no
+operator file outlives its session. A build writes into a fresh
+``build_dir(spark)``, so a rebuild never deletes files that an earlier
+frame still reads; data reused within a session is staged once by
+``stage_once``.
+
 Scale notes (the configs that matter at 100 TB / 1000 executors):
 - AQE on: runtime shuffle-partition coalescing, broadcast-join
   conversion from runtime stats, skew-join splitting.
@@ -16,12 +25,17 @@ Scale notes (the configs that matter at 100 TB / 1000 executors):
 - Arrow on: every pandas-UDF / toPandas crossing is columnar-batched.
 - Session timezone pinned to UTC: fixture timestamps are naive and the
   DuckDB oracle treats them as UTC (FIXTURES.md "Harness notes").
+- The scratch dir is driver-local, which only works while the executors
+  share the driver's filesystem (local mode). On a cluster it must
+  become a per-application directory on the shared filesystem, as a
+  repo-root scratch dir would have had to as well.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import tempfile
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -148,3 +162,33 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, val)
+
+
+def scratch_dir(spark: SparkSession) -> str:
+    """This SparkContext's scratch directory, removed with Spark's own
+    driver dir on ``spark.stop()``."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    path = os.path.join(root, "hmcs")
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def build_dir(spark: SparkSession) -> str:
+    """A fresh directory for the files of one frame build."""
+    return tempfile.mkdtemp(dir=scratch_dir(spark))
+
+
+def stage_once(spark: SparkSession, name: str, write: Callable[[str], None]) -> str:
+    """Path of ``name``, staged once per session: ``write`` fills a
+    fresh path that is then renamed into place, so a build that fails
+    part-way never leaves a half-written ``name`` for a later build."""
+    target = os.path.join(scratch_dir(spark), name)
+    if not os.path.isdir(target):
+        tmp = os.path.join(build_dir(spark), name)
+        write(tmp)
+        try:
+            os.rename(tmp, target)
+        except OSError:  # a concurrent build renamed first: use theirs
+            if not os.path.isdir(target):
+                raise
+    return target

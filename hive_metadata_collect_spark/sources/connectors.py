@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import build_dir, scratch_dir, stage_once
 
 # The public Hive metastore schema tables a collector reads
 # (Apache Hive metastore DDL — public knowledge; SURVEY.md §1.1).
@@ -105,7 +106,13 @@ def write_report(
     writer.save()
 
 
-_DERBY_DIRS: dict[str, str] = {}
+def _derby_url(spark: SparkSession, sf_dir: str) -> str:
+    """JDBC URL of the session's embedded Derby metastore for ``sf_dir``."""
+    import os
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    path = os.path.join(scratch_dir(spark), f"derby_{sf_tag}")
+    return f"jdbc:derby:{path};create=true"
 
 
 @register(
@@ -137,18 +144,11 @@ def src_jdbc_embedded_metastore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation rows as TBLS, regions as DBS), so the DuckDB oracle
     recomputes the expected result from the SAME parquet inputs
     without needing to read Derby — the hash gate covers the whole
-    write→read→join→agg loop. The Derby directory is per-process
-    temp (embedded Derby is single-process by design; a second
-    session seeds its own copy deterministically)."""
-    import os
-    import tempfile
-
-    key = sf_dir.rstrip("/")
-    if key not in _DERBY_DIRS:
-        _DERBY_DIRS[key] = os.path.join(
-            tempfile.mkdtemp(prefix="hmcs-derby-"), "ms"
-        )
-    url = f"jdbc:derby:{_DERBY_DIRS[key]};create=true"
+    write→read→join→agg loop. The Derby database lives in the
+    session's scratch dir (embedded Derby is single-process by design;
+    a second session seeds its own copy deterministically) and is
+    removed with it on ``spark.stop()``."""
+    url = _derby_url(spark, sf_dir)
     from hive_metadata_collect_spark.sources.fixtures import load_table
 
     nation = load_table(spark, sf_dir, "nation").select(
@@ -202,29 +202,6 @@ def src_jdbc_embedded_metastore(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KAFKA_QUERY_SEQ = [0]
 
 
-def _sweep_stale_feeds(scratch: str, app_id: str) -> None:
-    """Remove other sessions' staged feeds idle for over an hour.
-    Checkpoints are skipped by name: a live query writes below its
-    checkpoint dir, which leaves the dir's own mtime stale. New ones
-    are ``kafka_ckpt_*``; ``kafka_feed_ckpt_*`` ones come from older
-    builds that may still be running."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    for stale in glob.glob(os.path.join(scratch, "kafka_feed_*")):
-        name = os.path.basename(stale)
-        if name.startswith(("kafka_feed_ckpt_", f"kafka_feed_{app_id}_")):
-            continue
-        try:
-            idle = time.time() - os.path.getmtime(stale)
-        except OSError:
-            continue
-        if idle > 3600:
-            shutil.rmtree(stale, ignore_errors=True)
-
-
 @register(
     "src_kafka_shaped_feed",
     survey_row=1,
@@ -236,15 +213,14 @@ def _sweep_stale_feeds(scratch: str, app_id: str) -> None:
     """,
 )
 def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Kafka audit-stream path, DE-STUBBED OFFLINE (r10 verdict
-    "what's missing" #5 — the Derby recipe applied to the stream
-    side): `read_audit_stream` above can only hand back
+    """The Kafka audit-stream path, DE-STUBBED OFFLINE (the Derby
+    recipe applied to the stream side): `read_audit_stream` above can only hand back
     `.format("kafka")` unexecuted in this sandbox, but everything a
     deployment runs DOWNSTREAM of the Kafka source — the
     binary-value JSON decode, the event-time windowed aggregation,
     the incremental availableNow execution with a checkpoint — is
     executed for real here. The feed is materialized once per
-    (process, fixture) with the EXACT Kafka source schema (key/value
+    (session, fixture) with the EXACT Kafka source schema (key/value
     BINARY, topic, partition, offset, timestamp, timestampType — the
     seven columns `.format("kafka").load()` yields), value = the
     JSON event payload; a file-source stream over it is
@@ -258,23 +234,19 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_tumbling_counts shape — watermarked hash agg, state
     bounded by open windows.
 
-    r12 lifecycle fixes (r11 ADVICE, all three): (1) the feed is
-    materialized ATOMICALLY — written to a uuid tmp dir and
-    os.rename'd into place, so a concurrent session can never stream
-    a half-written directory and whoever renames first wins; (2) the
-    per-run checkpoint dir is rmtree'd and the memory-sink temp view
-    dropped after the result is materialized (localCheckpoint breaks
-    the plan's reference to the sink), so repeated sweeps no longer
-    accumulate disk or driver memory; (3) sum_value accumulates in
-    int64 cents inside the streaming agg (events.value is the
-    non-negative 2-decimal audit-amount domain) with a DECIMAL
-    presentation merge, and the oracle casts to DECIMAL(12,2) the
-    same way — the order-dependent double-sum drift class the r9
-    money ops documented is gone on both sides."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
+    Lifecycle: the feed is staged once per session in the session's
+    scratch dir (``session.stage_once``: written to a fresh path and
+    renamed into place, so no build streams a half-written feed), and
+    each run gets its own checkpoint dir there, removed after the
+    result is materialized, with the memory-sink temp view dropped
+    (localCheckpoint breaks the plan's reference to the sink).
+    ``spark.stop()`` removes the feed. sum_value accumulates in int64
+    cents inside the streaming agg (events.value is the non-negative
+    2-decimal audit-amount domain) with a DECIMAL presentation merge,
+    and the oracle casts to DECIMAL(12,2) the same way, so the
+    order-dependent double-sum drift class is gone on both sides."""
+    import os
+    import shutil
 
     from hive_metadata_collect_spark.operators.numerics import cents
     from hive_metadata_collect_spark.sources.fixtures import load_table
@@ -282,29 +254,9 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    repo_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    scratch = _os.path.join(repo_root, ".scratch")
-    _os.makedirs(scratch, exist_ok=True)
-    # Keyed by (applicationId, sf) like the params-ingest table
-    # (r12 verdict item 5 → r13): a feed staged by an EARLIER run is
-    # never reused, so a regenerated events fixture at the same path
-    # can never serve stale bytes; stale feeds from finished sessions
-    # are swept, and a live session heartbeats its dir so the sweep
-    # never removes a table in use.
-    sf_tag = _os.path.basename(sf_dir.rstrip("/"))
-    app_id = spark.sparkContext.applicationId
-    feed_dir = _os.path.join(scratch, f"kafka_feed_{app_id}_{sf_tag}")
-    if _os.path.isdir(feed_dir):
-        try:
-            _os.utime(feed_dir, None)
-        except OSError:
-            pass
-    else:
-        _sweep_stale_feeds(scratch, app_id)
+    def stage_feed(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        rec = ev.select(
+        ev.select(
             F.col("event_id").cast("string").cast("binary").alias("key"),
             F.to_json(
                 F.struct(
@@ -319,14 +271,10 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("offset"),
             F.col("ts").alias("timestamp"),
             F.lit(0).cast("int").alias("timestampType"),
-        )
-        tmp = f"{feed_dir}.tmp.{_uuid.uuid4().hex[:8]}"
-        rec.write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, feed_dir)
-        except OSError:
-            # a concurrent run renamed first — stream from theirs
-            _shutil.rmtree(tmp, ignore_errors=True)
+        ).write.parquet(path)
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    feed_dir = stage_once(spark, f"kafka_feed_{sf_tag}", stage_feed)
 
     kafka_schema = (
         "key binary, value binary, topic string, partition int, "
@@ -350,7 +298,7 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _KAFKA_QUERY_SEQ[0] += 1
     name = f"kafka_feed_rollup_{_KAFKA_QUERY_SEQ[0]}"
-    ckpt = _tempfile.mkdtemp(prefix="kafka_ckpt_", dir=scratch)
+    ckpt = build_dir(spark)
     out = run_available_now(agg, name, ckpt, output_mode="complete")
     result = out.select(
         F.col("window.start").alias("window_start"),
@@ -365,5 +313,5 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_value"),
     ).localCheckpoint(eager=True)  # snapshot before the sink is dropped
     spark.catalog.dropTempView(name)
-    _shutil.rmtree(ckpt, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
     return result

@@ -26,6 +26,7 @@ from pyspark.sql.datasource import (
 )
 
 from hive_metadata_collect_spark.registry import register
+from hive_metadata_collect_spark.session import build_dir
 
 #: deterministic catalog shape: 4 read partitions × 25 tables
 _N_PARTS = 4
@@ -291,16 +292,9 @@ def sink_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, no window sort). Exercises stage→commit atomicity, the
     append-generation upsert contract, and the Arrow write path; the
     oracle states the expected post-upsert store relationally."""
-    import shutil
-
     from hive_metadata_collect_spark.sources.fixtures import load_table
 
-    target = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "report_sink_nation",
-    )
-    shutil.rmtree(target, ignore_errors=True)
+    target = os.path.join(build_dir(spark), "report_sink_nation")
     spark.dataSource.register(ReportSink)
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", F.col("n_regionkey").alias("val")
@@ -397,16 +391,9 @@ def stream_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     granularity, not one bulk write). Scale: each micro-batch stages
     Arrow batches in parallel tasks and commits once at the driver —
     the same bounded-metadata manifest as the batch path."""
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
+    base = build_dir(spark)
     target = os.path.join(base, "report_sink_stream")
     ckpt = os.path.join(base, "report_sink_stream_ckpt")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     spark.dataSource.register(MetastoreSource)
     spark.dataSource.register(ReportSink)
     q = (

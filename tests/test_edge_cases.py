@@ -768,7 +768,7 @@ def test_jdbc_embedded_metastore_partitioned_read(spark, sf_dir):
     ops = registry.load_all()
     out = ops["src_jdbc_embedded_metastore"].fn(spark, sf_dir)
     assert out.count() > 0
-    url = f"jdbc:derby:{connectors._DERBY_DIRS[sf_dir.rstrip('/')]};create=true"
+    url = connectors._derby_url(spark, sf_dir)
     tbls = connectors.read_metastore_table(
         spark, url, "TBLS",
         partition_column="TBL_ID", lower_bound=0, upper_bound=32,
