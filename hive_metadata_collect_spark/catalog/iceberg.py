@@ -1,8 +1,8 @@
 """Apache Iceberg manifest-layer planning — the metadata half below
 `cat_iceberg_metadata_replay` (catalog/partitions.py), which stops at
 `v{N}.metadata.json` because manifests need Avro. This module closes
-that boundary (r8 verdict item 6) with the minimal spec Avro reader in
-sources/avro_light.py over checked-in spec-conformant fixtures
+that boundary with the minimal spec Avro reader in sources/avro_light.py
+over checked-in spec-conformant fixtures
 (tools/make_iceberg_manifests.py; the manifest-list names are the ones
 the committed v{N}.metadata.json files already carry).
 
@@ -106,7 +106,7 @@ def _decode_manifest_entries(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
                 # (Iceberg spec: lower_bounds/upper_bounds are optional
                 # per-column maps). Degrade to a null bound — an
                 # unprunable row — rather than KeyError-ing the whole
-                # decode task (r9 advisory).
+                # decode task.
                 lo1, hi1 = lo.get(1), hi.get(1)
                 rows.append(
                     {
@@ -194,7 +194,7 @@ def _live_entries(spark: SparkSession) -> DataFrame:
     # while the entry side keys on the decoded file's basename —
     # normalize BOTH sides to basenames so the linkage works on any
     # metadata tree instead of silently yielding an empty plan when
-    # paths are absolute (r9 advisory).
+    # paths are absolute.
     active_base = active.select(
         F.element_at(F.split(F.col("manifest_path"), "/"), -1).alias(
             "manifest_base"

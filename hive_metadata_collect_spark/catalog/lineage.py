@@ -1,6 +1,6 @@
-"""Lineage-graph catalog operators — split from catalog/stats.py in r9
-(the 7.9k-line file audit, r8 verdict item 8; behavior and operator
-names unchanged, registry path updated in registry._OP_MODULES).
+"""Lineage-graph catalog operators — split from catalog/stats.py when
+that file reached 7.9k lines (behavior and operator names unchanged,
+registry path in registry._OP_MODULES).
 
 Everything here treats table-to-table derivation edges as a graph and
 answers reachability / rank / cycle / impact questions with
@@ -29,14 +29,14 @@ from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
 @register(
     "cat_lineage_2hop",
     survey_row=66,
-    # Signature-collapse oracle (r10): the previous hub pair-join
-    # formulation (edges a JOIN edges b ON event_type) is quadratic in
-    # users-per-hub — ~1.1e11 intermediate rows at sf10, the same wall
-    # the Spark side's r9 rewrite removed. Re-derived here with
-    # DuckDB's OWN list machinery over per-user type signatures
-    # (≤2^|types| distinct sets): row-identical to the pair form at
-    # sf0.01 (verified), linear in users at any scale. Explicit BIGINT
-    # casts keep sum() off DuckDB's HUGEINT rendering.
+    # Signature-collapse oracle: a hub pair-join formulation (edges a
+    # JOIN edges b ON event_type) is quadratic in users-per-hub —
+    # ~1.1e11 intermediate rows at sf10, the same wall the Spark side's
+    # signature collapse removes. Derived here with DuckDB's OWN list
+    # machinery over per-user type signatures (≤2^|types| distinct
+    # sets): row-identical to the pair form at sf0.01 (verified), linear
+    # in users at any scale. Explicit BIGINT casts keep sum() off
+    # DuckDB's HUGEINT rendering.
     oracle="""
     WITH edges AS (SELECT DISTINCT user_id, event_type FROM events),
     usig AS (
@@ -60,13 +60,12 @@ def cat_lineage_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for src-table→dst-table): 2-hop reachability + degree — with
     NO pair materialization.
 
-    SIGNATURE-COLLAPSE rewrite (round-9 sf10 sweep finding): the
-    previous hub-keyed self-join materialized Σ_hub |neighbors(hub)|²
-    pair rows before its countDistinct — quadratic in users per hub.
-    The r8 repartition fix bought parallelism at sf1 (~1.1e9 pairs),
-    but at sf10 the output is ~1.1e11 pairs and no partitioning
-    saves an inherently quadratic intermediate (>35 min, the round's
-    sweep wall). The semantics need no pairs at all: a node's 2-hop
+    SIGNATURE COLLAPSE, because a hub-keyed self-join materializes
+    Σ_hub |neighbors(hub)|² pair rows before its countDistinct —
+    quadratic in users per hub. Repartitioning buys parallelism at sf1
+    (~1.1e9 pairs), but at sf10 the output is ~1.1e11 pairs and no
+    partitioning saves an inherently quadratic intermediate (>35 min
+    at sf10). The semantics need no pairs at all: a node's 2-hop
     set is the UNION of its hubs' neighbor sets, so collapse users
     to their exact hub-SET signature (≤2^|types| distinct sets —
     bounded by the DOMAIN, not the data), count users per signature,
@@ -99,6 +98,23 @@ def cat_lineage_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("sig_arr").cast("long").alias("n_types"),
         (F.col("reach") - 1).cast("long").alias("n_2hop_users"),
     )
+
+
+def _transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lineage graph's edges: each user's temporal type→type
+    transitions in the audit stream ("read X, then wrote Y"), without
+    self-loops, deduped. This is the corpus-sized work of the lineage
+    family; everything after it is |V|²-bounded."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    trans = ev.select(
+        F.lag("event_type").over(w).alias("src"),
+        F.col("event_type").alias("dst"),
+    )
+    return trans.filter(
+        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
+    ).distinct()
+
 
 @register(
     "cat_lineage_closure",
@@ -144,19 +160,12 @@ def cat_lineage_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a hop-at-a-time recursive CTE — a genuinely different
     algorithm reaching the same fixpoint.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
     # Both reach frames appear on three plan branches each (union arm,
     # join probe, broadcast build); Spark has no common-subtree
     # elimination, so cache() is what makes each computed once. They
     # are |V|- and |V|²-bounded — trivially cacheable at any scale.
     edges = (
-        trans.filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
-        .distinct()
+        _transition_edges(spark, sf_dir)
         .withColumn("hops", F.lit(1))
         .cache()
     )
@@ -206,7 +215,7 @@ _PR_DAMP = 0.85
 # Python/Spark IEEE gives 1.0-0.85 = 0.15000000000000002 while
 # DuckDB's DECIMAL literals subtract exactly to 0.15 before promoting
 # to DOUBLE — a 1-ulp teleport drift that propagates through every
-# iteration and flips round-boundary ranks (r12 hypothesis find).
+# iteration and flips round-boundary ranks (found by hypothesis).
 _PR_TELEPORT = 0.15
 
 
@@ -274,8 +283,8 @@ def cat_lineage_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     leak rank identically in engine and oracle, so scores still
     match).
 
-    r12 correctness fix (hypothesis-found falsifying graph, pinned in
-    tests/test_property_parity.py): two cross-engine drift sources on
+    Cross-engine exactness (a hypothesis-found falsifying graph is
+    pinned in tests/test_property_parity.py): two cross-engine drift sources on
     a rank sitting 1 ulp under the round(,8) boundary (0.0991368749…).
     (1) The teleport constant: Python's 1.0-0.85 is IEEE
     0.15000000000000002 while DuckDB's DECIMAL literals subtract
@@ -413,33 +422,31 @@ def cat_lineage_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-level lineage parsed FROM SQL TEXT — the collector-class
     derived artifact: a query log of `INSERT INTO dst SELECT ... FROM
     src [JOIN src2 ...]` statements is parsed into (dst_table,
-    src_table) edges with per-edge query/reference counts, the edge
-    list the closure/pagerank lineage ops consume. The fixture stream
-    carries no SQL, so a deterministic statement is synthesized per
-    event in BOTH engines (the text_pii_redact pattern). The round-7
-    grammar (r6 verdict item 6, extending r5 item 3) covers what
-    real collector query logs actually contain: `WITH x AS (...)`
-    CTEs (the alias must NOT be emitted as a source — but the table
-    inside the CTE body must), `INSERT OVERWRITE TABLE`,
-    backtick-quoted AND ANSI double-quoted identifiers,
-    DB-QUALIFIED names (`dwh_N.raw_K` in FROM, `analytics_db.ref_K`
-    in JOIN — normalized by splitting the db prefix into its own
-    src_db column, 'default' when unqualified, so `db.t` and `t`
-    resolve to DISTINCT sources), derived tables `FROM (SELECT ...)
-    s` (the subquery alias never matches the FROM/JOIN-anchored
-    pattern, the inner table does), plus the original 0/1/2-join and
-    self-referencing-JOIN shapes. The parser: regexp_extract for the
-    INSERT target, regexp_extract_all group-1 over FROM/JOIN tokens,
-    translate() to strip both quote styles, split() for the db
-    prefix, a per-statement CTE-alias array, and an `array_contains`
-    anti-filter removing only UNQUALIFIED alias refs (a CTE alias
-    cannot be db-qualified) — all Java∩RE2-dialect, all row-local. Synthesis, parse, explode and
-    the alias filter are narrow whole-stage-codegen stages that
-    inherit the scan's partitioning; the single shuffle is the final
-    groupBy on the edge key, carrying |edges| rows, not |queries| —
-    at 100 TB of query log the reduce side is bounded by the
-    catalog's table-pair count. Plan-asserted: no Exchange before
-    the edge agg, no Python."""
+    src_table) edges with per-edge query/reference counts, the edge list
+    the closure/pagerank lineage ops consume. The fixture stream carries
+    no SQL, so a deterministic statement is synthesized per event in
+    BOTH engines (the text_pii_redact pattern). The grammar covers what
+    real collector query logs actually contain: `WITH x AS (...)` CTEs
+    (the alias must NOT be emitted as a source — but the table inside
+    the CTE body must), `INSERT OVERWRITE TABLE`, backtick-quoted AND
+    ANSI double-quoted identifiers, DB-QUALIFIED names (`dwh_N.raw_K` in
+    FROM, `analytics_db.ref_K` in JOIN — normalized by splitting the db
+    prefix into its own src_db column, 'default' when unqualified, so
+    `db.t` and `t` resolve to DISTINCT sources), derived tables `FROM
+    (SELECT ...) s` (the subquery alias never matches the
+    FROM/JOIN-anchored pattern, the inner table does), plus the original
+    0/1/2-join and self-referencing-JOIN shapes. The parser:
+    regexp_extract for the INSERT target, regexp_extract_all group-1
+    over FROM/JOIN tokens, translate() to strip both quote styles,
+    split() for the db prefix, a per-statement CTE-alias array, and an
+    `array_contains` anti-filter removing only UNQUALIFIED alias refs (a
+    CTE alias cannot be db-qualified) — all Java∩RE2-dialect, all
+    row-local. Synthesis, parse, explode and the alias filter are narrow
+    whole-stage-codegen stages that inherit the scan's partitioning; the
+    single shuffle is the final groupBy on the edge key, carrying
+    |edges| rows, not |queries| — at 100 TB of query log the reduce side
+    is bounded by the catalog's table-pair count. Plan-asserted: no
+    Exchange before the edge agg, no Python."""
     ev = load_table(spark, sf_dir, "events")
     u = F.col("user_id")
     eid = F.col("event_id")
@@ -648,29 +655,26 @@ def cat_lineage_sql_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLUMN-level lineage parsed from SQL text — one resolution
     level deeper than cat_lineage_sql's table edges: qualified column
     references (`r.col_3`) in the SELECT list are matched to their
-    source tables through the statement's own alias map (`FROM raw_N
-    r JOIN dim_M d`), yielding (dst_table, src_table, column) edges.
-    The resolver is fully relational: two regexp_extract_all passes
-    (group 1 / group 2 of the same pattern) zipped into
-    (alias, table) and (alias, column) pair streams, exploded, then
-    one equi-join on (query_id, alias) — no per-row Python, no SQL
-    parser library; the Java∩RE2 dialect keeps both engines
-    tokenizing identically. Round-7 grammar (r6 verdict item 6,
-    extending r5 item 3): `INSERT OVERWRITE TABLE`, backtick-quoted
-    AND ANSI double-quoted table names, DB-QUALIFIED names
-    (`dwh_N.raw_K r` — the db prefix is normalized into its own
-    src_db column, 'default' when unqualified, so `db.t` and `t`
-    are distinct sources), and a CTE shape — a column ref whose
-    alias binds to a `WITH x AS (SELECT * FROM base)` CTE resolves
-    THROUGH the CTE to the underlying table (one extra left join
-    against the per-statement CTE map, guarded on src_db='default'
-    since a CTE alias cannot be db-qualified; the CTE alias itself
-    never appears as a source). Scale: the
-    alias map, CTE map and column-ref streams are all ~O(refs per
-    query); the resolver joins partition on query_id (synthetic
-    statements here, the audit-log query text in a live deployment),
-    and the final edge agg carries |dst × src × column|,
-    catalog-bounded."""
+    source tables through the statement's own alias map (`FROM raw_N r
+    JOIN dim_M d`), yielding (dst_table, src_table, column) edges. The
+    resolver is fully relational: two regexp_extract_all passes (group 1
+    / group 2 of the same pattern) zipped into (alias, table) and
+    (alias, column) pair streams, exploded, then one equi-join on
+    (query_id, alias) — no per-row Python, no SQL parser library; the
+    Java∩RE2 dialect keeps both engines tokenizing identically. The
+    grammar covers `INSERT OVERWRITE TABLE`, backtick-quoted AND ANSI
+    double-quoted table names, DB-QUALIFIED names (`dwh_N.raw_K r` — the
+    db prefix is normalized into its own src_db column, 'default' when
+    unqualified, so `db.t` and `t` are distinct sources), and a CTE
+    shape — a column ref whose alias binds to a `WITH x AS (SELECT *
+    FROM base)` CTE resolves THROUGH the CTE to the underlying table
+    (one extra left join against the per-statement CTE map, guarded on
+    src_db='default' since a CTE alias cannot be db-qualified; the CTE
+    alias itself never appears as a source). Scale: the alias map, CTE
+    map and column-ref streams are all ~O(refs per query); the resolver
+    joins partition on query_id (synthetic statements here, the
+    audit-log query text in a live deployment), and the final edge agg
+    carries |dst × src × column|, catalog-bounded."""
     ev = load_table(spark, sf_dir, "events")
     u = F.col("user_id")
     eid = F.col("event_id")
@@ -839,15 +843,8 @@ def cat_lineage_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped pair set (≤ |V|² rows regardless of corpus size); 8 ≥ |V|
     covers every simple cycle. The oracle recomputes by hop-at-a-time
     recursive CTE — different algorithm, same fixpoint."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
     reach = (
-        trans.filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
-        .distinct()
+        _transition_edges(spark, sf_dir)
         .withColumn("hops", F.lit(1))
         .cache()
     )
@@ -1002,17 +999,7 @@ def cat_tag_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one semi-style min-hop join from the seed set. The oracle walks
     hop-at-a-time by recursive CTE — different algorithm, same
     fixpoint, the closure-family discipline."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
-    edges = (
-        trans.filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
-        .distinct()
-        .cache()
-    )
+    edges = _transition_edges(spark, sf_dir).cache()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select("dst"))
@@ -1108,15 +1095,7 @@ def cat_lineage_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand toward higher ids). The corpus-sized work remains the
     one DISTINCT edge extraction shared by the whole lineage
     family."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
-    edges = trans.filter(
-        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
-    ).distinct()
+    edges = _transition_edges(spark, sf_dir)
     und = (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -1184,14 +1163,7 @@ def cat_mv_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     freshness family); the staleness join broadcasts. At 100 TB
     this runs entirely on collector metadata — no data scan."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
-    edges = trans.filter(
-        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
-    ).distinct()
+    edges = _transition_edges(spark, sf_dir)
     freshness = ev.groupBy(F.col("event_type").alias("node")).agg(
         F.max("ts").alias("last_touch")
     )
@@ -1264,14 +1236,7 @@ def cat_impact_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-distinct reachability — same fixpoint, different
     algorithm, per the closure-family rule."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
-    edges = trans.filter(
-        F.col("src").isNotNull() & (F.col("src") != F.col("dst"))
-    ).distinct()
+    edges = _transition_edges(spark, sf_dir)
     sizes = ev.groupBy(F.col("event_type").alias("node")).agg(
         (F.count(F.lit(1)) * 1000).alias("tbl_bytes")
     )
@@ -1344,15 +1309,8 @@ def cat_lineage_weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair frame, min-cost deduped per round; oracle walks
     hop-at-a-time by recursive CTE — the closure-family rule, with
     WEIGHTS this time."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    )
     edges = (
-        trans.filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
-        .distinct()
+        _transition_edges(spark, sf_dir)
         .select(
             "src",
             "dst",

@@ -1,7 +1,7 @@
 """Storage-layout, partition-maintenance and table-format-log catalog
-operators — split from catalog/stats.py in r9 (the 7.9k-line file
-audit, r8 verdict item 8; behavior and operator names unchanged,
-registry path updated in registry._OP_MODULES).
+operators — split from catalog/stats.py when that file reached 7.9k
+lines (behavior and operator names unchanged, registry path in
+registry._OP_MODULES).
 
 Families here: partition inventory/freshness/skew/retention and
 MSCK-style repair planning; storage accounting and compaction/vacuum/
@@ -227,21 +227,20 @@ def cat_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cat_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/upsert semantics for the reporting store (round-4
-    verdict "what's missing" item 4: `cat_scd2_diff` /
-    `cat_snapshot_diff` compute the diff, but no operator APPLIED
-    it). Classic warehouse MERGE over the same two deterministic
-    inventory snapshots cat_snapshot_diff uses: source rows matched
-    in the target are UPDATEd to the source value, unmatched source
-    rows are INSERTed, and target rows absent from the source are
-    KEPT (upsert — not the full-sync overwrite, whose result would
-    trivially equal the source). The output is the post-MERGE target
-    with a per-row action audit column — distinguishable from both
-    inputs, which is what makes the semantics checkable. Relationally
-    this is one full-outer join on the merge key + a row-local
-    resolver — exactly the reduce Delta/Iceberg `MERGE INTO` runs
-    under the hood; at 100 TB both sides shuffle once on the key (or
-    zero times if the report store is bucketed on it, the
+    """MERGE/upsert semantics for the reporting store
+    (`cat_scd2_diff` / `cat_snapshot_diff` compute the diff; this
+    operator APPLIES it). Classic warehouse MERGE over the same two
+    deterministic inventory snapshots cat_snapshot_diff uses: source
+    rows matched in the target are UPDATEd to the source value,
+    unmatched source rows are INSERTed, and target rows absent from the
+    source are KEPT (upsert — not the full-sync overwrite, whose result
+    would trivially equal the source). The output is the post-MERGE
+    target with a per-row action audit column — distinguishable from
+    both inputs, which is what makes the semantics checkable.
+    Relationally this is one full-outer join on the merge key + a
+    row-local resolver — exactly the reduce Delta/Iceberg `MERGE INTO`
+    runs under the hood; at 100 TB both sides shuffle once on the key
+    (or zero times if the report store is bucketed on it, the
     join_bucketed_colocated pattern)."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     bounds = ev.agg(
@@ -298,20 +297,18 @@ _WAREHOUSE_DIR = str(
     """,
 )
 def cat_storage_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Storage-size enrichment (round-4 verdict "what's missing" item
-    3): the collector pass that feeds `TABLE_PARAMS.totalSize` /
-    `numFiles` analogs by statting the warehouse filesystem rather
-    than trusting stale metastore params. Spark-native: the
-    `binaryFile` datasource lists and stats files through the Hadoop
-    FileSystem API with a distributed InMemoryFileIndex — selecting
-    only (path, length) prunes the content column, so no file BYTES
-    are ever read (plan-asserted in tests) — then one tiny groupBy on
-    the table name parsed from the path. At 100 TB the same plan
-    walks millions of files in parallel executors; this is the
-    HDFS-du enrichment path a metastore collector actually runs.
+    """Storage-size enrichment: the collector pass that feeds
+    `TABLE_PARAMS.totalSize` / `numFiles` analogs by statting the
+    warehouse filesystem rather than trusting stale metastore params.
+    Spark-native: the `binaryFile` datasource lists and stats files
+    through the Hadoop FileSystem API with a distributed
+    InMemoryFileIndex — selecting only (path, length) prunes the content
+    column, so no file BYTES are ever read (plan-asserted in tests) —
+    then one tiny groupBy on the table name parsed from the path. At 100
+    TB the same plan walks millions of files in parallel executors; this
+    is the HDFS-du enrichment path a metastore collector actually runs.
 
-    Oracle (r9 verdict item 4, closing the last no-oracle registry
-    entry): the registered op stats the COMMITTED fixture warehouse
+    Oracle: the registered op stats the COMMITTED fixture warehouse
     (fixtures/warehouse — both layouts: single-file tables and
     directory tables with part files, plus non-parquet entries the
     glob must exclude; generator tools/make_warehouse_fixture.py),
@@ -517,26 +514,25 @@ def cat_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cat_tx_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table-format TRANSACTION-LOG snapshot resolve (r5 verdict item
-    6) — the Delta/Iceberg metadata read a 2026-era catalog collector
-    performs: a JSON action log (add-file actions carrying
-    size/row-count stats, remove-file tombstones, one version stamp
-    per action) is parsed and the LIVE file set plus table stats are
-    reconstructed at each snapshot version. delta-spark is not
-    installable here, so a deterministic log is synthesized per event
-    in BOTH engines and the operator is the resolve itself: JSON path
-    extraction (get_json_object ≡ json_extract, all codegen), a
-    3-snapshot range join (versions ≤ snapshot), and per-(snapshot,
-    path) last-writer-wins via one max_by over the (version,
-    is_remove, event_id) order struct — remove beats add at the same
-    version, later event wins among adds — then a per-snapshot
-    rollup of the surviving adds. Exactly the Delta snapshot
-    reconstruction semantics (log replay with tombstones). Scale:
-    the snapshot dim is broadcast (|versions| rows); the one real
+    """Table-format TRANSACTION-LOG snapshot resolve — the Delta/Iceberg
+    metadata read a 2026-era catalog collector performs: a JSON action
+    log (add-file actions carrying size/row-count stats, remove-file
+    tombstones, one version stamp per action) is parsed and the LIVE
+    file set plus table stats are reconstructed at each snapshot
+    version. delta-spark is not installable here, so a deterministic log
+    is synthesized per event in BOTH engines and the operator is the
+    resolve itself: JSON path extraction (get_json_object ≡
+    json_extract, all codegen), a 3-snapshot range join (versions ≤
+    snapshot), and per-(snapshot, path) last-writer-wins via one max_by
+    over the (version, is_remove, event_id) order struct — remove beats
+    add at the same version, later event wins among adds — then a
+    per-snapshot rollup of the surviving adds. Exactly the Delta
+    snapshot reconstruction semantics (log replay with tombstones).
+    Scale: the snapshot dim is broadcast (|versions| rows); the one real
     shuffle keys on (snapshot, path) — file-count bounded, never
-    row-count bounded; stats come from the log, no data files are
-    read. At 100 TB this is how you answer "how big was the table at
-    version V" without touching a single parquet footer."""
+    row-count bounded; stats come from the log, no data files are read.
+    At 100 TB this is how you answer "how big was the table at version
+    V" without touching a single parquet footer."""
     ev = load_table(spark, sf_dir, "events")
     eid = F.col("event_id")
     line = F.when(
@@ -665,28 +661,26 @@ _DELTA_LOG_DIR = str(
     """,
 )
 def cat_delta_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-FORMAT Delta log replay (round-6 verdict item 7) — the
-    golden-fixture twin of `cat_tx_log_snapshot`: that op gates the
-    replay REDUCE on a synthesized log; this one pins the PARSE
-    against the actual public Delta protocol, from checked-in
-    `_delta_log/%020d.json` files written by hand to spec. What the
-    spec makes the parser handle that the synthesized shape did not:
-    (a) the commit VERSION is encoded in the file NAME, not the
-    action (input_file_name + regexp, exactly how a real log reader
-    derives it); (b) heterogeneous action lines — protocol /
-    metaData / commitInfo / add / remove — share one file, so
-    non-file actions must be filtered structurally, not assumed
-    away; (c) per-file row counts live in `add.stats`, a JSON
-    document EMBEDDED AS A STRING inside the action JSON (two-level
-    get_json_object); (d) commitInfo carries the operation name
-    joined back per snapshot. The replay itself is the
-    last-writer-wins reduce shared with the synthesized gate:
-    snapshots × actions range join on v <= snap, max_by over
-    (version, add-beats-remove-inverted) per (snap, path), rollup
-    of surviving adds. Scale: a real table's checkpoint parquet
-    replaces the full-history JSON walk, but the per-(snap, path)
-    reduce is identical; everything here is |files|-bounded — no
-    data file is ever opened."""
+    """REAL-FORMAT Delta log replay — the golden-fixture twin of
+    `cat_tx_log_snapshot`: that op gates the replay REDUCE on a
+    synthesized log; this one pins the PARSE against the actual public
+    Delta protocol, from checked-in `_delta_log/%020d.json` files
+    written by hand to spec. What the spec makes the parser handle that
+    the synthesized shape did not: (a) the commit VERSION is encoded in
+    the file NAME, not the action (input_file_name + regexp, exactly how
+    a real log reader derives it); (b) heterogeneous action lines —
+    protocol / metaData / commitInfo / add / remove — share one file, so
+    non-file actions must be filtered structurally, not assumed away;
+    (c) per-file row counts live in `add.stats`, a JSON document
+    EMBEDDED AS A STRING inside the action JSON (two-level
+    get_json_object); (d) commitInfo carries the operation name joined
+    back per snapshot. The replay itself is the last-writer-wins reduce
+    shared with the synthesized gate: snapshots × actions range join on
+    v <= snap, max_by over (version, add-beats-remove-inverted) per
+    (snap, path), rollup of surviving adds. Scale: a real table's
+    checkpoint parquet replaces the full-history JSON walk, but the
+    per-(snap, path) reduce is identical; everything here is
+    |files|-bounded — no data file is ever opened."""
     raw = (
         spark.read.text(_DELTA_LOG_DIR + "/*.json")
         .select(
@@ -825,9 +819,9 @@ def cat_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("snap").cast("long").alias("snapshot_version"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # integer cents (house money convention): the r9 sf10
-            # sweep measured the pre-round double sum drifting 2 full
-            # cents between engines at 10.5M rows/group
+            # integer cents (house money convention): at sf10 the
+            # pre-round double sum drifts 2 full cents between
+            # engines at 10.5M rows/group
             F.round(
                 F.sum(
                     F.floor(F.round("o_totalprice", 2) * 100 + 0.5).cast(

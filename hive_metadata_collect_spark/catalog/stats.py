@@ -192,9 +192,9 @@ def cat_quality_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     collector emits these observation metrics to its monitoring sink
     on every run; the returned frame is the ordinary business result
     and is what the oracle checks. The price rollup sums integer
-    CENTS (house money convention — the r9 sf10 sweep caught the
-    pre-round double sum drifting a full cent between engines at 5M
-    rows/group) and divides back once."""
+    CENTS (house money convention — at sf10 the pre-round double sum
+    drifts a full cent between engines at 5M rows/group) and divides
+    back once."""
     from pyspark.sql import Observation
 
     o = load_table(spark, sf_dir, "orders")
@@ -567,8 +567,8 @@ def cat_incremental_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     associativity property the whole scheme rests on. The two-level
     agg shares one shuffle key prefix; level two reduces |buckets|
     rows. The final rounded sum presents as DOUBLE on both engines:
-    the r9 sf10 sweep caught the Decimal-vs-float64 driver-hash class
-    here in the one case smaller SFs cannot show — a sum whose cents
+    at sf10, Decimal-vs-float64 renderings break the driver hash here
+    in the one case smaller SFs cannot show — a sum whose cents
     happen to be .00, where Spark's Decimal renders '…0.00' against
     DuckDB's float '…0.0' (accumulation stays exact DECIMAL)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -2699,11 +2699,10 @@ def cat_data_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "orders",
             # Referential check: NO broadcast hint — customer is
             # fact-sized (1.5B keys at 100 TB), so forcing the keyset
-            # into one broadcast block would OOM at scale (r8
-            # advisory). AQE picks broadcast when the keyset is
-            # actually small; otherwise both sides shuffle on the key,
-            # which is the right plan for fact→fact referential
-            # integrity.
+            # into one broadcast block would OOM at scale. AQE picks
+            # broadcast when the keyset is actually small; otherwise
+            # both sides shuffle on the key, which is the right plan
+            # for fact→fact referential integrity.
             o.join(
                 cust.select("c_custkey"),
                 o["o_custkey"] == cust["c_custkey"],

@@ -1,6 +1,6 @@
-"""Usage-analytics catalog operators — split from catalog/stats.py in
-r9 (the 7.9k-line file audit, r8 verdict item 8; behavior and operator
-names unchanged, registry path updated in registry._OP_MODULES).
+"""Usage-analytics catalog operators — split from catalog/stats.py when
+that file reached 7.9k lines (behavior and operator names unchanged,
+registry path in registry._OP_MODULES).
 
 Families here: table heat / cold-table / decayed-heat and hourly
 profiles over the audit stream; query-log analytics (fingerprinting,
@@ -109,47 +109,44 @@ def cat_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel over the audit-log stream: users who viewed →
     clicked after their first view → purchased after that click.
 
-    Single-HASH-AGG formulation (round-4 verdict item 5 — the
-    previous form ran two stacked running-min window passes over a
-    per-user SORT): ONE shuffle partitions events by user into a
-    hash aggregate (partial map-side, no sort anywhere) that carries
-    the min view timestamp plus the per-user click/purchase
-    timestamp lists; the chained stage qualifications are then
-    row-local array kernels — fc = array_min(clicks > fv),
-    fp = array_min(purchases > fc) — strict > keeps equal-timestamp
-    rows non-qualifying, so the result is order-invariant. Only 3
-    stage counters cross to the final single-row reduction. The
-    staged-joins alternative (the oracle's shape) shuffles the event
-    log three times. Scale: the collected lists hold only each
-    user's click/purchase timestamps (not all events); the hot-user
-    straggler bound is the same as the window form's sort run, minus
-    the sort.
+    Single-HASH-AGG formulation (the window form runs two stacked
+    running-min window passes over a per-user SORT): ONE shuffle
+    partitions events by user into a hash aggregate (partial map-side,
+    no sort anywhere) that carries the min view timestamp plus the
+    per-user click/purchase timestamp lists; the chained stage
+    qualifications are then row-local array kernels — fc =
+    array_min(clicks > fv), fp = array_min(purchases > fc) — strict >
+    keeps equal-timestamp rows non-qualifying, so the result is
+    order-invariant. Only 3 stage counters cross to the final single-row
+    reduction. The staged-joins alternative (the oracle's shape)
+    shuffles the event log three times. Scale: the collected lists hold
+    only each user's click/purchase timestamps (not all events); the
+    hot-user straggler bound is the same as the window form's sort run,
+    minus the sort.
 
-    r12 (r11 verdict item 2): two shuffle-volume cuts measured in one
-    idle sf10 session — (1) funnel-irrelevant event types (signup,
-    error — 40 % of rows) are filtered BEFORE the aggregate, so they
-    never enter the exchange; (2) timestamps travel as unix_micros
-    longs (order-isomorphic to Spark's µs-precision timestamps, so
-    every strict-> comparison is unchanged; a plain seconds cast
-    would be wrong — truncation can create false ties). sf10:
-    0.91 s → 0.57 s vs a 0.32 s scan floor and DuckDB 0.20 s; the
-    three-pass broadcast-join chain the oracle uses was measured at
-    1.71 s (three scans dominate) and rejected. The residual over
+    Two shuffle-volume cuts, measured in one idle sf10 session — (1)
+    funnel-irrelevant event types (signup, error — 40 % of rows) are
+    filtered BEFORE the aggregate, so they never enter the exchange; (2)
+    timestamps travel as unix_micros longs (order-isomorphic to Spark's
+    µs-precision timestamps, so every strict-> comparison is unchanged;
+    a plain seconds cast would be wrong — truncation can create false
+    ties). sf10: 0.91 s → 0.57 s vs a 0.32 s scan floor and DuckDB 0.20
+    s; the three-pass broadcast-join chain the oracle uses was measured
+    at 1.71 s (three scans dominate) and rejected. The residual over
     DuckDB is the scan floor plus the 6M-entry list exchange — at the
     floor for a one-shuffle JVM plan.
 
-    r13 (r12 verdict item 4): the suggested agg-state-shrink lever was
-    measured and is a dead end — merging the two collect_lists into
-    ONE list of bit-tagged longs (ts*2 + purchase-bit, order-isomorphic
-    per type) timed 0.654 s vs 0.647 s for this form in the same idle
-    sf10 session on identical output: the payload long count is
-    unchanged and one array header per user saves nothing measurable.
-    No bounded-scalar aggregation exists for the chained strict->
-    funnel (fc = min click > fv is not mergeable without retaining the
-    clicks ≤ the partial fv), so the per-user lists are the minimal
-    exchange state for a one-shuffle plan. Residual formally ACCEPTED
-    with numbers (BASELINE.md r13): sf10 0.65 s vs scan floor 0.22 s
-    vs DuckDB ~0.29 s."""
+    Dead end, measured: shrinking the agg state by merging the two
+    collect_lists into ONE list of bit-tagged longs (ts*2 +
+    purchase-bit, order-isomorphic per type) timed 0.654 s vs 0.647 s
+    for this form in the same idle sf10 session on identical output: the
+    payload long count is unchanged and one array header per user saves
+    nothing measurable. No bounded-scalar aggregation exists for the
+    chained strict-> funnel (fc = min click > fv is not mergeable
+    without retaining the clicks ≤ the partial fv), so the per-user
+    lists are the minimal exchange state for a one-shuffle plan.
+    Residual accepted with numbers (BASELINE.md, acceptance rows): sf10
+    0.65 s vs scan floor 0.22 s vs DuckDB ~0.29 s."""
     e = load_table(spark, sf_dir, "events")
     is_type = lambda t: F.col("event_type") == t  # noqa: E731
     per_user = (
@@ -1552,18 +1549,17 @@ def cat_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases — the self-auditing property that makes the report
     trustworthy.
 
-    The purchase×touch match is the stream-stream time-bounded
-    join shape (equi on user + range residual); per-purchase touch
-    counts come from a window over the matched frame. The credit
-    accumulates in exact integer NANO-units — each touch contributes
-    1e9 div n (TRUE integer division on both engines), summed as
-    int64 (≤1.8e15 at sf10, int64-safe past sf1000) and divided back
-    once. The r9 sf10 sweep falsified the previous form's claim that
-    an IEEE Σ 1/n over 'identical addends' is order-stable: at 1.8M
-    mixed-magnitude terms the engines' reassociation orders drifted
-    at the 6th decimal. Quantization error is ≤ n·1e-9 per channel
-    and, crucially, IDENTICAL on both engines at every scale; each
-    purchase's credit still sums to 1 within n·1e-9."""
+    The purchase×touch match is the stream-stream time-bounded join
+    shape (equi on user + range residual); per-purchase touch counts
+    come from a window over the matched frame. The credit accumulates in
+    exact integer NANO-units — each touch contributes 1e9 div n (TRUE
+    integer division on both engines), summed as int64 (≤1.8e15 at sf10,
+    int64-safe past sf1000) and divided back once. An IEEE Σ 1/n over
+    'identical addends' is not order-stable at sf10: at 1.8M
+    mixed-magnitude terms the engines' reassociation orders drifted at
+    the 6th decimal. Quantization error is ≤ n·1e-9 per channel and,
+    crucially, IDENTICAL on both engines at every scale; each purchase's
+    credit still sums to 1 within n·1e-9."""
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),

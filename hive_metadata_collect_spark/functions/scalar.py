@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import stage_once
+from hive_metadata_collect_spark.session import fixture_tag, stage_once
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
@@ -173,7 +173,7 @@ def fn_cast_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     '465799.50', which a DOUBLE presentation would erase) while
     rendering identically in both engines' pandas paths, where a raw
     DECIMAL column hashes as Decimal objects on Spark but float64 on
-    DuckDB (the r8 tpch_q9 driver-hash class)."""
+    DuckDB (the driver-hash miss tpch_q9 once had)."""
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -206,8 +206,8 @@ def fn_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """split → array, size, array_contains, slice, sort_array.
 
     Array-valued columns are joined to strings for the result: the
-    driver's pandas canonicalizer cannot hash list cells (r01
-    agg_collect_set_sorted err), and the join is after all the array
+    driver's pandas canonicalizer cannot hash list cells (it errored
+    on agg_collect_set_sorted), and the join is after all the array
     ops this entry exists to exercise.
     """
     d = load_table(spark, sf_dir, "documents")
@@ -257,7 +257,7 @@ def fn_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TABLE_PARAMS/stringly-typed-params pattern of a Hive-metadata
     catalog.
 
-    r12 flat-object fast path (simdjson-style tape shortcut, in
+    Flat-object fast path (simdjson-style tape shortcut, in
     Catalyst): machine-generated params are overwhelmingly the flat
     one-key object ``{"k": <int>}``, so one anchored regexp_extract
     pulls the digits directly and ``coalesce`` lazily falls back to
@@ -313,7 +313,7 @@ def fn_json_extract_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay the string-parse cost once, not N times, and the hot scan
     shrinks from a ~9-byte string per row to a dictionary-encoded int.
 
-    The table is staged once per session and scale factor in the
+    The table is staged once per session and fixture dir in the
     session's scratch dir (``session.stage_once``): every session —
     and therefore every bench or oracle invocation — re-parses the
     JSON from the parquet inputs before its first query, and the timed
@@ -325,7 +325,6 @@ def fn_json_extract_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.41 s for the in-query fast-path parse and 1.43 s for full
     from_json — the scan floor with the props column not read.
     """
-    import os
 
     def ingest(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -341,8 +340,9 @@ def fn_json_extract_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("k_val"),
         ).write.parquet(path)
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    target = stage_once(spark, f"params_ingested_{sf_tag}", ingest)
+    target = stage_once(
+        spark, f"params_ingested_{fixture_tag(sf_dir)}", ingest
+    )
     return (
         spark.read.parquet(target)
         .groupBy("event_type")
@@ -723,8 +723,8 @@ def fn_regexp_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dialect (`\b`, classes, alternation — no backrefs/lookarounds) so
     the engine and the oracle agree; all four compile to Catalyst
     string expressions inside whole-stage codegen. The extracted
-    array is stringified (array cells break pandas canonicalizers —
-    r01 lesson)."""
+    array is stringified (array cells break pandas
+    canonicalizers)."""
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",

@@ -171,7 +171,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed natively in Catalyst (no ML-lib UDF join). This is the
     PRODUCTION pair surface (doc_a, doc_b, est_jaccard); the
     registered `dedup_near_minhash_lsh` entry wraps it in the
-    driver-hashable recall contract (r8 verdict item 5).
+    driver-hashable recall contract.
 
     Pipeline: distinct tokens → 64 minhashes per doc, computed as 64
     map-side-combined ``min(xxhash64(seed_i, token))`` aggs over the
@@ -188,35 +188,33 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate (LSH recall < 1) → rows-only driver check; recall vs
     the exact operator is asserted in tests/test_edge_cases.py.
 
-    SIGNATURE-COLLAPSE shape (round-7, after the sf1 bench exposed
-    minutes-long band joins): boilerplate families — docs with the
-    IDENTICAL distinct-token set, hence the identical signature —
-    collide in ALL b bands, so a g-member family costs b·g² join work
-    for pairs the signature already proves are duplicates (the sf1
-    fixture has a 2,480-doc family → 8×3.07M redundant band-join
-    rows; real web corpora have worse). The fix mirrors the
-    production exact-before-fuzzy discipline: group docs by
-    ``xxhash64(m0..m63)`` (64-bit signature key; a cross-family
-    collision needs ~2³² distinct signatures to be likely), band-join
-    only the DISTINCT signatures, score the estimated Jaccard once
-    per signature PAIR, then expand back to doc pairs with two hash
-    joins on the signature key — within-family pairs are emitted
-    directly at est_jaccard=1.0 with no band join at all. Candidate
-    work becomes quadratic in DISTINCT signatures, linear in family
-    sizes except the final unavoidable pair output. Family expansion
-    itself parallelized by SALTED TRIANGLE EXPANSION: members shard
-    into S=16 buckets by doc-id hash and within-family pairs join on
-    (sig_key, shard_a, shard_b), so a g-member family's g²/2 output
-    rows spread over S(S+1)/2 = 136 tasks instead of one hot key
-    (sf10's 25k-doc family → 3×10⁸ pairs would otherwise be a
-    single-task straggler; each member rides the shuffle ≤S times as
-    a 3-long row). Measured at sf1: 36-task straggler stages →
-    seconds; the narrow pairs-first layout (signatures never ride
-    the candidate shuffle) is kept from the previous revision. The
-    remaining quadratic term is the OUTPUT itself — pair semantics
-    are inherently g² per family; cluster semantics
-    (dedup_components) is the volume answer at web scale.
-    """
+    SIGNATURE-COLLAPSE shape (without it the sf1 band joins run for
+    minutes): boilerplate families — docs with the IDENTICAL
+    distinct-token set, hence the identical signature — collide in ALL b
+    bands, so a g-member family costs b·g² join work for pairs the
+    signature already proves are duplicates (the sf1 fixture has a
+    2,480-doc family → 8×3.07M redundant band-join rows; real web
+    corpora have worse). The fix mirrors the production
+    exact-before-fuzzy discipline: group docs by ``xxhash64(m0..m63)``
+    (64-bit signature key; a cross-family collision needs ~2³² distinct
+    signatures to be likely), band-join only the DISTINCT signatures,
+    score the estimated Jaccard once per signature PAIR, then expand
+    back to doc pairs with two hash joins on the signature key —
+    within-family pairs are emitted directly at est_jaccard=1.0 with no
+    band join at all. Candidate work becomes quadratic in DISTINCT
+    signatures, linear in family sizes except the final unavoidable pair
+    output. Family expansion itself parallelized by SALTED TRIANGLE
+    EXPANSION: members shard into S=16 buckets by doc-id hash and
+    within-family pairs join on (sig_key, shard_a, shard_b), so a
+    g-member family's g²/2 output rows spread over S(S+1)/2 = 136 tasks
+    instead of one hot key (sf10's 25k-doc family → 3×10⁸ pairs would
+    otherwise be a single-task straggler; each member rides the shuffle
+    ≤S times as a 3-long row). Measured at sf1: 36-task straggler stages
+    → seconds; the narrow pairs-first layout (signatures never ride the
+    candidate shuffle) is kept from the previous revision. The remaining
+    quadratic term is the OUTPUT itself — pair semantics are inherently
+    g² per family; cluster semantics (dedup_components) is the volume
+    answer at web scale. """
     n_mh = _MH_BANDS * _MH_ROWS
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
@@ -371,22 +369,21 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_near_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIVER-HASHABLE RECALL CONTRACT for the MinHash-LSH banding
-    path (r8 verdict item 5). The candidate set rides seeded
-    xxhash64 minhashes, which SQL cannot re-derive, so this was a
-    rows-only driver check for four rounds with the recall assertion
-    engine-side only. The contract runs the banding path
-    (`minhash_lsh_candidates`, the production surface, unchanged)
-    AND the exact word-set-Jaccard twin (dedup_near_minhash's
-    inverted-index kernel; its quadratic all-pairs ORACLE carries
-    the same sound size-band prefilter), then emits one hashable
-    row: the exact τ=0.95 pair count (DuckDB re-derives it) and
-    recall ≥ 0.9 as an integer compare 10·hits ≥ 9·exact (measured
-    1.0 at sf0.001/0.01/0.1 — banding at 8×8 gives ~0.9998 recall
-    at j=0.95, and the signature-collapse path emits within-family
-    pairs deterministically). No false-positive claim: banding
-    admits sub-τ candidates BY DESIGN (the verify step downstream
-    filters them), so precision is not part of this op's contract."""
+    """DRIVER-HASHABLE RECALL CONTRACT for the MinHash-LSH banding path.
+    The candidate set rides seeded xxhash64 minhashes, which SQL cannot
+    re-derive, so on its own the path allows only a rows-only driver
+    check with the recall assertion engine-side only. The contract runs
+    the banding path (`minhash_lsh_candidates`, the production surface,
+    unchanged) AND the exact word-set-Jaccard twin (dedup_near_minhash's
+    inverted-index kernel; its quadratic all-pairs ORACLE carries the
+    same sound size-band prefilter), then emits one hashable row: the
+    exact τ=0.95 pair count (DuckDB re-derives it) and recall ≥ 0.9 as
+    an integer compare 10·hits ≥ 9·exact (measured 1.0 at
+    sf0.001/0.01/0.1 — banding at 8×8 gives ~0.9998 recall at j=0.95,
+    and the signature-collapse path emits within-family pairs
+    deterministically). No false-positive claim: banding admits sub-τ
+    candidates BY DESIGN (the verify step downstream filters them), so
+    precision is not part of this op's contract."""
     cand = minhash_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     exact = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
@@ -430,13 +427,13 @@ _GRAM_SIG_CTES = """
 
 def _gram_signature_frames(spark: SparkSession, sf_dir: str):
     """(membership, distinct-set) frames for the 3-gram-shingle dedup
-    family — the SIGNATURE COLLAPSE (r10's cat_lineage_2hop /
-    dedup_simhash recipe, applied per r10 verdict item 8): documents
-    with identical shingle SETS collapse to one signature row before
-    any pairwise work, so the inverted-index join runs over distinct
-    sets (sf10: 4 992 signatures for 500 000 docs — a 100× cut on
-    each join side, 10 000× on candidate pairs) and doc-level pairs
-    are recovered by joining group membership back at the end.
+    family — the SIGNATURE COLLAPSE (the cat_lineage_2hop /
+    dedup_simhash recipe): documents with identical shingle SETS
+    collapse to one signature row before any pairwise work, so the
+    inverted-index join runs over distinct sets (sf10: 4 992 signatures
+    for 500 000 docs — a 100× cut on each join side, 10 000× on
+    candidate pairs) and doc-level pairs are recovered by joining group
+    membership back at the end.
 
     Returns (mem, sets): mem = (doc_id, sg); sets = (sg, grams
     sorted, ng, n). The signature is xxhash64 over the
@@ -466,12 +463,12 @@ def _gram_signature_frames(spark: SparkSession, sf_dir: str):
         )
     )
     mem = gf.select("doc_id", "sg")
-    # Deterministic representative (r11 ADVICE): if two DISTINCT
-    # sorted gram lists ever collided through the chr(31) join (a
-    # token containing \x1f), F.first vs DuckDB's any_value could
-    # pick different members; min over the lexicographic array
-    # ordering is engine-agreed, with ng derived FROM the chosen
-    # representative so the (grams, ng) pair stays consistent.
+    # Deterministic representative: if two DISTINCT sorted gram lists
+    # ever collided through the chr(31) join (a token containing \x1f),
+    # F.first vs DuckDB's any_value could pick different members; min
+    # over the lexicographic array ordering is engine-agreed, with ng
+    # derived FROM the chosen representative so the (grams, ng) pair
+    # stays consistent.
     sets = gf.groupBy("sg").agg(
         F.min("grams").alias("grams"),
         F.count(F.lit(1)).alias("n"),
@@ -509,17 +506,17 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant #68), so reordered texts stop matching — the standard
     web-dedup formulation.
 
-    r11 (r10 verdict item 8): SIGNATURE-COLLAPSED. The inverted-index
-    pair generation (`_jaccard_pairs` — shuffle key is the shingle,
-    pairs only materialize on co-occurrence) now runs over DISTINCT
-    gram sets rather than documents (see `_gram_signature_frames`),
-    and doc pairs are recovered by two membership joins: cross-set
-    pairs inherit the set-level Jaccard (identical rationals — the
-    value depends only on the sets); same-set pairs are exactly the
-    Jaccard-1.0 rows, emitted directly from membership without any
-    intersection work. This closed the sf10 oracle skip: the DuckDB
-    twin's all-pairs list_intersect went from 500k²-scale (OOM) to
-    4 992² with the same final row set."""
+    SIGNATURE-COLLAPSED: the inverted-index pair generation
+    (`_jaccard_pairs` — shuffle key is the shingle, pairs only
+    materialize on co-occurrence) runs over DISTINCT gram sets rather
+    than documents (see `_gram_signature_frames`), and doc pairs are
+    recovered by two membership joins: cross-set pairs inherit the
+    set-level Jaccard (identical rationals — the value depends only on
+    the sets); same-set pairs are exactly the Jaccard-1.0 rows, emitted
+    directly from membership without any intersection work. This lets
+    the oracle run at sf10: the DuckDB twin's all-pairs list_intersect
+    drops from 500k²-scale (OOM) to 4 992² with the same final row
+    set."""
     mem, sets = _gram_signature_frames(spark, sf_dir)
     items = sets.select(
         F.col("sg").alias("doc_id"),
@@ -558,14 +555,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash",
     survey_row=68,
-    # The oracle mirrors the Spark plan's shape ON PURPOSE: 64
-    # SUM(CASE) aggregate columns over the raw (doc, word) stream.
-    # The previous formulation unnested words x 16 hex chars x 4 bits
-    # into a contrib relation (j, c) — semantically identical, but
-    # 3.2e9 materialized rows at sf10 (500k docs), which OOM-killed
-    # DuckDB in the r10 inventory sweep (the power-iteration-oracle
-    # class: the double unnest is the blowup, not the math). Checked
-    # row-identical to the old formulation at sf0.01 before the swap.
+    # The oracle mirrors the Spark plan's shape ON PURPOSE: 64 SUM(CASE)
+    # aggregate columns over the raw (doc, word) stream. The previous
+    # formulation unnested words x 16 hex chars x 4 bits into a contrib
+    # relation (j, c) — semantically identical, but 3.2e9 materialized
+    # rows at sf10 (500k docs), which OOM-kills DuckDB (the
+    # power-iteration-oracle class: the double unnest is the blowup, not
+    # the math). Checked row-identical to the old formulation at sf0.01
+    # before the swap.
     oracle="""
     WITH words AS (
         SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
@@ -1390,16 +1387,14 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     width produce no shingles, are never contaminated, and survive
     through the anti-join unharmed.
 
-    Shingle construction (round-7, after the first paired bench put
-    this op 11× over DuckDB): the token array is materialized ONCE
-    as a projection column — embedding split() inside the transform
-    lambda re-tokenized the text per shingle position — and the
-    shingle key is xxhash64 over the 8 token values directly
-    (element_at composition) instead of hashing a rebuilt joined
-    string; same fingerprint semantics (tuple hashing is
-    delimiter-unambiguous), 3× less per-position work. Measured
-    1.43 s → 0.45 s for the shingle stage at sf0.1.
-    """
+    Shingle construction (the naive form ran 11× over DuckDB): the token
+    array is materialized ONCE as a projection column — embedding
+    split() inside the transform lambda re-tokenized the text per
+    shingle position — and the shingle key is xxhash64 over the 8 token
+    values directly (element_at composition) instead of hashing a
+    rebuilt joined string; same fingerprint semantics (tuple hashing is
+    delimiter-unambiguous), 3× less per-position work. Measured 1.43 s →
+    0.45 s for the shingle stage at sf0.1. """
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
     n_sh = F.size(F.col("t")) - (_DECON_N - 1)
@@ -1540,7 +1535,7 @@ def pipeline_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PARAGRAPH-granularity dedup (r5 verdict item 8) — the
+    """PARAGRAPH-granularity dedup — the
     RefinedWeb/CCNet signal between doc-exact and shingle-near dedup:
     boilerplate (footers, subscribe banners, cookie notices) repeats
     across pages whose bodies differ, so dedup must run at the
@@ -1763,18 +1758,17 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc embedded in a much larger one scores low symmetric overlap
     but containment 1.0); dedup policy keeps the superset doc.
 
-    r11 (r10 verdict item 8): SIGNATURE-COLLAPSED like the Jaccard
-    twin (`_gram_signature_frames`): the inverted-index intersection
-    runs over distinct gram sets; each qualifying DIRECTED set pair
-    expands to ordered doc pairs through two membership joins
-    (containment ni/n_sub depends only on the sets, so the expanded
-    value is the same rational the per-doc form computed); same-set
-    ordered pairs (x≠y) are containment-1.0 both ways by identity.
-    The size-band prune still cannot apply (small-inside-large IS
-    the signal); the scale lever remains dropping ultra-high-DF
-    shingles before the join — noted, not needed at fixture DF.
-    This closed the sf10 oracle skip (all-pairs list_intersect →
-    |distinct sets|² with the same row multiset)."""
+    SIGNATURE-COLLAPSED like the Jaccard twin
+    (`_gram_signature_frames`): the inverted-index intersection runs
+    over distinct gram sets; each qualifying DIRECTED set pair expands
+    to ordered doc pairs through two membership joins (containment
+    ni/n_sub depends only on the sets, so the expanded value is the same
+    rational the per-doc form computed); same-set ordered pairs (x≠y)
+    are containment-1.0 both ways by identity. The size-band prune still
+    cannot apply (small-inside-large IS the signal); the scale lever
+    remains dropping ultra-high-DF shingles before the join — noted, not
+    needed at fixture DF. This lets the oracle run at sf10 (all-pairs
+    list_intersect → |distinct sets|² with the same row multiset)."""
     mem, sets = _gram_signature_frames(spark, sf_dir)
     a = sets.select(
         F.col("sg").alias("sa"),

@@ -39,18 +39,9 @@ from hive_metadata_collect_spark.registry import register
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 #: modality → decoder(payload: bytes) -> dict of features.
-#: Production installs real codecs here; absent codecs raise.
+#: Production registers its codecs here; an unregistered modality
+#: raises KeyError.
 DECODERS: dict[str, Callable[[bytes], dict]] = {}
-
-
-def _missing_codec(name: str) -> Callable[[bytes], dict]:
-    def decode(payload: bytes) -> dict:
-        raise NotImplementedError(
-            f"{name} codec not installed in this environment; register a "
-            f"decoder in DECODERS[{name!r}] (e.g. Pillow / pyav / torchaudio)"
-        )
-
-    return decode
 
 
 def decode_wav(payload: bytes) -> dict:
@@ -197,8 +188,8 @@ def decode_features(
 ) -> DataFrame:
     """Decode/feature-extract stage over a binary payload column.
 
-    ``decoder=None`` dispatches per-row modality via DECODERS (raises
-    until real codecs are registered); tests pass ``fake_decode``.
+    ``decoder=None`` dispatches per-row modality via DECODERS (an
+    unregistered modality raises KeyError); tests pass ``fake_decode``.
     """
 
     out_schema = (
@@ -906,7 +897,7 @@ def phash_band_pairs(hashes: DataFrame) -> DataFrame:
     """,
 )
 def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-duplicate clustering (r5 verdict item 7) — the
+    """IMAGE near-duplicate clustering — the
     multimodal analog of the text near-dup path, composed from the
     machinery already proven piecewise: mm_image_phash's REAL PPM
     decode + integer-exact 64-bit aHash, the LSH-style band-bucket
@@ -919,25 +910,24 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract) while candidates stay bucket-bounded: the plan has no
     cartesian/all-pairs node anywhere (plan-asserted).
 
-    SIGNATURE COLLAPSE (r10, found by the sf10 inventory sweep): the
-    doc-level band join timed out at sf10 — synthesized images recur
-    every 256 doc_ids, so at 500k docs each identical-hash family
-    holds ~1950 docs and every family's band bucket explodes to
-    C(1950,2) x 4 candidate rows (~1.9e9 total; 900 s wall). Same
-    class as dedup_near_minhash_lsh's r9 fix and
-    dedup_components_star: pair work belongs on DISTINCT signatures.
-    The band join now runs over distinct (hash_lo, hash_hi) groups
-    keyed by their min-doc rep (exactly 256 groups in these fixtures
-    AT ANY SCALE; |distinct images|-bounded in general), components
-    close on the metadata-sized group graph, and doc labels come from
-    one linear hash-group join back (AQE broadcasts the group side
-    when it is small — unhinted, the group count is data-dependent).
-    Doc-level semantics are unchanged: same-hash docs are Hamming-0
-    connected, so doc components == hash-group components, the
-    component min doc == min group rep, and a doc qualifies iff its
-    group has >= 2 docs or its rep has an inter-group edge. Identical
-    rows to the doc-level form at sf0.001-0.1; at sf10 the collapsed
-    form runs in ~80 s where doc-level banding hit the 900 s wall.
+    SIGNATURE COLLAPSE, because a doc-level band join times out at sf10
+    — synthesized images recur every 256 doc_ids, so at 500k docs each
+    identical-hash family holds ~1950 docs and every family's band
+    bucket explodes to C(1950,2) x 4 candidate rows (~1.9e9 total; 900 s
+    wall). Same class as dedup_near_minhash_lsh's signature collapse and
+    dedup_components_star: pair work belongs on DISTINCT signatures. The
+    band join runs over distinct (hash_lo, hash_hi) groups keyed by
+    their min-doc rep (exactly 256 groups in these fixtures AT ANY
+    SCALE; |distinct images|-bounded in general), components close on
+    the metadata-sized group graph, and doc labels come from one linear
+    hash-group join back (AQE broadcasts the group side when it is small
+    — unhinted, the group count is data-dependent). Doc-level semantics
+    are unchanged: same-hash docs are Hamming-0 connected, so doc
+    components == hash-group components, the component min doc == min
+    group rep, and a doc qualifies iff its group has >= 2 docs or its
+    rep has an inter-group edge. Identical rows to the doc-level form at
+    sf0.001-0.1; at sf10 the collapsed form runs in ~80 s where
+    doc-level banding hit the 900 s wall.
 
     Scale: hashes are 1 mapInPandas decode stage; the group-by is the
     only fact-sized shuffle; at 100 TB of images the distinct-hash
@@ -1360,16 +1350,14 @@ def mm_audio_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat from arithmetic alone, so header math, byte order, and the
     clipping comparison are all hash-gated.
 
-    All three stats are integers or a single IEEE division
-    (sum/n), so no accumulation-order risk. The UDF returns the RAW
-    sum/n double and F.round(…, 4) applies JVM-side in the output
-    projection — Python's round() is correctly-rounded decimal
-    (banker's) while both engines' SQL round is half-up via float
-    scaling, so rounding must happen engine-side to stay
-    oracle-parallel (the discipline mm_av_sync_check documents;
-    ADVICE r6 #2). Arrow batch decode → per-doc reduce;
-    embarrassingly parallel at scale, like every mm_* decode
-    stage."""
+    All three stats are integers or a single IEEE division (sum/n), so
+    no accumulation-order risk. The UDF returns the RAW sum/n double and
+    F.round(…, 4) applies JVM-side in the output projection — Python's
+    round() is correctly-rounded decimal (banker's) while both engines'
+    SQL round is half-up via float scaling, so rounding must happen
+    engine-side to stay oracle-parallel (the discipline mm_av_sync_check
+    documents). Arrow batch decode → per-doc reduce; embarrassingly
+    parallel at scale, like every mm_* decode stage."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dec = DECODERS["audio"]
@@ -1478,7 +1466,7 @@ def _synth_corrupt_wav_payloads(df: DataFrame) -> DataFrame:
     """,
 )
 def mm_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CORRUPT-CONTAINER QUARANTINE (round-6 verdict item 9) — the
+    """CORRUPT-CONTAINER QUARANTINE — the
     PERMISSIVE-mode analog of scan_corrupt_records for the binary
     decode path: the mm_* parsers RAISE on malformed payloads, which
     is right for a gated fixture and wrong for ingest, where one bad

@@ -156,15 +156,14 @@ def sim_pairs_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Signed-random-projection LSH: _SRP_BITS sign bits AND-amplified
-#: into one bucket id per table, _SRP_TABLES tables OR-amplified for
-#: recall. Tuned on the fixture threshold (τ=0.45 → per-bit collision
-#: p≈0.65 for true pairs): 7×24 measures recall 0.71–0.86 with ~19 %
-#: of all pairs as candidates (vs ~100 % for the round-4 single-
-#: hyperplane floor buckets — width √(2−2τ)≈1.05 spanned the whole
-#: unit-projection range, degenerating to all-pairs). At a production
-#: τ of 0.8+ the same structure yields <1 % candidates; bits/tables
-#: are the knobs.
+#: Signed-random-projection LSH: _SRP_BITS sign bits AND-amplified into
+#: one bucket id per table, _SRP_TABLES tables OR-amplified for recall.
+#: Tuned on the fixture threshold (τ=0.45 → per-bit collision p≈0.65 for
+#: true pairs): 7×24 measures recall 0.71–0.86 with ~19 % of all pairs
+#: as candidates (vs ~100 % for single-hyperplane floor buckets — width
+#: √(2−2τ)≈1.05 spanned the whole unit-projection range, degenerating to
+#: all-pairs). At a production τ of 0.8+ the same structure yields <1 %
+#: candidates; bits/tables are the knobs.
 _SRP_TABLES = 24
 _SRP_BITS = 7
 
@@ -206,23 +205,21 @@ def lsh_pair_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank — the 100 TB path for #70, expressed natively (no ML-lib
     UDF join). This is the PRODUCTION pair surface (vec_a, vec_b,
     cosine); the registered `sim_pairs_lsh` entry wraps it in the
-    driver-hashable recall contract (r8 verdict item 5).
+    driver-hashable recall contract.
 
     Unit-normalize and hash each vector into _SRP_TABLES bucket ids
-    (_SRP_BITS AND-amplified sign bits each, one NumPy matmul per
-    Arrow batch); self-join on (table, bucket) carrying ONLY
-    (vec_id, table, bucket) — the candidate shuffle moves 24-byte
-    rows, never embeddings (the round-4 form shuffled two 64-float
-    embeddings per candidate ≈ 0.5 GB at sf0.01 — the judge-flagged
-    37 s outlier); distinct the id pairs; join the two embeddings
-    back for the survivors only; exact cosine keeps pairs ≥ τ (false
-    candidates never survive — approx ⊆ exact, asserted in
-    tests/test_edge_cases.py along with recall vs the exact op).
-    The deduped candidate count is published as the observation
-    metric `lsh_candidates` (visible to any QueryExecutionListener —
-    the measure-don't-guess knob for bits/tables tuning).
-    Approximate recall → rows-only driver check.
-    """
+    (_SRP_BITS AND-amplified sign bits each, one NumPy matmul per Arrow
+    batch); self-join on (table, bucket) carrying ONLY (vec_id, table,
+    bucket) — the candidate shuffle moves 24-byte rows, never embeddings
+    (shuffling two 64-float embeddings per candidate moves ≈ 0.5 GB at
+    sf0.01 and took 37 s); distinct the id pairs; join the two
+    embeddings back for the survivors only; exact cosine keeps pairs ≥ τ
+    (false candidates never survive — approx ⊆ exact, asserted in
+    tests/test_edge_cases.py along with recall vs the exact op). The
+    deduped candidate count is published as the observation metric
+    `lsh_candidates` (visible to any QueryExecutionListener — the
+    measure-don't-guess knob for bits/tables tuning). Approximate recall
+    → rows-only driver check. """
     rng = np.random.default_rng(42)
     emb = load_table(spark, sf_dir, "embeddings")
     dim = len(_query_vector(spark, sf_dir))
@@ -282,22 +279,20 @@ def lsh_pair_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIVER-HASHABLE RECALL CONTRACT for the SRP-LSH pair path
-    (r8 verdict item 5 — the agg_approx_distinct exact-regime
-    pattern). The LSH candidate set itself depends on the seeded
-    random planes, which no SQL engine can re-derive, so for four
-    rounds this op was a rows-only driver check with the recall
-    assertion living only in tests/test_edge_cases.py. This form
-    makes the bound DRIVER-VISIBLE: it computes BOTH the LSH pairs
-    (`lsh_pair_candidates` — the production surface, unchanged) and
-    the exact τ-threshold pairs (the sim_pairs_threshold kernel,
-    quadratic — the contract gate runs at oracle scales, the LSH
-    path alone is the 100 TB plan), then emits one hashable row:
-    the exact pair count (DuckDB re-derives it independently),
-    recall ≥ 0.5 (2·hits ≥ exact, integer compare — measured
-    0.71-0.86 over sf0.001-0.1, engine test floor 0.5), and
-    no-false-positives (exact re-rank guarantees approx ⊆ exact;
-    anti-join count must be 0)."""
+    """DRIVER-HASHABLE RECALL CONTRACT for the SRP-LSH pair path (the
+    agg_approx_distinct exact-regime pattern). The LSH candidate set
+    itself depends on the seeded random planes, which no SQL engine can
+    re-derive, so on its own it allows only a rows-only driver check
+    with the recall assertion living in tests/test_edge_cases.py. This
+    form makes the bound DRIVER-VISIBLE: it computes BOTH the LSH pairs
+    (`lsh_pair_candidates` — the production surface, unchanged) and the
+    exact τ-threshold pairs (the sim_pairs_threshold kernel, quadratic —
+    the contract gate runs at oracle scales, the LSH path alone is the
+    100 TB plan), then emits one hashable row: the exact pair count
+    (DuckDB re-derives it independently), recall ≥ 0.5 (2·hits ≥ exact,
+    integer compare — measured 0.71-0.86 over sf0.001-0.1, engine test
+    floor 0.5), and no-false-positives (exact re-rank guarantees approx
+    ⊆ exact; anti-join count must be 0)."""
     lsh = lsh_pair_candidates(spark, sf_dir).select("vec_a", "vec_b")
     exact = sim_pairs_threshold(spark, sf_dir).select("vec_a", "vec_b")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
@@ -436,18 +431,18 @@ def _ann_recall_contract(
     """,
 )
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIVER-HASHABLE RECALL CONTRACT for the IVF ANN path (r8
-    verdict item 5). IVF's neighbor ids depend on the seeded k-means
-    quantizer, which SQL cannot re-derive, so this was a rows-only
-    driver check for four rounds. The contract form runs the IVF
-    top-10 (`ivf_topk_neighbors`, the production surface, unchanged)
-    AND the exact brute-force top-10 (linear — a broadcast query
-    against the corpus, so unlike the pair contracts this gate is
-    itself 100 TB-shaped), then emits one hashable row: returned
-    count, `n ∩ exact-top-10 ≥ 4` (measured 5-8 over sf0.001-0.1;
-    the engine test keeps the tighter 0.5 floor, the contract floor
-    leaves one-hit headroom against k-means float-order jitter), and
-    the exact top-1/top-10-min cosines the oracle recomputes."""
+    """DRIVER-HASHABLE RECALL CONTRACT for the IVF ANN path. IVF's
+    neighbor ids depend on the seeded k-means quantizer, which SQL
+    cannot re-derive, so on its own it allows only a rows-only driver
+    check. The contract form runs the IVF top-10 (`ivf_topk_neighbors`,
+    the production surface, unchanged) AND the exact brute-force top-10
+    (linear — a broadcast query against the corpus, so unlike the pair
+    contracts this gate is itself 100 TB-shaped), then emits one
+    hashable row: returned count, `n ∩ exact-top-10 ≥ 4` (measured 5-8
+    over sf0.001-0.1; the engine test keeps the tighter 0.5 floor, the
+    contract floor leaves one-hit headroom against k-means float-order
+    jitter), and the exact top-1/top-10-min cosines the oracle
+    recomputes."""
     return _ann_recall_contract(
         ivf_topk_neighbors(spark, sf_dir),
         sim_topk_cosine(spark, sf_dir),
@@ -626,14 +621,13 @@ def pq_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIVER-HASHABLE RECALL CONTRACT for the PQ ANN path (r8
-    verdict item 5) — same shape as sim_topk_ivf's contract: run the
-    PQ top-10 (`pq_topk_neighbors`, the production surface,
-    unchanged) and the exact brute-force top-10 (linear), emit one
-    hashable row: returned count, `n ∩ exact-top-10 ≥ 5` (measured
-    6-9 over sf0.001-0.1), and the exact top-1/top-10-min cosines
-    the oracle recomputes. The quantization error PQ trades for its
-    16× code compression is exactly what the bound makes visible."""
+    """DRIVER-HASHABLE RECALL CONTRACT for the PQ ANN path — same shape
+    as sim_topk_ivf's contract: run the PQ top-10 (`pq_topk_neighbors`,
+    the production surface, unchanged) and the exact brute-force top-10
+    (linear), emit one hashable row: returned count, `n ∩ exact-top-10 ≥
+    5` (measured 6-9 over sf0.001-0.1), and the exact top-1/top-10-min
+    cosines the oracle recomputes. The quantization error PQ trades for
+    its 16× code compression is exactly what the bound makes visible."""
     return _ann_recall_contract(
         pq_topk_neighbors(spark, sf_dir),
         sim_topk_cosine(spark, sf_dir),
@@ -928,14 +922,14 @@ def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger corpus, switch to the IVF/PQ paths which prune candidates
     structurally.
 
-    sf10 sweep status (r10): documented VOLUME-BOUND skip on both
-    engines — the probe set is a fixed 1% fraction, so the scored
-    intermediate is |Q|×|corpus| = 4e10 rows at sf10 (~TB-scale
-    shuffle Spark-side, the same product DuckDB-side). That is the
-    exact-brute-force semantics doing what it says; the operator's
-    role is the small-SF exact twin that gates the ANN contracts
-    (sim_topk_ivf / _pq / _ivfpq), each of which IS sf10-swept with
-    bucketed plans. Hash gates at sf0.001–sf1."""
+    sf10 status: a documented VOLUME-BOUND skip on both engines — the
+    probe set is a fixed 1% fraction, so the scored intermediate is
+    |Q|×|corpus| = 4e10 rows at sf10 (~TB-scale shuffle Spark-side, the
+    same product DuckDB-side). That is the exact-brute-force semantics
+    doing what it says; the operator's role is the small-SF exact twin
+    that gates the ANN contracts (sim_topk_ivf / _pq / _ivfpq), each of
+    which IS sf10-swept with bucketed plans. Hash gates at
+    sf0.001–sf1."""
     emb = load_table(spark, sf_dir, "embeddings")
     is_q = F.col("vec_id") % 100 == 0
     q = emb.filter(is_q).select(
@@ -999,10 +993,10 @@ def pipeline_decontaminate_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact scorer as the re-rank, so the operator's contract is
     the scale path's correctness oracle.
 
-    sf10 sweep status (r10): documented VOLUME-BOUND skip on both
-    engines — the 10%-eval split makes the cross-set scoring
-    1.8M × 200k ≈ 3.6e11 cosine evaluations at sf10 by construction
-    (same class as sim_knn_batch). The production scale path is
+    sf10 status: a documented VOLUME-BOUND skip on both engines — the
+    10%-eval split makes the cross-set scoring 1.8M × 200k ≈ 3.6e11
+    cosine evaluations at sf10 by construction (same class as
+    sim_knn_batch). The production scale path is
     `pipeline_decontaminate_embed_lsh`'s SRP-bucketed candidate join
     (whose registered contract re-derives THIS exact hit set, so its
     sf10 oracle shares the wall); hash gates for both live at
@@ -1149,8 +1143,8 @@ def pipeline_decontaminate_embed_lsh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """DRIVER-HASHABLE RECALL/PRECISION CONTRACT for the SRP-bucketed
-    decontamination path (r8 verdict item 5). The flagged set depends
-    on the seeded projection planes, so this was a rows-only driver
+    decontamination path. The flagged set depends on the seeded
+    projection planes, so on its own it allows only a rows-only driver
     check. The contract runs the LSH path (`decontaminate_lsh_hits`,
     the production surface, unchanged) AND the exact twin
     (train×eval cross-set scoring — the eval side is the bounded
@@ -1653,22 +1647,20 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient signal lives in negatives that LOOK positive): for
     each anchor, the most-similar candidate with a DIFFERENT label.
 
-    This is the sim_knn_batch shape with a label-inequality
-    residual: the anchor set is structurally tiny, so it rides a
-    broadcast nest-loop join (`label <> a_label` IS the join
-    predicate — same-label candidates never materialize a score
-    row), cosine is ONE vectorized einsum per Arrow batch over the
-    joined pairs, and top-1 per anchor is a window rank. The corpus
-    never shuffles for the join; the only shuffle is |corpus|×|A|
-    narrow score rows hashed across |A| anchor groups — one plan
-    regardless of anchor count, not A unioned TakeOrdered branches
-    (round-6 verdict "What's wrong" #2). Ranking orders by the
-    UNROUNDED cosine with negative_id tie-break, mirroring the
-    oracle's row_number; F.round(…, 6) applies only in the output
-    projection (ADVICE r6 #1). At training scale (millions of
-    anchors) the same mining runs against the ANN index
-    (sim_topk_ivf) with the label filter applied post-probe — this
-    op is that pipeline's exact oracle."""
+    This is the sim_knn_batch shape with a label-inequality residual:
+    the anchor set is structurally tiny, so it rides a broadcast
+    nest-loop join (`label <> a_label` IS the join predicate —
+    same-label candidates never materialize a score row), cosine is ONE
+    vectorized einsum per Arrow batch over the joined pairs, and top-1
+    per anchor is a window rank. The corpus never shuffles for the join;
+    the only shuffle is |corpus|×|A| narrow score rows hashed across |A|
+    anchor groups — one plan regardless of anchor count, not A unioned
+    TakeOrdered branches. Ranking orders by the UNROUNDED cosine with
+    negative_id tie-break, mirroring the oracle's row_number; F.round(…,
+    6) applies only in the output projection. At training scale
+    (millions of anchors) the same mining runs against the ANN index
+    (sim_topk_ivf) with the label filter applied post-probe — this op is
+    that pipeline's exact oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("a_id"),
@@ -1762,7 +1754,7 @@ def sim_covariance_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair join is per-vector (a.d < b.d), i.e. 64·63/2 products
     per row — the map-side cost of any Gram build.
 
-    r12 exactness fix (hypothesis-found EXACT-half boundary): a
+    Exactness at an EXACT-half boundary (found by hypothesis): a
     generated corpus produced cov·1e6 = 7893.5 exactly, and the two
     engines' round(double, 6) DISAGREE on such values by
     construction — Spark's Round goes through Java
@@ -2039,7 +2031,7 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Empty clusters (possible under adversarial seeds) drop from the
     join identically on both engines.
 
-    MEASURED DEAD-END at scale (r10, warm best-of-3, local[32]): this
+    MEASURED DEAD-END at scale (warm best-of-3, local[32]): this
     pure-Catalyst form costs 4.03 s at sf1 / 8.15 s at sf10 vs the
     array-native twin's 1.28 s / 2.16 s — the K×|corpus| grouped rows
     the assignment shuffles through the argmin window dominate once
@@ -2124,24 +2116,24 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_KMEANS_LLOYD_ORACLE,
 )
 def sim_kmeans_lloyd_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ARRAY-NATIVE twin of sim_kmeans_lloyd (r9 verdict item 6):
-    identical K=4 / 2-iteration integer milli-unit trajectory — same
-    oracle, bit-identical output — but the ASSIGNMENT stage is a
-    map-only Arrow `mapInPandas` over the packed int64 vector instead
-    of posexplode → join(dim) → groupBy(vec,k) → argmin window. The
-    posexplode form shuffles K×|corpus| grouped rows per iteration
-    through a per-vector window; this one shuffles NOTHING to assign —
-    the K×64 integer centroid matrix collects to the driver (256
-    values, bounded by construction — the 25-row-dim-memo discipline)
-    and rides the UDF closure; numpy computes the n×K squared-int64
-    distance block per Arrow batch and argmin's first-minimum, which
-    equals the (dist, k)-ascending tie-break exactly. The UPDATE stage
-    keeps posexplode → groupBy(k, dim): that aggregate collapses
-    map-side to ≤K×64 rows/task, so its shuffle is metadata-sized —
-    it was never the cost. Quantization stays Spark-side (F.round is
-    HALF_UP; numpy rounds half-even) so both twins quantize
-    identically. Measured sf1/sf10 numbers live in BASELINE.md §r10;
-    the faster twin is the bench headliner."""
+    """ARRAY-NATIVE twin of sim_kmeans_lloyd: identical K=4 /
+    2-iteration integer milli-unit trajectory — same oracle,
+    bit-identical output — but the ASSIGNMENT stage is a map-only Arrow
+    `mapInPandas` over the packed int64 vector instead of posexplode →
+    join(dim) → groupBy(vec,k) → argmin window. The posexplode form
+    shuffles K×|corpus| grouped rows per iteration through a per-vector
+    window; this one shuffles NOTHING to assign — the K×64 integer
+    centroid matrix collects to the driver (256 values, bounded by
+    construction — the 25-row-dim-memo discipline) and rides the UDF
+    closure; numpy computes the n×K squared-int64 distance block per
+    Arrow batch and argmin's first-minimum, which equals the (dist,
+    k)-ascending tie-break exactly. The UPDATE stage keeps posexplode →
+    groupBy(k, dim): that aggregate collapses map-side to ≤K×64
+    rows/task, so its shuffle is metadata-sized — it was never the cost.
+    Quantization stays Spark-side (F.round is HALF_UP; numpy rounds
+    half-even) so both twins quantize identically. Measured sf1/sf10
+    numbers live in BASELINE.md (the kmeans twin pairing); the faster
+    twin is the bench headliner."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
@@ -2412,8 +2404,8 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB one raises K (the paper uses K≈10⁵ cells for ~10⁸
     docs) so cells stay ~10³ and the quadratic term is bounded per
     task. Parallelism comes from the cell count, the centroid is a
-    d-vector computed in-cell from data the task already holds (r11;
-    a trainer would hand it over as K×d metadata), and only
+    d-vector computed in-cell from data the task already holds (a
+    trainer would hand it over as K×d metadata), and only
     vec_id/priority — never raw vectors — leave the pair stage. A vector is dropped iff a
     strictly-better same-cell partner exceeds τ, so output accounting
     (per-cell members/dropped/kept) is exactly the paper's dedup-rate
@@ -2428,12 +2420,12 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qv"),
     )
 
-    # Per-cell BLAS Gram stage (r10 rewrite). The previous form
-    # expressed the within-cell pair scan as a label self-join whose
-    # join predicate evaluated the 64-element zip_with dot per pair —
+    # Per-cell BLAS Gram stage. A join form that expresses the
+    # within-cell pair scan as a label self-join, whose join predicate
+    # evaluates the 64-element zip_with dot per pair, is too slow:
     # Catalyst runs higher-order functions INTERPRETED, so the cell's
-    # |cell|² pairs each paid an interpreted array walk: ~4e9 pairs at
-    # sf10 never finished a 30-min budget. (The cost was invisible to
+    # |cell|² pairs each pay an interpreted array walk, and ~4e9 pairs
+    # at sf10 never finish a 30-min budget. (The cost was invisible to
     # the bench until protocol v3: under count() Catalyst pruned the
     # whole pair join out of the executed plan — 2 joins vs 7 — and
     # the committed 1.27 s sf10 number timed that skeleton.) This is
@@ -2447,13 +2439,12 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count — exactly the K-scaling story the docstring's 100 TB note
     # describes (raise K, cells stay ~10³). Measured at sf10:
     # interpreted pair join >1800 s → 18 s end-to-end.
-    # r11: the centroid / centroid-distance / norm² stages moved
-    # INSIDE the cell task. The r10 form built them distributed —
-    # posexplode to (vec, dim, val), a broadcast-join centroid
-    # aggregate, and a re-join of d2 back onto the arrays — but the
-    # cell task already holds the ENTIRE label group, so all three
-    # are one vectorized pass over data already in hand (sf10: ~29 s
-    # of the 47 s wall was these stages; now sub-ms per cell). The
+    # The centroid / centroid-distance / norm² stages run INSIDE the
+    # cell task. Built distributed (posexplode to (vec, dim, val), a
+    # broadcast-join centroid aggregate, and a re-join of d2 back onto
+    # the arrays) they took ~29 s of a 47 s sf10 wall, but the cell
+    # task already holds the ENTIRE label group, so all three are one
+    # vectorized pass over data already in hand (sub-ms per cell). The
     # arithmetic is replicated operation-for-operation so hashes are
     # unchanged: centroid = floor(float64(Σval) · 1.0 / n) per dim —
     # the same IEEE double divide both engines' floor sees — and
@@ -2462,12 +2453,12 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(n·d) colocated work, not an extra distributed stage.
     def _cell_drops(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        # Cell-size guard (r10 advice): one Arrow group materializes
-        # the whole cell in this task (V is n×64 float64, a dots
-        # block n×2048 int64 ≈ n×16 KB). A degenerate/skewed label
-        # distribution must fail loudly with the fix named — raise K
-        # so cells shrink — not OOM the executor. 200k members ≈
-        # 3.2 GB peak block, the edge of a sane task.
+        # Cell-size guard: one Arrow group materializes the whole cell
+        # in this task (V is n×64 float64, a dots block n×2048 int64 ≈
+        # n×16 KB). A degenerate/skewed label distribution must fail
+        # loudly with the fix named — raise K so cells shrink — not OOM
+        # the executor. 200k members ≈ 3.2 GB peak block, the edge of a
+        # sane task.
         if n > 200_000:
             raise ValueError(
                 f"semdedup cell has {n} members; raise the cluster "
@@ -2482,10 +2473,10 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2 = (diff * diff).sum(axis=1)
         n2v = (Vi * Vi).sum(axis=1)
         vid = pdf["vec_id"].to_numpy()
-        # int64 headroom guard (r10 advice, r11 bound): n2 and d2 are
-        # 64-term int64 sums of val², so |val| must stay ≤ 1e8 or the
-        # sums wrap silently; the ×1000 quantization of unit-norm
-        # embeddings gives |val| ≈ 1e3, five orders inside.
+        # int64 headroom guard: n2 and d2 are 64-term int64 sums of
+        # val², so |val| must stay ≤ 1e8 or the sums wrap silently; the
+        # ×1000 quantization of unit-norm embeddings gives |val| ≈ 1e3,
+        # five orders inside.
         if n and int(np.abs(Vi).max(initial=0)) > 100_000_000:
             raise ValueError(
                 f"semdedup quantized value {int(np.abs(Vi).max())} "
@@ -2493,15 +2484,16 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n2/d2 sums; reduce the quantization scale"
             )
         # priority order: (d2, vec_id) lexicographic — "strictly
-        # better" ≡ "earlier row" exactly as the r10 sorted frame
+        # better" ≡ "earlier row" exactly as in a (d2, vec_id)-sorted
+        # frame
         order = np.lexsort((vid, d2))
         Vi = Vi[order]
         n2v = n2v[order]
         labels = pdf["label"].to_numpy()[order]
         # τ compare as a SINGLE float compare on the normalized Gram
-        # (r11): cos = W·Wᵀ with W = V/‖V‖ row-normalized once, and
+        # cos = W·Wᵀ with W = V/‖V‖ row-normalized once, and
         # "cos > 0.3" decides each pair — one dgemm + one pass,
-        # replacing the r10 int64 elementwise chain (rint/astype,
+        # replacing an int64 elementwise chain (rint/astype,
         # 100·dots², 9·outer(n2,n2)) that was 10× the dgemm cost in
         # memory traffic (measured per 20k cell, same session: 58 s →
         # 8.3 s, identical drop sets). Exactness is preserved, not

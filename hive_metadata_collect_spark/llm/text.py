@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hive_metadata_collect_spark.plans.explain import plan_size_bytes
 from hive_metadata_collect_spark.registry import register
 from hive_metadata_collect_spark.sources.fixtures import load_table, spread_small
 
@@ -224,13 +225,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting via content digests (full text + an
     8-token prefix block) for cheap shard-local duplicate candidate
     blocking. The digest is md5 — bit-identical across engines, which
-    upgrades this from the rows-only check it carried for four rounds
-    to a hash-exact oracle (the round-4 form used xxhash64, whose
-    values no other engine reproduces). In production the knob is a
-    cheaper non-cryptographic 64-bit hash (xxhash64 — same plan
-    shape, ~3× cheaper per byte); the blocking SEMANTICS (equal text
-    ⇒ equal fingerprint, shared prefix ⇒ candidate pair) are digest-
-    agnostic. Narrow, shuffle-free, codegen end to end."""
+    makes this a hash-exact oracle check rather than a rows-only one
+    (xxhash64 values are reproduced by no other engine). In production
+    the knob is a cheaper non-cryptographic 64-bit hash (xxhash64 — same
+    plan shape, ~3× cheaper per byte); the blocking SEMANTICS (equal
+    text ⇒ equal fingerprint, shared prefix ⇒ candidate pair) are
+    digest-agnostic. Narrow, shuffle-free, codegen end to end."""
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -642,21 +642,19 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines. At 100 TB this is embarrassingly
     parallel per doc; the only shuffle key is doc_id."""
     docs = load_table(spark, sf_dir, "documents")
-    # r11 (r10 verdict item 2 + the signature-collapse recipe): both
-    # signals are PURE FUNCTIONS OF THE TEXT, so the whole
-    # explode/count pipeline runs over DISTINCT texts only (sf10:
-    # 4 992 of 500 000 docs) and per-doc rows are recovered by one
-    # signature join at the end — AQE picks the join strategy, so an
-    # all-unique corpus degrades to one extra metadata-width
-    # shuffle. Words and trigrams shuffle as xxhash64 DIGESTS, not
-    # text (collisions merge counts within one text only; ~n²/2⁶⁵
-    # odds — negligible and hash-verified at every swept SF); the
-    # gram string never materializes at all. Measured: digests alone
-    # sf10 7.4 s → 4.7 s; + the collapse → 1.2 s. Dead end (r11,
-    # measured): fusing both signals into ONE tagged-struct explode
-    # + single (key, kind, h) shuffle ran 1.6× SLOWER at sf0.1 —
-    # the struct-array concat/explode costs more than the second
-    # exchange saves.
+    # The signature-collapse recipe: both signals are PURE FUNCTIONS OF
+    # THE TEXT, so the whole explode/count pipeline runs over DISTINCT
+    # texts only (sf10: 4 992 of 500 000 docs) and per-doc rows are
+    # recovered by one signature join at the end — AQE picks the join
+    # strategy, so an all-unique corpus degrades to one extra
+    # metadata-width shuffle. Words and trigrams shuffle as xxhash64
+    # DIGESTS, not text (collisions merge counts within one text only;
+    # ~n²/2⁶⁵ odds — negligible and hash-verified at every swept SF);
+    # the gram string never materializes at all. Measured: digests alone
+    # sf10 7.4 s → 4.7 s; + the collapse → 1.2 s. Dead end (measured):
+    # fusing both signals into ONE tagged-struct explode + single (key,
+    # kind, h) shuffle ran 1.6× SLOWER at sf0.1 — the struct-array
+    # concat/explode costs more than the second exchange saves.
     sig = F.xxhash64(F.lower(F.col("text")))
     mem = docs.select("doc_id", sig.alias("sig"))
     reps = mem.groupBy("sig").agg(F.min("doc_id").alias("rep_doc"))
@@ -1271,14 +1269,13 @@ def _bpe_learn_oracle() -> str:
 
 @register("text_bpe_learn", survey_row=71, oracle=_bpe_learn_oracle())
 def text_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary induction, the ITERATED merge loop (round-6
-    verdict item 8 — `text_bpe_pair_counts` is one pair-count step;
-    this learns the actual merge table the tokenizer ships): 4
-    rounds of (corpus-wide weighted pair count → argmax merge under
-    the (count desc, pair asc) total order → non-overlapping
-    left-to-right merge application → recount), emitting one row per
-    learned merge with its pair count at merge time and the
-    post-merge corpus token count.
+    """BPE vocabulary induction, the ITERATED merge loop
+    (`text_bpe_pair_counts` is one pair-count step; this learns the
+    actual merge table the tokenizer ships): 4 rounds of (corpus-wide
+    weighted pair count → argmax merge under the (count desc, pair asc)
+    total order → non-overlapping left-to-right merge application →
+    recount), emitting one row per learned merge with its pair count at
+    merge time and the post-merge corpus token count.
 
     The two design moves that make this Spark-shaped:
 
@@ -1478,25 +1475,22 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles the exploded token stream by word; it re-groups
     by doc_id, which the explode preserves partition-locally."""
     docs = load_table(spark, sf_dir, "documents")
-    # r11 signature collapse: both the corpus word counts (weighted
+    # Signature collapse: both the corpus word counts (weighted
     # by text multiplicity — Σ over docs ≡ Σ over distinct texts ×
     # n_docs) and the per-doc OOV scores (pure text functions given
     # the vocab) compute over DISTINCT texts only; doc rows recover
     # via one signature join. AQE picks the join strategies, so an
     # all-unique corpus degrades to one extra metadata-width shuffle.
     #
-    # r12 (r11 verdict item 4): that degradation is not free when the
-    # base work is this small — the collapse's two extra joins took
-    # the near-unique sf0.1 corpus 0.25 s → 0.63 s while buying 36 %
-    # at the 100×-duplicated sf10. Gate on the plan-time scan size
-    # (zero-cost, the join_multiway_star stats-gate pattern): small
-    # corpora score per-doc directly; past the gate the collapse's
-    # join-backs amortize over the dup mass (fixture sizes: sf0.1
-    # 0.6 MB near-unique, sf1 5.6 MB at 10× dup — gate between).
-    docs_est = int(
-        str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-    if docs_est < _VOCAB_COLLAPSE_GATE_BYTES:
+    # That degradation is not free when the base work is this small —
+    # the collapse's two extra joins took the near-unique sf0.1 corpus
+    # 0.25 s → 0.63 s while buying 36 % at the 100×-duplicated sf10.
+    # Gate on the plan-time scan size (zero-cost, the join_multiway_star
+    # stats-gate pattern): small corpora score per-doc directly; past
+    # the gate the collapse's join-backs amortize over the dup mass
+    # (fixture sizes: sf0.1 0.6 MB near-unique, sf1 5.6 MB at 10× dup —
+    # gate between).
+    if plan_size_bytes(docs) < _VOCAB_COLLAPSE_GATE_BYTES:
         words_str = docs.select(
             F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
         )
@@ -3536,7 +3530,7 @@ def text_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # word counts (lang rides along — constant per doc); every model
     # statistic (class counts, doc lengths, priors, vocab size)
     # derives from this persisted frame, not from re-exploding text.
-    # r11: tokens are xxhash64 DIGESTS end-to-end — the confusion-
+    # Tokens are xxhash64 DIGESTS end-to-end — the confusion-
     # matrix output never needs a word string, so the (doc, word)
     # collapse, the class counts, the vocab size and the scoring
     # join all key on 8 bytes (collisions merge two vocab entries
@@ -3901,8 +3895,8 @@ def text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     later shuffles. Micro-averaging keeps every output an exact
     integer ratio — no per-doc float ever sums."""
     docs = load_table(spark, sf_dir, "documents")
-    # r11 (r10 verdict item 2 + the signature-collapse recipe): two
-    # levers stack here. (1) The gram is an xxhash64 TUPLE DIGEST,
+    # Two levers stack here (digests and the signature-collapse
+    # recipe). (1) The gram is an xxhash64 TUPLE DIGEST,
     # never a string — the 50–80-byte 8-gram text used to be the
     # shuffle/window key; the 8-byte digest is computed map-side
     # inside the transform lambda and the gram string never even

@@ -541,7 +541,7 @@ def udf_sql_declarative(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation so the group totals are integer-exact. The final
     total casts to DOUBLE: Spark's `/100.0` literal is DECIMAL-typed
     and the driver's pandas hash renders Decimal vs DuckDB's float
-    differently (the r8 tpch_q9 class) — presentation-only, the
+    differently (the tpch_q9 driver-hash miss) — presentation-only, the
     cents accumulation stays integer."""
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION hmcs_price_tier(p DOUBLE) "

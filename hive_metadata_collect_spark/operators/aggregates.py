@@ -24,10 +24,6 @@ from hive_metadata_collect_spark.operators.numerics import cents
 from hive_metadata_collect_spark.registry import register
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
-def _revenue():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 @register(
     "agg_pricing_summary",
     survey_row=19,
@@ -59,18 +55,17 @@ def _revenue():
 def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan → filter → 8-measure grouped agg → sort.
 
-    INT64-CENTS PARTIALS + DECIMAL MERGE (r11, executing the r10
-    verdict's prescription): the per-row hot path converts each money
-    column to integer cents ONCE (via the same DECIMAL(12,2) cast the
-    oracle applies, so rounding of the raw doubles is bit-identical
-    to the oracle's ::DECIMAL(12,2)), then every accumulation runs in
-    int64 inside whole-stage codegen — disc_price as cents×(100−d¢)
-    (units 1e-4 $), charge as cents×(100−d¢)×(100+t¢) (units 1e-6 $).
-    Partials are grouped per (flag, status, spark_partition_id()):
-    Catalyst's PullOutNondeterministic projects the pid below the
-    agg, so the partial hash-agg still runs task-local and the
-    exchange carries |groups|×|tasks| tiny rows. The merge casts each
-    int64 partial to exact DECIMAL (×0.01 / ×0.0001 / ×0.000001 —
+    INT64-CENTS PARTIALS + DECIMAL MERGE: the per-row hot path converts
+    each money column to integer cents ONCE (via the same DECIMAL(12,2)
+    cast the oracle applies, so rounding of the raw doubles is
+    bit-identical to the oracle's ::DECIMAL(12,2)), then every
+    accumulation runs in int64 inside whole-stage codegen — disc_price
+    as cents×(100−d¢) (units 1e-4 $), charge as cents×(100−d¢)×(100+t¢)
+    (units 1e-6 $). Partials are grouped per (flag, status,
+    spark_partition_id()): Catalyst's PullOutNondeterministic projects
+    the pid below the agg, so the partial hash-agg still runs task-local
+    and the exchange carries |groups|×|tasks| tiny rows. The merge casts
+    each int64 partial to exact DECIMAL (×0.01 / ×0.0001 / ×0.000001 —
     exact decimal multiplies, never division) and decimal-sums only
     those partials.
 
@@ -87,7 +82,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     side here is DECIMAL precisely so the global total never touches
     int64). Measured sf10 (one microbench session): 7.79 s
     (all-DECIMAL) → 3.28 s (this form), identical hashes; sf1 0.94 s.
-    r12: the cents conversion itself was the next cost — F.round runs
+    The cents conversion itself is the next cost — F.round runs
     a BigDecimal expansion per row × 4 money columns; the multiply-add
     truncating form (numerics.cents) is row-identical on this domain
     and took the sf10 wall 1.97 s → 1.03 s in one idle session
@@ -97,12 +92,12 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Averages: cast the exact decimal sum to DOUBLE *before* dividing
     so both engines round the identical double — DuckDB promotes
     DECIMAL/BIGINT division to DOUBLE before round(,4), while
-    Spark's decimal quotient rounds exact half-up (r9 advisory)."""
+    Spark's decimal quotient rounds exact half-up."""
     li = load_table(spark, sf_dir, "lineitem")
-    # integer cents via multiply-add + truncating cast (numerics.cents,
-    # r12): value-identical to the oracle's ::DECIMAL(12,2) cast on the
+    # integer cents via multiply-add + truncating cast (numerics.cents):
+    # value-identical to the oracle's ::DECIMAL(12,2) cast on the
     # non-negative ≤2-digit money domain, and unlike F.round it never
-    # touches BigDecimal per row (r11's F.round form measured 2× the
+    # touches BigDecimal per row (the F.round form measured 2× the
     # per-row cost at sf10 — exactness proof at the helper)
     rows = li.filter(
         F.col("l_shipdate") <= F.lit("2000-09-01").cast("timestamp")
@@ -172,8 +167,8 @@ def agg_global_nokey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ungrouped global aggregate (single-row result, partial-agg
     tree). Sums accumulate in DECIMAL(12,2) — the single global group
     is the largest accumulation in the inventory (60M rows at sf10,
-    where the r9 sweep measured the raw double sum 4 cents apart
-    between engines); presented as DOUBLE."""
+    where the raw double sum lands 4 cents apart between engines);
+    presented as DOUBLE."""
     li = load_table(spark, sf_dir, "lineitem")
     d = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
     one = F.lit(1).cast("decimal(12,2)")
@@ -203,36 +198,34 @@ def agg_global_nokey(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-column distinct counts.
 
-    BITMAP ROUTE (r11; r10 verdict item 5): both distinct keys here
-    are dense positive integers (partkey ≤ 2M·SF, suppkey ≤ 10k·SF),
-    so each count(DISTINCT) runs as a WORD-BITMAP aggregate —
-    groupBy (flag, key div 64) with bit_or(1 << key mod 64), then
-    Σ bit_count(word) per flag — instead of Catalyst's Expand plan,
-    which widens the 60M-row scan ×3 (one replica per DISTINCT
-    column) and shuffles every distinct (flag, value) pair. The
-    64-bit word per bucket keeps the aggregation buffer a plain
-    LONG, so the whole pipeline stays in codegen HashAggregate —
-    Spark 4's bitmap_construct_agg (4 KB binary buffers) was
-    measured first and REJECTED: binary buffers force SortAggregate
-    (a per-task sort of the full scan; 2.5 s sf10), while this form
-    runs 1.20 s in the same session, vs 3.82 s for the Expand plan.
-    Shuffle volume is |flags| × key_range/64 words, INDEPENDENT of
-    row count — at 100 TB (key range ~2e9) ~94M 24-byte rows ≈
-    2.3 GB, versus Expand's multi-TB widened stream. Exactness:
-    bit-exact (no sketch); NULL keys produce NULL words that bit_or
-    skips exactly as count(DISTINCT) ignores NULLs — but note
-    negative keys would need a signed floor-div bucket (keys here
-    are ≥ 1). Non-integer or sparse-domain keys keep the generic
-    Expand form (the DISTINCT ops elsewhere in this file).
+    BITMAP ROUTE: both distinct keys here are dense positive integers
+    (partkey ≤ 2M·SF, suppkey ≤ 10k·SF), so each count(DISTINCT) runs as
+    a WORD-BITMAP aggregate — groupBy (flag, key div 64) with bit_or(1
+    << key mod 64), then Σ bit_count(word) per flag — instead of
+    Catalyst's Expand plan, which widens the 60M-row scan ×3 (one
+    replica per DISTINCT column) and shuffles every distinct (flag,
+    value) pair. The 64-bit word per bucket keeps the aggregation buffer
+    a plain LONG, so the whole pipeline stays in codegen HashAggregate —
+    Spark 4's bitmap_construct_agg (4 KB binary buffers) was measured
+    first and REJECTED: binary buffers force SortAggregate (a per-task
+    sort of the full scan; 2.5 s sf10), while this form runs 1.20 s in
+    the same session, vs 3.82 s for the Expand plan. Shuffle volume is
+    |flags| × key_range/64 words, INDEPENDENT of row count — at 100 TB
+    (key range ~2e9) ~94M 24-byte rows ≈ 2.3 GB, versus Expand's
+    multi-TB widened stream. Exactness: bit-exact (no sketch); NULL keys
+    produce NULL words that bit_or skips exactly as count(DISTINCT)
+    ignores NULLs — but note negative keys would need a signed floor-div
+    bucket (keys here are ≥ 1). Non-integer or sparse-domain keys keep
+    the generic Expand form (the DISTINCT ops elsewhere in this file).
 
-    r12 ONE-SCAN form: the r11 shape ran one full fact scan PER
+    ONE-SCAN form: a per-column shape runs one full fact scan PER
     distinct column (two scans + a join-back). A 2-way stack() emits
     (key_type, key) pairs from a single scan, the partial hash agg
     collapses them to (flag, type, bucket) words BEFORE the exchange
     (same bucket-bounded shuffle volume as before, both key spaces
     together), and the per-flag pivot is a 10-row max-when. The
-    stack widening costs the same per-row agg probes the second scan
-    paid, but the 60M-row parquet read+decode happens ONCE: measured
+    stack widening costs the same per-row agg probes a second scan
+    pays, but the 60M-row parquet read+decode happens ONCE: measured
     0.92 s → 0.73 s at sf10 in one idle session, collect()-identical;
     n_rows rides the kt=0 channel."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -270,14 +263,13 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ approximate distinct (one shuffle; the 100 TB path for
     high-cardinality keys). The sketch estimate itself is
-    engine-specific, so the DRIVER-hashable contract is the error
-    bound: the op emits the exact counts plus a boolean per key
-    asserting |approx − exact| / exact ≤ 5 %, and the oracle computes
-    the same row with the bools as literal TRUE — DuckDB verifies the
-    bound, not the sketch internals (round-4 verdict item 6; for four
-    rounds these rows were recorded err=no_oracle). The engine-side
-    pytest additionally asserts the numeric ±5 % band
-    (tests/test_edge_cases.py). The exact countDistincts ride the
+    engine-specific, so the DRIVER-hashable contract is the error bound:
+    the op emits the exact counts plus a boolean per key asserting
+    |approx − exact| / exact ≤ 5 %, and the oracle computes the same row
+    with the bools as literal TRUE — DuckDB verifies the bound, not the
+    sketch internals (without the bools these rows would have no
+    oracle). The engine-side pytest additionally asserts the numeric ±5
+    % band (tests/test_edge_cases.py). The exact countDistincts ride the
     same single shuffle as the sketches."""
     li = load_table(spark, sf_dir, "lineitem")
     raw = li.agg(
@@ -336,22 +328,21 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets incl. grand total (Catalyst Expand node).
 
-    EAGER PRE-AGGREGATION BELOW EXPAND (r11; r10 verdict item 3): the
-    naive form Expands the full orders scan ×|grouping sets| BEFORE
-    the partial agg (measured 20.8× DuckDB at sf10 — the Expand
-    triples the 15M-row stream). COUNT/SUM decompose over the finest
-    grouping, so the op first collapses the scan to one row per
-    (status, priority, task) — int64-cents partial sums, the
-    agg_pricing_summary pattern, overflow-bounded by rows-per-task —
-    and runs the grouping-sets Expand over those ~|groups|×|tasks|
-    rows (≈10³) instead of the fact stream. DECIMAL money exactness
-    is preserved because cents are exact and only the tiny merge runs
-    decimal. Semantics identical even with NULL group keys: the
-    pre-agg keeps data-NULL groups as rows and Expand marks subtotal
-    NULLs the same way the direct form does. Measured sf10: 1.85 s →
-    1.00 s, identical hashes (the remainder is the 15M-row scan+agg
-    floor plus two metadata-sized stages — the Expand volume itself
-    is gone: 0.63 s of the 1.00 is the pre-agg stage alone)."""
+    EAGER PRE-AGGREGATION BELOW EXPAND: the naive form Expands the full
+    orders scan ×|grouping sets| BEFORE the partial agg (measured 20.8×
+    DuckDB at sf10 — the Expand triples the 15M-row stream). COUNT/SUM
+    decompose over the finest grouping, so the op first collapses the
+    scan to one row per (status, priority, task) — int64-cents partial
+    sums, the agg_pricing_summary pattern, overflow-bounded by
+    rows-per-task — and runs the grouping-sets Expand over those
+    ~|groups|×|tasks| rows (≈10³) instead of the fact stream. DECIMAL
+    money exactness is preserved because cents are exact and only the
+    tiny merge runs decimal. Semantics identical even with NULL group
+    keys: the pre-agg keeps data-NULL groups as rows and Expand marks
+    subtotal NULLs the same way the direct form does. Measured sf10:
+    1.85 s → 1.00 s, identical hashes (the remainder is the 15M-row
+    scan+agg floor plus two metadata-sized stages — the Expand volume
+    itself is gone: 0.63 s of the 1.00 is the pre-agg stage alone)."""
     o = load_table(spark, sf_dir, "orders")
     c_int = cents("o_totalprice")
     pre = o.groupBy(
@@ -493,8 +484,8 @@ def agg_collect_set_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic set-valued aggregate: sort_array(collect_set()).
 
     The sorted set is joined to one string column: array-typed output
-    is not hashable by pandas-based result canonicalizers (r01 driver
-    errored on ``sort_values`` over lists), and the stringified form
+    is not hashable by pandas-based result canonicalizers (the driver
+    errors on ``sort_values`` over lists), and the stringified form
     is engine-portable while still exercising collect_set + sort_array.
     """
     c = load_table(spark, sf_dir, "customer")
@@ -577,7 +568,7 @@ def agg_decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout). The FINAL values are presented as DOUBLE on both engines:
     the driver's pandas-path hash renders Spark DECIMAL as
     ``Decimal('104958.50')`` but DuckDB DECIMAL as float ``104958.5``
-    (the r8 tpch_q9 hash-miss class), and a 2-dp value after an exact
+    (the tpch_q9 driver-hash miss), and a 2-dp value after an exact
     decimal aggregation converts to the same double on both sides —
     the cast is presentation-only, the accumulation stays exact."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -696,17 +687,16 @@ def agg_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HLL sketches (Datasketches, Spark 3.5+): per-flag
     sketches of l_partkey are built in one pass, then UNIONED into a
-    global estimate without rescanning — the property that lets a
-    100 TB pipeline maintain distinct counts per partition and roll
-    them up to any grain for free. Driver-hashable contract (round-4
-    verdict item 6): each row carries the exact distinct count plus a
-    boolean asserting the sketch estimate lands within ±5 % of it;
-    the oracle recomputes exact counts with the bool as literal TRUE,
-    so DuckDB verifies the BOUND while the sketch mechanics stay
-    engine-side (the union-then-estimate is still what's exercised —
-    a wrong merge would blow the bound). Global exact distinct is a
-    second one-column pass (it is NOT the sum of per-flag exacts;
-    flags share part keys)."""
+    global estimate without rescanning — the property that lets a 100 TB
+    pipeline maintain distinct counts per partition and roll them up to
+    any grain for free. Driver-hashable contract: each row carries the
+    exact distinct count plus a boolean asserting the sketch estimate
+    lands within ±5 % of it; the oracle recomputes exact counts with the
+    bool as literal TRUE, so DuckDB verifies the BOUND while the sketch
+    mechanics stay engine-side (the union-then-estimate is still what's
+    exercised — a wrong merge would blow the bound). Global exact
+    distinct is a second one-column pass (it is NOT the sum of per-flag
+    exacts; flags share part keys)."""
     li = load_table(spark, sf_dir, "lineitem")
     per_flag = li.groupBy("l_returnflag").agg(
         F.hll_sketch_agg("l_partkey").alias("sketch"),
@@ -904,7 +894,7 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the shuffle carries |groups| × |key-range|/32768 bitmaps,
     independent of row count. Oracle = plain COUNT(DISTINCT).
 
-    Plan caveat (r11): bitmap_construct_agg's BINARY buffer is not
+    Plan caveat: bitmap_construct_agg's BINARY buffer is not
     hash-aggregable, so Spark plans SortAggregate — a per-task sort
     of the scan. This op stays as the Spark-4 built-in's contract
     row; the codegen-friendly variant (bit_or over 64-bit words,
@@ -3511,23 +3501,21 @@ def agg_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPEARMAN RANK CORRELATION per nation between a customer's
-    account balance and their realized order spend — the monotone-
-    association readout that survives the heavy-tailed spend
-    distribution where Pearson is outlier-dominated. Tie handling is
-    EXACT: midranks on a DOUBLED scale (midrank×2 = 2·min_rank +
-    ties − 1 — always integral, the agg_mann_whitney_u convention),
-    then CENTERED per row by the exact doubled-midrank mean n+1
-    (Σ doubled midranks = n(n+1) exactly, so Σcx = 0 and the sx·sy
-    cross terms vanish from ρ). Centering is the overflow fix from
-    the r8 advisory: the raw-moment form's n·sxy grew ~4n⁴ and
-    silently wrapped int64 past ~39k rows/group; the centered
-    moments are bounded by n³ (|cx|,|cy| < n), int64-exact to
-    ~2.09M rows per nation — sf ≈ 350 at TPC-H customer counts, and
-    the bound is per GROUP, not per table, so 100 TB wide-and-many-
-    group shapes stay exact. ρ (Pearson on midranks, the tie-correct
-    definition) is one fixed IEEE sequence per nation. Degenerate
-    all-tied arms yield NULL via nullif.
+    """SPEARMAN RANK CORRELATION per nation between a customer's account
+    balance and their realized order spend — the monotone-association
+    readout that survives the heavy-tailed spend distribution where
+    Pearson is outlier-dominated. Tie handling is EXACT: midranks on a
+    DOUBLED scale (midrank×2 = 2·min_rank + ties − 1 — always integral,
+    the agg_mann_whitney_u convention), then CENTERED per row by the
+    exact doubled-midrank mean n+1 (Σ doubled midranks = n(n+1) exactly,
+    so Σcx = 0 and the sx·sy cross terms vanish from ρ). Centering is
+    the overflow fix: the raw-moment form's n·sxy grows ~4n⁴ and
+    silently wraps int64 past ~39k rows/group; the centered moments are
+    bounded by n³ (|cx|,|cy| < n), int64-exact to ~2.09M rows per nation
+    — sf ≈ 350 at TPC-H customer counts, and the bound is per GROUP, not
+    per table, so 100 TB wide-and-many-group shapes stay exact. ρ
+    (Pearson on midranks, the tie-correct definition) is one fixed IEEE
+    sequence per nation. Degenerate all-tied arms yield NULL via nullif.
 
     Scale shape: spend collapses map-side per customer first; the
     two rank windows partition BY NATION (parallel across 25 keys,

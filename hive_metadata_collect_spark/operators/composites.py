@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_metadata_collect_spark.operators.joins import _BROADCAST_GATE_BYTES
+from hive_metadata_collect_spark.plans.explain import plan_size_bytes
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import scratch_dir
+from hive_metadata_collect_spark.session import fixture_tag, scratch_dir
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
@@ -332,7 +333,8 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        # DECIMAL accumulation (r9 sf10 sweep class), DOUBLE out
+        # DECIMAL accumulation (double sums drift between engines at
+        # sf10), DOUBLE out
         F.round(
             F.sum(
                 F.col("l_extendedprice").cast("decimal(12,2)")
@@ -402,9 +404,9 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .groupBy("n_name")
         .agg(
-            # DECIMAL accumulation (the join_multiway_star r7 fix):
+            # DECIMAL accumulation (as in join_multiway_star):
             # round(sum(double),2) flips its last cent by one ULP at
-            # sf1 — caught by the full sf1 sweep this round
+            # sf1
             F.round(
                 F.sum(
                     F.col("l_extendedprice").cast("decimal(18,4)")
@@ -641,7 +643,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative) per the agg_decimal_money convention. The FINAL
     rounded sum is then cast to DOUBLE on both engines: the driver's
     pandas-path hash is dtype-sensitive (Spark DECIMAL -> object
-    Decimals, DuckDB -> float64 — the r8 hash miss), and a post-round
+    Decimals, DuckDB -> float64 — the tpch_q9 hash miss), and a post-round
     2-dp value is exactly representable enough that the double cast
     is presentation-only."""
     p = load_table(spark, sf_dir, "part").filter(
@@ -1004,9 +1006,9 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     late l1 rows of the sole late supplier, so the
     correlated-subquery oracle is unchanged.
 
-    ONE wide exchange (round-8): lineitem barely collapses under the
+    ONE wide exchange: lineitem barely collapses under the
     (order, supplier) partial agg (~1 line per pair in TPC-H), so
-    the old back-to-back groupBys paid two full-width shuffles —
+    back-to-back groupBys would pay two full-width shuffles —
     hash(orderkey, suppkey) then hash(orderkey). An explicit
     repartition on l_orderkey satisfies BOTH aggregations (subset
     rule: hash(orderkey) clusters (orderkey, suppkey) too), so the
@@ -1019,7 +1021,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    # r11: the orders side is HALF THE ORDERS TABLE (status F), so
+    # The orders side is HALF THE ORDERS TABLE (status F), so
     # broadcasting it only pays while it is genuinely small — at sf10
     # that broadcast builds a 7.3M-entry map per the 32 threads and
     # measured 8.3 s vs 6.3 s for joining it SHUFFLE_HASH on the very
@@ -1027,10 +1029,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # satisfies the join AND both aggregations — the orders exchange
     # is the only added cost, and it is narrow). Plan-time stats gate,
     # the same gate join_multiway_star uses.
-    o_est = int(
-        str(o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-    if o_est < _BROADCAST_GATE_BYTES:
+    if plan_size_bytes(o) < _BROADCAST_GATE_BYTES:
         lines = li.join(
             F.broadcast(o), li.l_orderkey == o.o_orderkey
         ).repartition("l_orderkey")
@@ -1110,7 +1109,7 @@ def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS bucket-partitioned on its join key (the pay-once-at-write
     pattern of join_bucketed_colocated), and this op is the plan
     such a deployment runs. The bucketed write happens once at
-    frame-build time per (sf, session) — the serving path never pays
+    frame-build time per (fixture dir, session) — the serving path never pays
     it, mirroring the production write-once amortization; the
     headline bench keeps timing the UNBUCKETED form so the BASELINE
     pairing stays on identical storage for both engines. The table
@@ -1120,8 +1119,7 @@ def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused."""
     import os
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"bk_q21_lineitem_{sf_tag}"
+    name = f"bk_q21_lineitem_{fixture_tag(sf_dir)}"
     if not spark.catalog.tableExists(name):
         (
             load_table(spark, sf_dir, "lineitem")

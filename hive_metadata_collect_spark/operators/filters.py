@@ -43,8 +43,9 @@ def filter_range_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            # DECIMAL accumulation (r9 sf10 sweep class): a single
-            # global group of money products is the q9 shape
+            # DECIMAL accumulation (double sums drift between engines at
+            # sf10): a single global group of money products is the q9
+            # shape
             F.round(
                 F.sum(
                     F.col("l_extendedprice").cast("decimal(12,2)")

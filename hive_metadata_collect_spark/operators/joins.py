@@ -23,8 +23,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.operators.numerics import cents
+from hive_metadata_collect_spark.plans.explain import plan_size_bytes
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import build_dir, scoped_conf
+from hive_metadata_collect_spark.session import (
+    build_dir,
+    fixture_tag,
+    scoped_conf,
+)
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 # Gate threshold for data-derived broadcast candidates: well under the
@@ -77,8 +82,8 @@ def _stats_gated_broadcast(df: DataFrame) -> DataFrame:
     filter selectivity — the same stats autoBroadcastJoinThreshold
     uses) says it's safely small, AQE's accurate runtime decision
     otherwise."""
-    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    return F.broadcast(df) if est < _BROADCAST_GATE_BYTES else df
+    small = plan_size_bytes(df) < _BROADCAST_GATE_BYTES
+    return F.broadcast(df) if small else df
 
 
 @register(
@@ -134,40 +139,37 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     faster locally and one fewer cluster round-trip at any scale.
 
     Both broadcast candidates are fact/dim-derived and scale with the
-    data, so the TOPOLOGY ITSELF is gated on Catalyst's plan-time
-    size estimate: under the gate, the concurrent-broadcast probe-both
-    form above; past it (r9, found on the sf10 re-pair), a DIMS-FIRST
-    restructure — orders ⋈ customers first, the fact joins once with
-    SHUFFLE_HASH hints — because probe-both without broadcasts is two
-    fact-wide SortMergeJoins (measured 13.2× DuckDB at sf10; the
-    restructure is 3.57 → 2.13 s, rows identical). The two
-    schema-bounded dims (nation 25 rows, region 5) are resolved
+    data, so the TOPOLOGY ITSELF is gated on Catalyst's plan-time size
+    estimate: under the gate, the concurrent-broadcast probe-both form
+    above; past it, a DIMS-FIRST restructure — orders ⋈ customers first,
+    the fact joins once with SHUFFLE_HASH hints — because probe-both
+    without broadcasts is two fact-wide SortMergeJoins (measured 13.2×
+    DuckDB at sf10; the restructure is 3.57 → 2.13 s, rows identical).
+    The two schema-bounded dims (nation 25 rows, region 5) are resolved
     driver-side into an isin filter + literal map (_region_nations) —
-    their values are constants of the catalog, not data, so no
-    broadcast wave is spent on them and the ASIA filter pushes down
-    into the customer parquet scan.
+    their values are constants of the catalog, not data, so no broadcast
+    wave is spent on them and the ASIA filter pushes down into the
+    customer parquet scan.
 
     Revenue accumulates in exact DECIMAL(18,4) on both engines (like
-    join_agg_pushdown and agg_decimal_money): a double sum over a
-    ~3.9e9 accumulation at sf1 diverged by one ULP in the 2nd
-    decimal between engines (round-6 verdict "What's wrong" #1);
-    decimal addition is associative, so the gate is scale-stable at
-    any accumulation length. Cast back to DOUBLE after the final
-    round so the output schema is unchanged.
+    join_agg_pushdown and agg_decimal_money): a double sum over a ~3.9e9
+    accumulation at sf1 diverged by one ULP in the 2nd decimal between
+    engines; decimal addition is associative, so the gate is
+    scale-stable at any accumulation length. Cast back to DOUBLE after
+    the final round so the output schema is unchanged.
 
-    r12 close-out (r11 verdict item 3, measured): in the middle-band
-    broadcast topology the fact NEVER shuffles, so a bucketed
-    lineitem layout (the join_bucketed_colocated lever) has no
-    exchange left to remove — the residual vs DuckDB is the scan
-    itself. One idle sf10 session: the bare 3-column scan+agg floor
-    (sum over l_extendedprice/l_discount with NO join) measures
-    1.43–1.49 s while the FULL star join runs 1.29–1.58 s — the join
-    and probe are free against the scan; and 0.45 s of that floor was
-    the per-row F.round BigDecimal in the cents conversion, removed
-    this round (numerics.cents, kernel 0.72 → 0.27 s). Bucketing is
-    therefore recorded as the measured dead end for THIS topology; it
-    remains the right lever when the dim outgrows _DIM_BCAST_GATE_BYTES
-    and the SHJ branch's fact exchange returns."""
+    Bucketing measured as no lever: in the middle-band broadcast
+    topology the fact NEVER shuffles, so a bucketed lineitem layout (the
+    join_bucketed_colocated lever) has no exchange left to remove — the
+    residual vs DuckDB is the scan itself. One idle sf10 session: the
+    bare 3-column scan+agg floor (sum over l_extendedprice/l_discount
+    with NO join) measures 1.43–1.49 s while the FULL star join runs
+    1.29–1.58 s — the join and probe are free against the scan; and 0.45
+    s of that floor was the per-row F.round BigDecimal in the cents
+    conversion, which numerics.cents removes (kernel 0.72 → 0.27 s).
+    Bucketing is therefore recorded as the measured dead end for THIS
+    topology; it remains the right lever when the dim outgrows
+    _DIM_BCAST_GATE_BYTES and the SHJ branch's fact exchange returns."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -179,9 +181,7 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust_asia = c.filter(
         F.col("c_nationkey").isin([k for k, _ in pairs])
     ).select("c_custkey", name_of[F.col("c_nationkey")].alias("n_name"))
-    o_est = int(
-        str(o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
+    o_est = plan_size_bytes(o)
     if o_est < _BROADCAST_GATE_BYTES:
         # small-scale topology: both dims broadcast CONCURRENTLY and
         # lineitem probes them in one codegen span (three serial waves)
@@ -192,37 +192,36 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == cust_asia.c_custkey,
         )
     else:
-        # scale topology (r9, found on the sf10 re-pair): past the
-        # broadcast gate the probe-both form degraded to TWO fact-wide
-        # SortMergeJoins (lineitem sorted+shuffled on orderkey, the
-        # ~30%-of-fact intermediate re-shuffled on custkey — 13.2x
-        # DuckDB at sf10). Dims-first instead: orders ⋈ customers
-        # FIRST (both orders-of-magnitude smaller than the fact), so
-        # lineitem joins exactly once, on one key, and SHUFFLE_HASH
-        # hints skip the O(n log n) sorts SMJ would pay on every side
-        # (per-partition build side is the joined dim — tiny). The
-        # serial-depth argument for probe-both only holds while both
-        # sides BROADCAST; measured 3.57 → 2.13 s at sf10, rows
-        # identical. At 100 TB this is the same story: one fact
-        # shuffle on the join key, never two.
+        # scale topology: past the broadcast gate the probe-both form
+        # degrades to TWO fact-wide SortMergeJoins (lineitem
+        # sorted+shuffled on orderkey, the ~30%-of-fact intermediate
+        # re-shuffled on custkey — 13.2x DuckDB at sf10). Dims-first
+        # instead: orders ⋈ customers FIRST (both orders-of-magnitude
+        # smaller than the fact), so lineitem joins exactly once, on one
+        # key, and SHUFFLE_HASH hints skip the O(n log n) sorts SMJ
+        # would pay on every side (per-partition build side is the
+        # joined dim — tiny). The serial-depth argument for probe-both
+        # only holds while both sides BROADCAST; measured 3.57 → 2.13 s
+        # at sf10, rows identical. At 100 TB this is the same story: one
+        # fact shuffle on the join key, never two.
         #
-        # r11 (r10 verdict item 4, measured): within the dims-first
-        # restructure there is a MIDDLE band where the joined dim
-        # (orderkey → n_name, a filtered-orders subset with narrower
-        # rows, so always ≤ ~0.35 × o_est bytes) still fits a
-        # broadcast even though raw filtered orders do not: broadcast
-        # it and the FACT NEVER SHUFFLES AT ALL — one codegen span
-        # scans lineitem, probes the dim map, and partial-aggregates
-        # per nation (measured sf10: 3.27 s SHJ → 1.41 s broadcast-dim
-        # in one session). Past _DIM_BCAST_GATE_BYTES of o_est the SHJ
-        # form remains (at 100 TB the dim is ~1e10 rows — the one
-        # fact shuffle on one key is the honest plan). An eager
-        # per-orderkey pre-agg below the join (join_agg_pushdown's
-        # rewrite) was ALSO measured here and REJECTED: 3.39 s vs
-        # 2.63 s baseline — with only ~6 % of orderkeys surviving the
-        # date×region dims, the pre-agg pays a 15M-group hash agg for
-        # keys the join then discards (eager agg wins when the join
-        # keeps most keys, loses under selective dims).
+        # Measured: within the dims-first restructure there is a MIDDLE
+        # band where the joined dim (orderkey → n_name, a
+        # filtered-orders subset with narrower rows, so always ≤ ~0.35 ×
+        # o_est bytes) still fits a broadcast even though raw filtered
+        # orders do not: broadcast it and the FACT NEVER SHUFFLES AT ALL
+        # — one codegen span scans lineitem, probes the dim map, and
+        # partial-aggregates per nation (measured sf10: 3.27 s SHJ →
+        # 1.41 s broadcast-dim in one session). Past
+        # _DIM_BCAST_GATE_BYTES of o_est the SHJ form remains (at 100 TB
+        # the dim is ~1e10 rows — the one fact shuffle on one key is the
+        # honest plan). An eager per-orderkey pre-agg below the join
+        # (join_agg_pushdown's rewrite) was ALSO measured here and
+        # REJECTED: 3.39 s vs 2.63 s baseline — with only ~6 % of
+        # orderkeys surviving the date×region dims, the pre-agg pays a
+        # 15M-group hash agg for keys the join then discards (eager agg
+        # wins when the join keeps most keys, loses under selective
+        # dims).
         dim = o.join(
             cust_asia.hint("shuffle_hash"),
             F.col("o_custkey") == cust_asia.c_custkey,
@@ -520,8 +519,8 @@ def _rev_e4(li: DataFrame) -> DataFrame:
     the revenue term is a per-row function of the fact side only, so
     computing it pre-exchange narrows the big shuffle from
     (key, extendedprice, discount) 24 B/row to (key, rev_e4) 16 B/row
-    — measured at sf10 the skew-twin join drops 3.86 → 2.8 s (r12;
-    the pre-agg-below-join rewrite measured 3.2–4.5 s and a 15M-row
+    — measured at sf10 the skew-twin join drops 3.86 → 2.8 s (the
+    pre-agg-below-join rewrite measured 3.2–4.5 s and a 15M-row
     dim broadcast 8.7–9.4 s, both recorded dead ends)."""
     rev_e4 = cents("l_extendedprice") * (100 - cents("l_discount"))
     return li.select("l_orderkey", rev_e4.alias("rev_e4"))
@@ -529,16 +528,16 @@ def _rev_e4(li: DataFrame) -> DataFrame:
 
 def _money_rollup_e4(joined: DataFrame, key: str) -> DataFrame:
     """Revenue rollup per `key` in int64 1e-4$-unit partials with a
-    DECIMAL merge (the agg_pricing_summary pattern, r11): per-(key,
-    task) int64 sums are rows-per-task-bounded (max ~1.1e9/row ×
-    <7e6 rows/task — 1000× int64 headroom), only the |keys|-row merge
-    runs decimal, and the integer units are the same rationals the
-    oracle's DECIMAL(12,2) products produce, so hashes are unchanged.
-    Shared by the skew-join twins (fact side pre-narrowed to a
-    `rev_e4` column by `_rev_e4`); join_multiway_star inlines the
-    same shape with its own key. r12: cents conversion via
-    numerics.cents (multiply-add + truncating cast) — F.round's
-    per-row BigDecimal was 0.45 s of a 0.72 s 60M-row agg at sf10."""
+    DECIMAL merge (the agg_pricing_summary pattern): per-(key, task)
+    int64 sums are rows-per-task-bounded (max ~1.1e9/row × <7e6
+    rows/task — 1000× int64 headroom), only the |keys|-row merge runs
+    decimal, and the integer units are the same rationals the oracle's
+    DECIMAL(12,2) products produce, so hashes are unchanged. Shared by
+    the skew-join twins (fact side pre-narrowed to a `rev_e4` column by
+    `_rev_e4`); join_multiway_star inlines the same shape with its own
+    key. Cents conversion via numerics.cents (multiply-add + truncating
+    cast) — F.round's per-row BigDecimal was 0.45 s of a 0.72 s 60M-row
+    agg at sf10."""
     part = joined.groupBy(key, F.spark_partition_id().alias("_pid")).agg(
         F.sum("rev_e4").alias("s_e4"), F.count(F.lit(1)).alias("n")
     )
@@ -616,7 +615,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders,
         (li["l_orderkey"] == orders["o_orderkey"]) & (li["salt"] == orders["salt"]),
     )
-    # int64-cents partials + DECIMAL merge (r11) — see _money_rollup_e4
+    # int64-cents partials + DECIMAL merge — see _money_rollup_e4
     return _money_rollup_e4(joined, "o_orderpriority")
 
 
@@ -634,42 +633,41 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_skew_unsalted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The unsalted twin of `join_skew_salted` (round-4 verdict item
-    7): the SAME query with no salt and no dim replication, so the
-    salted demo's replication + wider-key overhead is measured
-    against the best plain shuffled join. Round-6 change (r5 verdict
-    item 4): the plain form now carries the same `shuffle_hash` hint
-    as the salted demo — AQE's default pick here is sort-merge, and
-    the hinted shuffled-hash form measured 25–40 % faster
-    in-session at BOTH sf0.1 (0.56 → 0.37 s) and sf1 (1.04 → 0.81 s;
-    broadcast measured worse at 1.13 s, shuffle compression off
-    worse, 64 shuffle partitions worse — all recorded in SURVEY §12).
-    Hinting both twins also makes the pair a controlled experiment:
-    identical join algorithm, so q_salted_join − q_unsalted_join is
-    the cost of salting itself, not SMJ-vs-SHJ. r12: both twins
-    pre-narrow the fact side to (l_orderkey, rev_e4) before the
-    exchange (`_rev_e4`) — sf10 3.86 → 2.8 s; the pre-agg-below-join
-    rewrite (groupBy(l_orderkey) then join 15M×15M) measured
-    3.2–4.5 s, a 15M-row dim broadcast 8.7–9.4 s, and a 32-partition
-    exchange no better than 16 — all recorded dead ends. Sort-merge remains
-    the right default at 100 TB when neither side's per-partition
-    hash table fits in memory — the hint encodes measured local-mode
-    knowledge, not a universal rule (the `preferSortMergeJoin=false`
-    session-wide variant stays a documented dead end, r5). r13 closed
-    the last two r12-verdict candidates: (1) explicit sort-merge at
-    sf10 measured 3.70 s vs this form's 3.23–3.51 s in the same idle
-    session (collect()-identical) — SHJ stays the winner; (2) AQE
-    skew-split cannot fire here by construction — the whole sf10 fact
-    exchange is ~1 GB across 16 partitions (~60 MB each), far under
-    the 256 MB skewedPartitionThresholdInBytes, and l_orderkey has no
-    hot key (TPC-H uniform); the salted twin IS the repo's skew
-    demonstration. The residual vs DuckDB (~3.2 s vs ~0.9 s at sf10)
-    is genuinely the cost of shuffling 60M narrow rows through a
-    local-mode pull-based shuffle vs a single-process in-memory hash
-    join — formally ACCEPTED with this dead-end table (BASELINE.md
-    r13). Results
-    are provably identical — both declare the same oracle, and
-    tests/test_plans.py asserts salted == unsalted row sets."""
+    """The unsalted twin of `join_skew_salted`: the SAME query with no
+    salt and no dim replication, so the salted demo's replication +
+    wider-key overhead is measured against the best plain shuffled join.
+    The plain form carries the same `shuffle_hash` hint as the salted
+    demo — AQE's default pick here is sort-merge, and the hinted
+    shuffled-hash form measured 22–40 % faster across sessions
+    (in-session: sf0.1 0.56 → 0.37 s, sf1 1.04 → 0.81 s). At sf1 the
+    other levers measured no better: a dim broadcast 1.13 s, shuffle
+    compression off worse, 64 shuffle partitions worse, and
+    union-vs-explode dim replication a wash. Hinting both twins also
+    makes the pair a controlled experiment: identical join algorithm, so
+    q_salted_join − q_unsalted_join is the cost of salting itself, not
+    SMJ-vs-SHJ. Both twins pre-narrow the fact side to (l_orderkey,
+    rev_e4) before the exchange (`_rev_e4`) — sf10 3.86 → 2.8 s; the
+    pre-agg-below-join rewrite (groupBy(l_orderkey) then join 15M×15M)
+    measured 3.2–4.5 s, a 15M-row dim broadcast 8.7–9.4 s, and a
+    32-partition exchange no better than 16 — all recorded dead ends.
+    Sort-merge remains the right default at 100 TB when neither side's
+    per-partition hash table fits in memory — the hint encodes measured
+    local-mode knowledge, not a universal rule. Setting
+    `preferSortMergeJoin=false` session-wide instead wins 28 % on the
+    isolated big join but is flat-to-worse suite-wide, a dead end. Two
+    more levers measured: (1) explicit sort-merge at sf10 measured 3.70
+    s vs this form's 3.23–3.51 s in the same idle session
+    (collect()-identical) — SHJ stays the winner; (2) AQE skew-split
+    cannot fire here by construction — the whole sf10 fact exchange is
+    ~1 GB across 16 partitions (~60 MB each), far under the 256 MB
+    skewedPartitionThresholdInBytes, and l_orderkey has no hot key
+    (TPC-H uniform); the salted twin IS the repo's skew demonstration.
+    The residual vs DuckDB (~3.2 s vs ~0.9 s at sf10) is genuinely the
+    cost of shuffling 60M narrow rows through a local-mode pull-based
+    shuffle vs a single-process in-memory hash join — accepted with this
+    dead-end table (BASELINE.md, acceptance rows). Results are provably
+    identical — both declare the same oracle, and tests/test_plans.py
+    asserts salted == unsalted row sets."""
     li = _rev_e4(load_table(spark, sf_dir, "lineitem"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -678,7 +676,7 @@ def join_skew_unsalted(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.hint("shuffle_hash"),
         li["l_orderkey"] == orders["o_orderkey"],
     )
-    # int64-cents partials + DECIMAL merge (r11) — see _money_rollup_e4
+    # int64-cents partials + DECIMAL merge — see _money_rollup_e4
     return _money_rollup_e4(joined, "o_orderpriority")
 
 
@@ -707,11 +705,11 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderstatus")
-    # Table names carry the scale factor so builds at different
+    # Table names carry the fixture dir's tag so builds at different
     # sf_dirs never replace each other's catalog entries; each build
     # writes its buckets into a fresh dir, so an earlier frame keeps
     # its files.
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    sf_tag = fixture_tag(sf_dir)
     for name, df, key in (
         (f"bk_lineitem_{sf_tag}", li, "l_orderkey"),
         (f"bk_orders_{sf_tag}", orders, "o_orderkey"),
@@ -886,7 +884,7 @@ def join_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_orderkey), collapsing the 4-rows-per-order fact to one row per
     key BEFORE the join probes orders; the final per-priority rollup
     then sums pre-aggregated partials. Revenue is computed on exact
-    DECIMALs (ADVICE r5): the two-level sum reorders addition vs the
+    DECIMALs: the two-level sum reorders addition vs the
     one-level salted/unsalted twins, so a double formulation could
     flip the rounded last ULP at larger scale factors — decimal
     addition is associative, making the eager-agg rewrite provably
@@ -1886,17 +1884,16 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POINT-IN-POLYGON spatial join — the geofence/zone-assignment
     primitive (which customers fall inside each sales territory),
     completing the spatial trio beside `join_spatial_nearest` and
-    `join_spatial_radius`. Ray casting entirely in INTEGERS: points
-    live on the synthesized integer lattice, polygon rings are
-    literal integer vertices (`_PIP_EDGES` — one non-convex ring, one
-    triangle), and the +x ray-edge crossing test is the
-    cross-multiplied form sign((x1−px)·dy + (x2−x1)·(py−y1)) =
-    sign(dy) — no division, no float, so the odd-crossings parity is
-    bit-identical on both engines (max |product| ≈ 1.3e9 ≪ 2⁶³).
-    The zone balance rollup likewise sums integer CENTS (the house
-    money convention — r8 advisory: a pre-round DOUBLE sum over 1e5+
-    members is engine-order-dependent and drifts toward the 0.005
-    rounding boundary as membership grows) and divides back once.
+    `join_spatial_radius`. Ray casting entirely in INTEGERS: points live
+    on the synthesized integer lattice, polygon rings are literal
+    integer vertices (`_PIP_EDGES` — one non-convex ring, one triangle),
+    and the +x ray-edge crossing test is the cross-multiplied form
+    sign((x1−px)·dy + (x2−x1)·(py−y1)) = sign(dy) — no division, no
+    float, so the odd-crossings parity is bit-identical on both engines
+    (max |product| ≈ 1.3e9 ≪ 2⁶³). The zone balance rollup likewise sums
+    integer CENTS (the house money convention — a pre-round DOUBLE sum
+    over 1e5+ members is engine-order-dependent and drifts toward the
+    0.005 rounding boundary as membership grows) and divides back once.
 
     Scale shape: the edge table is O(vertices) metadata — BROADCAST;
     the crossing evaluation is map-side per (point, edge) with the

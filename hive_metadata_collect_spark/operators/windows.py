@@ -712,8 +712,8 @@ def win_vwap_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents — price is cents-exact, quantity integer-valued): a double
     running sum diverged by one ULP in the 4th decimal at sf0.1
     (DuckDB's segment-tree window state associates the additions
-    differently than Spark's running frame; same class as the r6
-    join_multiway_star finding). Integer addition is associative, so
+    differently than Spark's running frame; same class as the
+    join_multiway_star ULP drift). Integer addition is associative, so
     the gate is stable at any accumulation length — and the 4-decimal
     HALF_UP rounding is ALSO integer ((200·Σpq + Σq) DIV (2·Σq)):
     even on identical quotient doubles, Spark's BigDecimal-of-
@@ -1673,23 +1673,21 @@ def win_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def win_rolling_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLING OLS TREND — per priority class, the 30-day
-    least-squares slope of daily revenue (the drift detector behind
-    "is this series trending or just noisy", sharper than a moving
-    average because it has units: cents/day). All four sufficient
-    statistics (Σx, Σy, Σxy, Σx²) are EXACT int64 running-frame sums
-    — x is days since 1994-01-01 (≤ ~2.5e3), y is daily revenue in
-    integer cents. The slope is then computed on PER-FRAME-REBASED
-    x' = x − min(x over frame) (OLS slope is translation-invariant
-    in x), derived algebraically from the raw frame sums: Σx' =
-    Σx−n·m, Σx'y = Σxy−m·Σy, Σx'² = Σxx−2mΣx+nm². The r8 advisory
-    found the un-rebased n·Σxy within ~2× of int64 max at
-    sf1000-class daily revenue; after rebasing, x' < 30·gap so every
-    product in (nΣx'y − Σx'Σy)/(nΣx'² − (Σx')²) carries ~2 extra
-    orders of magnitude of headroom (largest intermediate is the raw
-    Σxy ≈ 1.5e17 at sf1000, exact to sf ≈ 50000). Single-point
-    frames yield NULL via nullif — no divide-by-zero on either
-    engine.
+    """ROLLING OLS TREND — per priority class, the 30-day least-squares
+    slope of daily revenue (the drift detector behind "is this series
+    trending or just noisy", sharper than a moving average because it
+    has units: cents/day). All four sufficient statistics (Σx, Σy, Σxy,
+    Σx²) are EXACT int64 running-frame sums — x is days since 1994-01-01
+    (≤ ~2.5e3), y is daily revenue in integer cents. The slope is then
+    computed on PER-FRAME-REBASED x' = x − min(x over frame) (OLS slope
+    is translation-invariant in x), derived algebraically from the raw
+    frame sums: Σx' = Σx−n·m, Σx'y = Σxy−m·Σy, Σx'² = Σxx−2mΣx+nm². The
+    un-rebased n·Σxy comes within ~2× of int64 max at sf1000-class daily
+    revenue; after rebasing, x' < 30·gap so every product in (nΣx'y −
+    Σx'Σy)/(nΣx'² − (Σx')²) carries ~2 extra orders of magnitude of
+    headroom (largest intermediate is the raw Σxy ≈ 1.5e17 at sf1000,
+    exact to sf ≈ 50000). Single-point frames yield NULL via nullif — no
+    divide-by-zero on either engine.
 
     Scale shape: the aggregate-before-window discipline — rows
     collapse to the (priority, day) DOMAIN first (map-side combined;
@@ -1749,11 +1747,11 @@ def win_rolling_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "priority",
         "day_x",
         F.col("n").cast("long").alias("n_days"),
-        # dollars/day at 4 dp: cents/day at 6 dp needed ~16
-        # significant digits at sf10 slope magnitudes, where the two
-        # engines' round() of the SAME double diverge in the last
-        # digit (r9 sf10 sweep) - presentation stays ~4 digits clear
-        # of the double precision edge through sf1000
+        # dollars/day at 4 dp: cents/day at 6 dp needed ~16 significant
+        # digits at sf10 slope magnitudes, where the two engines'
+        # round() of the SAME double diverge in the last digit -
+        # presentation stays ~4 digits clear of the double precision
+        # edge through sf1000
         F.round(
             (F.col("n") * F.col("sxyp") - F.col("sxp") * F.col("sy")) * 1.0
             / denom
@@ -1886,7 +1884,7 @@ def win_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             # dollars at 2 dp (was cents at 4 dp): sf10 levels reach
             # ~5e11 cents, where round(double, 4) sits past the
             # 16-sig-digit double edge and the engines' roundings
-            # diverge in the last digit (r9 sf10 sweep)
+            # diverge in the last digit at sf10
             F.round(F.col("st.lvl") / 100.0, 2).alias("level_end"),
             F.round(F.col("st.trend") / 100.0, 2).alias("trend_end"),
             F.round((F.col("st.lvl") + 3 * F.col("st.trend")) / 100.0, 2)

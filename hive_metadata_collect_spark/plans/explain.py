@@ -4,7 +4,8 @@ The engine's scale story rests on verifiable plan properties —
 filters reaching the parquet scan, dims broadcasting, top-k never
 globally sorting, aggregates running partial+final. These helpers
 expose the executed plan as text so tests (tests/test_plans.py) can
-assert those properties instead of trusting comments.
+assert those properties instead of trusting comments, and give the
+operators that pick a join topology the plan-time size estimate.
 """
 
 from __future__ import annotations
@@ -17,8 +18,12 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's plan-time size estimate of ``df`` (file sizes ×
+    filter selectivity, the stats autoBroadcastJoinThreshold uses).
+    Reading it plans the query but runs no job."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(str(stats.sizeInBytes()))
 
 
 def scan_summary(df: DataFrame) -> str:
@@ -56,10 +61,6 @@ def shuffled_hash_joins(df: DataFrame) -> list[tuple[str, str, list[str]]]:
 
 def _seq(scala_seq) -> list:
     return [scala_seq.apply(i) for i in range(scala_seq.size())]
-
-
-def has_node(df: DataFrame, node: str) -> bool:
-    return node in physical_plan(df)
 
 
 def assert_plan(df: DataFrame, *, contains: tuple[str, ...] = (), absent: tuple[str, ...] = ()) -> None:

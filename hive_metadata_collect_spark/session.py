@@ -33,7 +33,9 @@ Scale notes (the configs that matter at 100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import tempfile
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -98,6 +100,10 @@ def _runtime_confs(profile: dict) -> dict[str, str]:
         # by this — its binary buffer plans as SortAggregate outright,
         # which is why agg_count_distinct uses bit_or word bitmaps.)
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
+        # events.ts ships as parquet TIMESTAMP(NANOS), which Spark's
+        # reader rejects unless read as a raw long; fixtures.normalize_ts
+        # turns that long into µs.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
 
 
@@ -176,6 +182,15 @@ def scratch_dir(spark: SparkSession) -> str:
 def build_dir(spark: SparkSession) -> str:
     """A fresh directory for the files of one frame build."""
     return tempfile.mkdtemp(dir=scratch_dir(spark))
+
+
+def fixture_tag(sf_dir: str) -> str:
+    """Identifier-safe key of a fixture dir for staged data and table
+    names: its basename plus a short hash of its resolved path, so two
+    dirs with the same name never share a staged copy."""
+    base = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
+    digest = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+    return f"{base}_{digest}"
 
 
 def stage_once(spark: SparkSession, name: str, write: Callable[[str], None]) -> str:

@@ -18,7 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.session import build_dir, scratch_dir, stage_once
+from hive_metadata_collect_spark.session import (
+    build_dir,
+    fixture_tag,
+    scratch_dir,
+    stage_once,
+)
 
 # The public Hive metastore schema tables a collector reads
 # (Apache Hive metastore DDL — public knowledge; SURVEY.md §1.1).
@@ -110,8 +115,7 @@ def _derby_url(spark: SparkSession, sf_dir: str) -> str:
     """JDBC URL of the session's embedded Derby metastore for ``sf_dir``."""
     import os
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(scratch_dir(spark), f"derby_{sf_tag}")
+    path = os.path.join(scratch_dir(spark), f"derby_{fixture_tag(sf_dir)}")
     return f"jdbc:derby:{path};create=true"
 
 
@@ -273,8 +277,9 @@ def src_kafka_shaped_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("int").alias("timestampType"),
         ).write.parquet(path)
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    feed_dir = stage_once(spark, f"kafka_feed_{sf_tag}", stage_feed)
+    feed_dir = stage_once(
+        spark, f"kafka_feed_{fixture_tag(sf_dir)}", stage_feed
+    )
 
     kafka_schema = (
         "key binary, value binary, topic string, partition int, "

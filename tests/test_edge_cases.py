@@ -441,7 +441,7 @@ def test_storage_size_matches_os_stat(spark, sf_dir):
 
 
 def test_storage_size_multifile_dir_layout(spark, tmp_path):
-    """ADVICE r5 (medium): on the sf10x directory layout
+    """On the sf10x directory layout
     (`lineitem.parquet/part-00.parquet`) every part file must roll up
     under its TABLE directory's name — the old filename-only regex
     collapsed all multi-file tables into an empty-string group."""
@@ -523,11 +523,10 @@ def test_stratified_sample_rates(spark, sf_dir):
 
 
 def test_lineage_sql_cte_aliases_excluded(spark, sf_dir):
-    """Round-6 grammar hardening (r5 verdict item 3): the lineage
-    parser must never emit a CTE alias as a source table — the table
-    INSIDE the CTE body is the true source — and must parse INSERT
-    OVERWRITE targets and backticked identifiers like the plain
-    forms."""
+    """Lineage grammar: the parser must never emit a CTE alias as a
+    source table — the table INSIDE the CTE body is the true source —
+    and must parse INSERT OVERWRITE targets and backticked identifiers
+    like the plain forms."""
     rows = OPS["cat_lineage_sql"].fn(spark, sf_dir).collect()
     srcs = {r["src_table"] for r in rows}
     dsts = {r["dst_table"] for r in rows}
@@ -673,7 +672,7 @@ def test_lineage_cycles_girth_bounds(spark, sf_dir):
 
 
 def test_lineage_sql_qualified_and_quoted_identifiers(spark, sf_dir):
-    """Round-7 lineage grammar (r6 verdict item 6): db-qualified and
+    """Lineage grammar: db-qualified and
     ANSI-double-quoted identifiers. `db.t` and `t` must resolve to
     DISTINCT sources (different src_db, same src_table), both quote
     styles must normalize to the bare table name, and the db prefix
@@ -964,7 +963,7 @@ def test_substring_spans_island_merge(spark, tmp_path):
 
 
 def test_cents_kernel_matches_round_half_up(spark):
-    """numerics.cents (r12: multiply-add + truncating cast) must be
+    """numerics.cents (multiply-add + truncating cast) must be
     row-identical to the F.round(x*100, 0) form it replaced on the
     whole non-negative ≤2-fractional-digit money domain — exhaustively
     over every cent value to $20,000.00 plus the TPC-H extendedprice

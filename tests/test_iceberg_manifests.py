@@ -106,8 +106,7 @@ def test_bad_magic_and_codec_raise():
     with pytest.raises(ValueError, match="magic"):
         read_ocf(b"PAR1" + b"\x00" * 32)
     # non-null codec in the file-metadata map must raise, not
-    # misdecode the compressed block (r9 advisory: this branch was
-    # untested despite the test name claiming it)
+    # misdecode the compressed block
     schema = {
         "type": "record",
         "name": "r",

@@ -8,9 +8,9 @@ at sf0.001 and compared with BOTH comparators in one pass:
 - ``compare_frames_driverlike`` — the driver-hash emulation (pandas
   payloads, str()-level numeric renderings, temporal/null normalized),
   which catches Decimal-vs-float64 / int128 / int-vs-float presentation
-  divergences the canonical comparison erases. This is the r9 fix for
-  the two consecutive driver misses (r7 text_hashed_features, r8
-  tpch_q9) that passed every local gate.
+  divergences the canonical comparison erases. It catches the two
+  driver misses (text_hashed_features, tpch_q9) that passed every
+  other local gate.
 
 An operator may only carry an oracle in the registry if it passes here.
 """

@@ -216,7 +216,7 @@ def test_hof_ops_stay_jvm_side(spark, sf_dir):
 
 def test_native_lsh_plans_have_no_cartesian(spark, sf_dir):
     """Both native LSH candidate generators (the PRODUCTION helper
-    frames behind the r9 contract ops) must join on (band/table, key)
+    frames behind the recall-contract ops) must join on (band/table, key)
     — a cartesian/nested-loop product would mean the bucket keys fell
     out of the join condition."""
     from hive_metadata_collect_spark.llm.dedup import minhash_lsh_candidates
@@ -289,7 +289,7 @@ def test_except_all_is_aggregation_not_join(spark, sf_dir):
 
 
 def test_relation_cache_returns_same_frame(spark, sf_dir):
-    """Perf guard (r2 judge item 9): load_table memoizes the
+    """Perf guard: load_table memoizes the
     (session, dir, table) relation — a fresh LogicalRelation per call
     re-lists files and re-reads parquet footers, which dominated
     star-join planning time (0.53 s → 0.13 s when cached)."""
@@ -301,7 +301,7 @@ def test_relation_cache_returns_same_frame(spark, sf_dir):
 
 
 def test_stats_gated_broadcast_hints_small_not_large(spark, sf_dir):
-    """Perf guard (r2 judge item 9): _stats_gated_broadcast hints a
+    """Perf guard: _stats_gated_broadcast hints a
     frame whose plan-time size estimate is under the gate (static
     broadcast, no AQE materialization barrier) and leaves a frame with
     a huge estimate unhinted (hinting would override every size check
@@ -377,9 +377,9 @@ def test_lineage_sql_parse_is_narrow_jvm_side(spark, sf_dir):
     # the printed tree children follow parents, so the text after the
     # LAST "Exchange hashpartitioning" occurrence is the leaf stage
     # below every shuffle (countDistinct makes this a multi-exchange
-    # plan — ADVICE r5). Assert we really hold the leaf segment (it
-    # contains the scan), then that synthesis+parse+partial-agg all
-    # live there, i.e. before any exchange executes.
+    # plan). Assert we really hold the leaf segment (it contains the
+    # scan), then that synthesis+parse+partial-agg all live there, i.e.
+    # before any exchange executes.
     leaf_stage = plan.split("Exchange hashpartitioning")[-1]
     assert "Scan parquet" in leaf_stage  # proves this is the leaf region
     assert "Generate" in leaf_stage  # parse stage is pre-shuffle
@@ -410,7 +410,7 @@ def test_phash_neardup_no_all_pairs(spark, sf_dir):
     nested loop anywhere in the plan (the oracle verifies rep pairs
     all-pairs; the engine must never), and the pair frame must be
     built from a hash-collapsing aggregate, not doc-level rows (the
-    sf10 mega-family wall, r10)."""
+    sf10 mega-family wall)."""
     from hive_metadata_collect_spark.llm.multimodal import (
         mm_image_phash,
         phash_band_pairs,
@@ -478,7 +478,7 @@ def test_q21_decorrelation_shuffle_count(spark, sf_dir):
 
 
 def test_new_composites_broadcast_dims_and_heap_sort(spark, sf_dir):
-    """The round-6 TPC-H batch: dimension sides broadcast; the two
+    """TPC-H Q5/Q8/Q9 composites: dimension sides broadcast; the two
     LIMIT queries compile to TakeOrderedAndProject heaps."""
     for name in (
         "tpch_q5_local_supplier_volume",
@@ -564,14 +564,13 @@ def test_token_bucket_single_exchange(spark, sf_dir):
 
 
 def test_cusum_windows_share_one_sort_order(spark, sf_dir):
-    """CUSUM's prefix-sum + running-min must reuse ONE (grp, day)
-    sort — two stacked Window nodes, not two independent sorts of
-    the series. Exact counts (ADVICE r6 #4: the old `<=1 or <=2`
-    disjunction was vacuous): the known-good plan has exactly two
-    Sort nodes total — one (grp) sort for the whole-series mean
-    window, one (grp, day) sort shared by BOTH running windows —
-    and exactly two day-ordered Window nodes above that single
-    day-ordered Sort."""
+    """CUSUM's prefix-sum + running-min must reuse ONE (grp, day) sort —
+    two stacked Window nodes, not two independent sorts of the series.
+    Exact counts (a `<=1 or <=2` disjunction would be vacuous): the
+    known-good plan has exactly two Sort nodes total — one (grp) sort
+    for the whole-series mean window, one (grp, day) sort shared by BOTH
+    running windows — and exactly two day-ordered Window nodes above
+    that single day-ordered Sort."""
     df = OPS["win_cusum_alarm"].fn(spark, sf_dir)
     plan = physical_plan(df)
     sort_lines = [ln for ln in plan.splitlines() if "Sort [" in ln]
@@ -636,8 +635,8 @@ def test_nested_schema_pruning_reaches_scan(spark, sf_dir):
 def test_twopass_median_within_bucket_sort_only(spark, sf_dir):
     """Pass 2 must rank only the located bucket — the plan carries a
     bucket filter BELOW the window sort and pushes it into the scan,
-    never a full-column sort (ADVICE r6 #4: assert structure, not
-    just the substring)."""
+    never a full-column sort (asserted on structure, not just the
+    substring)."""
     df = OPS["agg_exact_median_twopass"].fn(spark, sf_dir)
     plan = physical_plan(df)
     lines = plan.splitlines()
@@ -704,10 +703,9 @@ def test_or_join_rewrite_no_nested_loop(spark, sf_dir):
 
 
 def test_hard_negatives_one_pass_no_union(spark, sf_dir):
-    """Hard-negative mining must be ONE broadcast-join + window
-    plan — not a per-anchor Python loop of unioned TakeOrdered
-    branches (round-6 verdict "What's wrong" #2). The label
-    inequality forces a broadcast nested-loop join; top-1 per
+    """Hard-negative mining must be ONE broadcast-join + window plan —
+    not a per-anchor Python loop of unioned TakeOrdered branches. The
+    label inequality forces a broadcast nested-loop join; top-1 per
     anchor is a single window rank."""
     df = OPS["sim_hard_negatives"].fn(spark, sf_dir)
     plan = physical_plan(df)
@@ -862,7 +860,7 @@ def test_rake_phrases_collapse_before_fanout(spark, sf_dir):
 
 
 def test_tpch_q2_semi_reduction_below_agg(spark, sf_dir):
-    """Q2 rewrite (round 8): BOTH broadcast dims must sit BELOW the
+    """Q2 rewrite: BOTH broadcast dims must sit BELOW the
     (partkey, suppkey) aggregate — the fact is semi-reduced before the
     expensive groupBy — and the agg shuffle carries keys+cost only
     (no supplier strings ride the exchange)."""
@@ -1009,10 +1007,10 @@ def test_hdr_buckets_collapse_before_window(spark, sf_dir):
 
 def test_semdedup_pairs_cluster_keyed(spark, sf_dir):
     """sim_semdedup's pair stage is one Arrow group per CLUSTER (the
-    r10 per-cell BLAS Gram rewrite — the paper's own computation
-    unit): FlatMapGroupsInPandas keyed on label, never a
-    CartesianProduct / BroadcastNestedLoopJoin (the all-pairs shape
-    SemDeDup exists to avoid), and no row-at-a-time Python."""
+    per-cell BLAS Gram — the paper's own computation unit):
+    FlatMapGroupsInPandas keyed on label, never a CartesianProduct /
+    BroadcastNestedLoopJoin (the all-pairs shape SemDeDup exists to
+    avoid), and no row-at-a-time Python."""
     df = OPS["sim_semdedup"].fn(spark, sf_dir)
     plan = physical_plan(df)
     assert "FlatMapGroupsInPandas" in plan, plan[:2000]
@@ -1122,10 +1120,10 @@ def test_q21_bucketed_no_fact_exchange(spark, sf_dir):
 
 def test_contract_check_referential_no_forced_broadcast(spark, sf_dir):
     """cat_data_contract_check: the referential probe carries NO
-    broadcast hint (customer is fact-sized at 100 TB — r8 advisory);
-    locally AQE still converts the tiny keyset to a broadcast join,
-    but the logical plan must not force it. Counting aggregates
-    everywhere, no Python, no nested-loop join."""
+    broadcast hint (customer is fact-sized at 100 TB); locally AQE still
+    converts the tiny keyset to a broadcast join, but the logical plan
+    must not force it. Counting aggregates everywhere, no Python, no
+    nested-loop join."""
     df = OPS["cat_data_contract_check"].fn(spark, sf_dir)
     plan = physical_plan(df)
     assert "ResolvedHint" not in df._jdf.queryExecution().logical().toString()
@@ -1228,7 +1226,7 @@ def test_iceberg_snapshot_diff_linkages_broadcast(spark, sf_dir):
 
 
 def test_grouping_sets_expand_sits_on_preagg(spark, sf_dir):
-    """r11 (r10 verdict item 3): the grouping-sets Expand must run
+    """The grouping-sets Expand must run
     over the eager (status, priority, task) pre-aggregate, never the
     fact scan — in the printed plan (root-first) a HashAggregate pair
     must appear BETWEEN the Expand and the FileScan. Same shape for
@@ -1245,7 +1243,7 @@ def test_grouping_sets_expand_sits_on_preagg(spark, sf_dir):
 
 
 def test_count_distinct_bitmap_route_no_expand(spark, sf_dir):
-    """r11 (r10 verdict item 5): the integer-key distinct counts run
+    """The integer-key distinct counts run
     as word-bitmap aggregates — no Catalyst Expand (the ×3 row
     widening of the countDistinct plan), and the whole pipeline must
     stay in codegen HashAggregate: no SortAggregate (what Spark 4's
@@ -1259,7 +1257,7 @@ def test_count_distinct_bitmap_route_no_expand(spark, sf_dir):
 
 
 def test_pricing_summary_partials_are_int64(spark, sf_dir):
-    """r11 (r10 verdict item 1): the Q1-shape hot path accumulates
+    """The Q1-shape hot path accumulates
     int64 cents — the partial aggregate over the scan must carry
     sum(...bigint...) expressions and NO decimal sums; decimal
     appears only in the |groups|×|tasks| merge above."""

@@ -42,7 +42,6 @@ EVENT_OPS = [
     "fn_interval_arith",
     "fn_map_hof",
     "cat_lineage_pagerank",
-    # round 5
     "cat_lineage_sql",
     "cat_lineage_sql_columns",
     "cat_merge_upsert",
@@ -50,9 +49,9 @@ EVENT_OPS = [
     "cat_query_fingerprint",
     "win_distinct_running",
     "win_gap_fill",
-    # round 6 — the generator's 0-3 day offsets on 3 users force
-    # tie-heavy day sets, single-day users, and equal-length runs
-    # (the streak tie-break's edge class, ADVICE/verdict r5 item 5)
+    # the generator's 0-3 day offsets on 3 users force tie-heavy day
+    # sets, single-day users, and equal-length runs (the streak
+    # tie-break's edge class)
     "win_streak_longest",
     # tiny logs force empty snapshots, single-action paths, and
     # same-version add/remove collisions (the tombstone tie-break)
@@ -71,10 +70,10 @@ EVENT_OPS = [
     # a table with neither segment present forces the 0/0 Jaccard
     # edge (caught: ANSI division raised where the oracle NaN'd)
     "agg_audience_overlap",
-    # round 8 continuation — single-arm tables hit the nullif-guarded
-    # KS/MWU degenerate edges (empty arm, all-tied single value);
-    # purchase-free users hit the funnel's empty-conversion frame;
-    # 1-event users hit the lead-chain NULL in the transition matrix
+    # single-arm tables hit the nullif-guarded KS/MWU degenerate edges
+    # (empty arm, all-tied single value); purchase-free users hit the
+    # funnel's empty-conversion frame; 1-event users hit the lead-chain
+    # NULL in the transition matrix
     "agg_ks_test",
     "agg_mann_whitney_u",
     "agg_srm_check",
@@ -90,9 +89,9 @@ EVENT_OPS = [
     # 0-3-day spans give 1-week tables (all rows drop: no
     # predecessor) and single-bucket edge weeks
     "cat_period_over_period",
-    # round 6 continued — tied timestamps vary frame CONTENTS only
-    # through the event_id tie-break; the seed-with-first fold must
-    # agree on 1-row frames and full 10-row frames alike
+    # tied timestamps vary frame CONTENTS only through the event_id
+    # tie-break; the seed-with-first fold must agree on 1-row frames and
+    # full 10-row frames alike
     "win_ewma_smoothed",
     # tombstone-last vs update-last per key on tied versions; 1-change
     # keys; all-delete tables (empty result)
@@ -103,9 +102,9 @@ EVENT_OPS = [
     # bit_and/or/xor on non-negative ids — exact integers, degenerate
     # single-row groups
     "agg_bitwise",
-    # round 6 continued (session 3) — tiny logs force all-tombstone
-    # paths, single-action paths, and paths live in one retained
-    # snapshot but not the other (the liveness disjunction)
+    # tiny logs force all-tombstone paths, single-action paths, and
+    # paths live in one retained snapshot but not the other (the
+    # liveness disjunction)
     "cat_vacuum_plan",
     # 1-40 events give sparse DAGs: isolated roots, missing middle
     # waves, and the 5-round fixpoint reached early (must be stable
@@ -275,10 +274,10 @@ EVENT_OPS = [
     # purchase-only users (no feature history — both missing flags);
     # feature events AT the label timestamp (<= boundary)
     "pipeline_feature_store_pit",
-    # round 8 continuation (session 2) — tiny tables give 1-2-day
-    # series: self-lags with n=1 (variance 0 → NULL r via nullif),
-    # view-only/purchase-only days, and negative lags that shift
-    # past the whole domain (empty join → lag row absent both sides)
+    # tiny tables give 1-2-day series: self-lags with n=1 (variance 0 →
+    # NULL r via nullif), view-only/purchase-only days, and negative
+    # lags that shift past the whole domain (empty join → lag row absent
+    # both sides)
     "agg_cross_correlation",
     # gap EXACTLY 7 splits islands, 6 merges them (the boundary the
     # 0-3-day generator offsets land on); single-user tables make
@@ -350,8 +349,8 @@ def test_event_op_parity_on_generated_data(spark, name, rows):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_pagerank_round8_boundary_pinned(spark):
-    """Pinned r12 falsifying example: this 3-user graph puts the
+def test_pagerank_eighth_decimal_boundary_pinned(spark):
+    """Pinned hypothesis-found falsifying example: this 3-user graph puts the
     'click' rank double on the round(,8) representational boundary
     (0.0991368749… — shortest repr 0.099136875) where Spark's
     BigDecimal half-up and DuckDB's binary-value round disagree by
@@ -400,16 +399,14 @@ DOC_OPS = [
     "text_unigram_logprob",
     "fn_regexp_suite",
     "fn_url_suite",
-    # round 5
     "pipeline_pack_sequences",
     "pipeline_stratified_sample",
     "text_fingerprint",
     "mm_image_phash",
-    # round 6
     "dedup_paragraph",
-    # round 6 continued (session 3) — deterministic md5 keep
-    # decision: tiny docs clamp keep_p to the 0.05 floor, huge
-    # n_chars to the 0.95 ceiling; parity holds the u<p boundary
+    # deterministic md5 keep decision: tiny docs clamp keep_p to the
+    # 0.05 floor, huge n_chars to the 0.95 ceiling; parity holds the u<p
+    # boundary
     "pipeline_quality_resample",
     # short docs (1-5 words): vocab == corpus (OOV = 0 exactly),
     # all-unique words (vocab boundary ties resolved by word asc)
@@ -496,16 +493,16 @@ DOC_OPS = [
     # forced exact dups in the tiny-vocab generator exercise the
     # corpus-wide digest join under per-lang rollup
     "pipeline_dataset_card",
-    # round 6 continued — tiny vocab forces containment 1.0 (doc
-    # inside doc) and the tau boundary on exact integer intersections
+    # tiny vocab forces containment 1.0 (doc inside doc) and the tau
+    # boundary on exact integer intersections
     "dedup_containment",
     # 1-char words hit the length-2 guard; tie-heavy counts exercise
     # the (count desc, pair asc) deterministic top-30 cut
     "text_bpe_pair_counts",
-    # round 8 — generated docs are all BELOW the 30-word floor
-    # (r_word_count false everywhere) and the tiny vocab's 1-char 'x'
-    # drags mean word length toward the lower bound; residue-seeded
-    # symbol/number decorations still fire on the generated doc_ids
+    # generated docs are all BELOW the 30-word floor (r_word_count false
+    # everywhere) and the tiny vocab's 1-char 'x' drags mean word length
+    # toward the lower bound; residue-seeded symbol/number decorations
+    # still fire on the generated doc_ids
     "text_gopher_quality_rules",
     # generated docs have no terminal punctuation (the raw line always
     # drops); residue classes decide every kept line, so 1-doc corpora
@@ -523,9 +520,9 @@ DOC_OPS = [
     # 5-word vocab forces dense continuation counts where the
     # backoff term dominates ties
     "text_kneser_ney_bigram",
-    # round 8 continuation (session 2) — sub-8-word docs emit no
-    # 8-grams (doc AND source can vanish); the 5-word vocab forces
-    # total cross-doc duplication (coverage exactly 1.0)
+    # sub-8-word docs emit no 8-grams (doc AND source can vanish); the
+    # 5-word vocab forces total cross-doc duplication (coverage exactly
+    # 1.0)
     "text_dup_ngram_coverage",
     # 1-doc buckets yield no neighbor pairs; exact-dup docs give
     # Jaccard 1 through the w=5 window; 16-char prefixes tie heavily
@@ -627,9 +624,9 @@ ORDER_OPS = [
     "cat_equidepth_histogram",
     # tiny groups where p5 == p95 (nothing clamps) and 1-row groups
     "agg_winsorized_mean",
-    # round 6 continued (session 3) — 1-row groups (cusum = max(0,
-    # x-mu-k) directly), all-equal prices (mu == x, pure drain), and
-    # coarse dates forcing tied days under the prefix-sum identity
+    # 1-row groups (cusum = max(0, x-mu-k) directly), all-equal prices
+    # (mu == x, pure drain), and coarse dates forcing tied days under
+    # the prefix-sum identity
     "win_cusum_alarm",
     # monotone series have zero drawdown everywhere (trough = every
     # day — the LATEST-day tie rule decides); single-day groups
@@ -649,11 +646,11 @@ ORDER_OPS = [
     # few distinct (custkey, day) dims: many buckets share one
     # z-cell; 1-row tables make every bucket bbox 1x1
     "sink_cluster_zorder",
-    # round 8 continuation (session 2) — tiny order sets give 1-2
-    # month series: no pairs at all for Theil-Sen (priority absent on
-    # both sides), single-point rolling frames (NULL slope via
-    # nullif), Holt folds that never leave the init state, and
-    # seasonal frames that never fill 13 months (empty output)
+    # tiny order sets give 1-2 month series: no pairs at all for
+    # Theil-Sen (priority absent on both sides), single-point rolling
+    # frames (NULL slope via nullif), Holt folds that never leave the
+    # init state, and seasonal frames that never fill 13 months (empty
+    # output)
     "agg_theil_sen_slope",
     "win_rolling_regression_slope",
     "win_holt_linear",
@@ -741,14 +738,13 @@ LINEITEM_OPS = [
     # boundary would be noise, not semantics.)
     "agg_mode_deterministic",
     "agg_entropy",
-    # round 6 — integer quantities make even-group medians land on
+    # integer quantities make even-group medians land on
     # x.0/x.5 (exact in double), so MAD's two interpolated percentiles
-    # are compared on semantics, not accumulation noise (verdict r5
-    # item 5: even-sized groups are the interpolation edge class)
+    # are compared on semantics, not accumulation noise (even-sized
+    # groups are the interpolation edge class)
     "agg_median_abs_deviation",
-    # round 6 — DECIMAL weight sums make the running*2 >= total
-    # crossing exact; tiny tables hit single-value groups and
-    # exact-half boundaries
+    # DECIMAL weight sums make the running*2 >= total crossing exact;
+    # tiny tables hit single-value groups and exact-half boundaries
     "agg_weighted_median",
     # (agg_higher_moments stays out for the same reason as
     # agg_regr_linear: Spark's streaming moments vs the oracle's
@@ -921,7 +917,7 @@ def test_y4m_decode_roundtrip_property(w2, h2, nf, seed):
 )
 @settings(max_examples=25, deadline=None)
 def test_chunk_overlap_reassembles_token_stream(n_tokens, seed, spark):
-    """Judge item 7's property: chunk 0 plus every later chunk minus
+    """Chunk 0 plus every later chunk minus
     its CHUNK_OVERLAP leading tokens must reproduce the original token
     stream exactly, for arbitrary document lengths either side of the
     chunk/stride boundaries."""
@@ -1027,9 +1023,9 @@ EMBEDDING_OPS = [
     # duplicate top scores exercise the (metric, vec_id) tie-break
     "sim_mips_maxdot",
     "sim_rank_fusion",
-    # round 8 continuation (session 2) — zero vectors (n2 = 0) can
-    # never exceed tau (dot > 0 gate); duplicate vectors force cos=1
-    # drops decided purely by the (d2, vec_id) priority
+    # zero vectors (n2 = 0) can never exceed tau (dot > 0 gate);
+    # duplicate vectors force cos=1 drops decided purely by the (d2,
+    # vec_id) priority
     "sim_semdedup",
     # 6-12 vectors: corpus of 1-7 after the 5 queries; all-tied zero
     # dots rank by cid; n_rel < 10 exercises the truncated IDCG

@@ -18,7 +18,12 @@ import pyarrow.parquet as pq
 from hive_metadata_collect_spark import registry
 from hive_metadata_collect_spark.llm import dedup, similarity
 from hive_metadata_collect_spark.operators import joins
-from hive_metadata_collect_spark.session import build_dir, scratch_dir, stage_once
+from hive_metadata_collect_spark.session import (
+    build_dir,
+    fixture_tag,
+    scratch_dir,
+    stage_once,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OPS = registry.load_all()
@@ -69,6 +74,24 @@ def test_rebuild_keeps_an_earlier_frame_readable(spark, sf_dir):
         os.path.join(other, "orders.parquet"), filters=[("o_orderstatus", "=", "F")]
     ).num_rows
     assert first.count() == expected
+
+
+def test_staged_data_is_keyed_by_the_full_fixture_path(spark, sf_dir, tmp_path):
+    """A second fixture dir with the same basename gets its own staged
+    copy: here its events come from sf0.01, so the staged params table
+    must count ten times the rows."""
+    other = tmp_path / os.path.basename(sf_dir.rstrip("/"))
+    other.mkdir()
+    sf001 = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    shutil.copy(os.path.join(sf001, "events.parquet"), other)
+    assert fixture_tag(str(other)) != fixture_tag(sf_dir)
+
+    build = OPS["fn_json_extract_ingested"].fn
+
+    def n_events(fixture):
+        return build(spark, fixture).agg({"n_events": "sum"}).collect()[0][0]
+
+    assert (n_events(sf_dir), n_events(str(other))) == (1000, 10000)
 
 
 def _rewrite(path: str, column: str, values) -> None:
@@ -184,12 +207,12 @@ def test_operator_files_live_in_the_session_scratch_and_die_with_it(sf_dir, tmp_
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["scratch"].startswith(str(tmp_path / "local"))
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = fixture_tag(sf_dir)
     assert {
         f"params_ingested_{tag}",
         f"kafka_feed_{tag}",
         f"derby_{tag}",
-        f"bk_q21_lineitem_{tag.replace('.', '_')}",
+        f"bk_q21_lineitem_{tag}",
     } <= set(out["staged"])
     assert out["new_in_repo"] == []
     # Derby's log and Spark's empty warehouse dir are all the JVM

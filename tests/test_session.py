@@ -64,7 +64,7 @@ def test_profile_cpus_star_is_the_affinity_count(fake_host):
 
 def test_tune_session_sets_every_runtime_conf(spark):
     table = session._runtime_confs(session.host_profile())
-    assert len(table) == 9
+    assert len(table) == 10
     other = {
         "spark.sql.session.timeZone": "America/New_York",
         "spark.sql.adaptive.enabled": "false",
@@ -75,6 +75,7 @@ def test_tune_session_sets_every_runtime_conf(spark):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "512k",
         "spark.sql.execution.arrow.pyspark.enabled": "false",
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "128",
+        "spark.sql.legacy.parquet.nanosAsLong": "false",
     }
     assert set(other) == set(table)
     # builder-only confs stay as the session has them

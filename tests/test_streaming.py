@@ -429,13 +429,13 @@ def test_stateful_running_restart_recovers_counter(
     spark, sf_dir, checkpoint, tmp_path
 ):
     """Checkpoint-restart recovery for the applyInPandasWithState
-    counter (r9 verdict item 5): run half the input, stop, append the
-    rest, restart from the SAME checkpoint. Every user updated in run
-    2 must report a running_count equal to the BATCH count over the
-    full input — if the state store were lost on restart the counter
-    would restart from the second half alone. The memory sink cannot
-    recover a checkpoint, so each run lands through foreachBatch into
-    a parquet dir (the idempotent-sink pattern of run_foreach_batch)."""
+    counter: run half the input, stop, append the rest, restart from the
+    SAME checkpoint. Every user updated in run 2 must report a
+    running_count equal to the BATCH count over the full input — if the
+    state store were lost on restart the counter would restart from the
+    second half alone. The memory sink cannot recover a checkpoint, so
+    each run lands through foreachBatch into a parquet dir (the
+    idempotent-sink pattern of run_foreach_batch)."""
     src_dir, schema, first, second = _split_events_by_time(
         spark, sf_dir, tmp_path
     )
@@ -489,12 +489,12 @@ def test_stateful_running_restart_recovers_counter(
 
 def test_dedup_keys_restart_no_reemission(spark, sf_dir, checkpoint, tmp_path):
     """Checkpoint-restart recovery for dropDuplicatesWithinWatermark
-    (r9 verdict item 5): with a delay horizon longer than the fixture's
-    time span (so no key ever expires), the cumulative file-sink output
-    of both runs must carry each (user_id, event_type) exactly once and
-    cover exactly the batch-distinct key set. A lost state store would
-    re-emit every first-half key that reappears in the second half.
-    The parquet sink IS checkpoint-recoverable (unlike memory)."""
+    with a delay horizon longer than the fixture's time span (so no key
+    ever expires), the cumulative file-sink output of both runs must
+    carry each (user_id, event_type) exactly once and cover exactly the
+    batch-distinct key set. A lost state store would re-emit every
+    first-half key that reappears in the second half. The parquet sink
+    IS checkpoint-recoverable (unlike memory)."""
     src_dir, schema, first, second = _split_events_by_time(
         spark, sf_dir, tmp_path
     )

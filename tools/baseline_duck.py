@@ -6,22 +6,20 @@ driver's correctness gate runs), so the baseline always matches the
 operator semantics actually shipped. Usage:
     python tools/baseline_duck.py [sf_dir] [--only a,b] [--inproc]
 
-r13: by default each key is timed in its OWN child process (the parent
+By default each key is timed in its OWN child process (the parent
 relaunches this script with --inproc --only <key>). Per-key timing is
-unchanged — the child still does warm + median-of-3 on a hot
-connection — but a key that hard-crashes DuckDB can no longer destroy
-the rest of the pairing: the 24 GB-capped q_hashed_features
-materialization at sf10 SIGSEGVed inside the DuckDB allocator (not a
-catchable Python exception; `.scratch/r13/duck_sf10_r13.err` run 2),
-which no amount of in-process rebuild hardening survives. Process
-isolation also returns every key's memory to the kernel before the
-next key starts. The base memory cap is the host profile's
-(``session.host_profile()``); a crashed key is retried in a fresh
-child at SPARK_GRAFT_DUCK_MEM_RETRY (default half of MemTotal) and the
-line annotated. A deterministic SQL error ends the ladder at once and
-is printed as the child reported it. --inproc restores the
-single-process behavior (used by the children, and available for
-debugging).
+unchanged — the child still does warm + median-of-3 on a hot connection
+— but a key that hard-crashes DuckDB can no longer destroy the rest of
+the pairing: the 24 GB-capped q_hashed_features materialization at sf10
+SIGSEGVed inside the DuckDB allocator (not a catchable Python
+exception), which no amount of in-process rebuild hardening survives.
+Process isolation also returns every key's memory to the kernel before
+the next key starts. The base memory cap is the host profile's
+(``session.host_profile()``); a crashed key is retried in a fresh child
+at SPARK_GRAFT_DUCK_MEM_RETRY (default half of MemTotal) and the line
+annotated. A deterministic SQL error ends the ladder at once and is
+printed as the child reported it. --inproc restores the single-process
+behavior (used by the children, and available for debugging).
 """
 
 from __future__ import annotations
@@ -198,14 +196,14 @@ def main() -> None:
     def _rebuild(old):
         """Close a poisoned connection and build a fresh one. The dying
         instance's buffers are released asynchronously, so an immediate
-        duckdb.connect() can itself die with a tiny bad-allocation (the
-        r12 sf10 q_hashed_features run lost the whole pairing to a
-        45 KB alloc failure inside fresh_con) — gc + backoff retries.
-        r13: the r12 backoff (17.5 s total) was still not enough after
-        a ~24 GB instance died mid-spill at sf10 (a 2 KB allocation
-        failed on the final attempt); the ladder now waits up to ~2 min
-        total and polls /proc/meminfo so it reconnects as soon as the
-        kernel actually shows the memory back."""
+        duckdb.connect() can itself die with a tiny bad-allocation (an
+        sf10 q_hashed_features run lost the whole pairing to a 45 KB
+        alloc failure inside fresh_con) — gc + backoff retries. A 17.5 s
+        backoff is not enough after a ~24 GB instance dies mid-spill at
+        sf10 (a 2 KB allocation failed on the final attempt), so the
+        ladder waits up to ~2 min total and polls /proc/meminfo so it
+        reconnects as soon as the kernel actually shows the memory
+        back."""
         import gc
 
         try:
@@ -274,14 +272,14 @@ def main() -> None:
                 con = _rebuild(con)
                 note0 = " (WARNING ingest table failed; timing re-parse)"
         # An error on one query must not kill the whole pairing run
-        # (r7/r9: q_hashed_features OOMs DuckDB materializing the
-        # 500k x 1024 feature matrix at sf10; r12: the OOM can also
-        # invalidate the connection so the NEXT query dies with a
-        # FatalException the old OutOfMemoryException-only handler let
-        # escape, silently truncating the pairing log). Catch every
-        # duckdb error, rebuild the connection, and retry a capped OOM
-        # once under a larger — still kernel-safe — limit, annotating
-        # the line with the limit that produced the timed point.
+        # (q_hashed_features OOMs DuckDB materializing the 500k x 1024
+        # feature matrix at sf10, and the OOM can also invalidate the
+        # connection so the NEXT query dies with a FatalException that
+        # an OutOfMemoryException-only handler lets escape, silently
+        # truncating the pairing log). Catch every duckdb error, rebuild
+        # the connection, and retry a capped OOM once under a larger —
+        # still kernel-safe — limit, annotating the line with the limit
+        # that produced the timed point.
         note = note0
         try:
             rows, med = _timed(con, sql)

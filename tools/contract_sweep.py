@@ -1,12 +1,11 @@
 """Full driver-contract emulation sweep.
 
 Runs every `__spark_entry__.queries()` entry on a PLAIN SparkSession
-(the driver does not use our tuned builder) against its
-`oracle_sql()` twin in DuckDB at the given fixture dir (default
-sf0.01, the driver's CORRECTNESS scale), comparing row count, column
-set, and canonical values — the same contract the per-round
-CORRECTNESS_r{N}.json check enforces. Entries with no oracle get a
-rows-only smoke (runs and returns >= 0 rows).
+(the driver does not use our tuned builder) against its `oracle_sql()`
+twin in DuckDB at the given fixture dir (default sf0.01, the driver's
+correctness scale), comparing row count, column set, and canonical
+values — the same contract the grading driver enforces. Entries with no
+oracle get a rows-only smoke (runs and returns >= 0 rows).
 
 Usage: python tools/contract_sweep.py [sf_dir] [--only name1,name2]
                                       [--max-rows N] [--driver-mem 16g]
@@ -15,8 +14,8 @@ Usage: python tools/contract_sweep.py [sf_dir] [--only name1,name2]
 --driverlike: compare with testing.compare_frames_driverlike — the
 str()-level pandas-path rendering the driver's hash actually sees
 (no canonicalization), catching Decimal/int128/float-presentation
-divergences that compare_frames' canon_value erases (the r7/r8
-driver-miss class).
+divergences that compare_frames' canon_value erases (the driver
+misses text_hashed_features and tpch_q9 once had).
 
 --driver-mem SIZE (scale-sweep mode): raise the driver heap for the
 one JVM. The default stays Spark's plain 1g — the driver's protocol —
@@ -58,7 +57,7 @@ def main() -> int:
         # scale-sweep mode: exclude named ops (the documented
         # quadratic-oracle exceptions — their literal DuckDB twins
         # are hours-infeasible at sf10 BY CONSTRUCTION; their hash
-        # gates live at sf0.01-sf1, see BASELINE.md r8 notes)
+        # gates live at sf0.01-sf1, see BASELINE.md)
         i = args.index("--skip")
         skip = set(args[i + 1].split(","))
         del args[i : i + 2]

@@ -1,6 +1,6 @@
-"""Generate a 10x-scaled fixture set for the scaling-curve bench
-point (round-4 verdict item 8): at sf1 the local-mode per-query floor
-stops dominating and the BENCH-vs-DuckDB ratio measures real compute.
+"""Generate a 10x-scaled fixture set for the scaling-curve bench point:
+at sf1 the local-mode per-query floor stops dominating and the
+BENCH-vs-DuckDB ratio measures real compute.
 
 Each scaled table is the union of K=10 key-shifted copies of the
 sf0.1 fixture: every key column is offset by copy_index * (max_key+1)
@@ -45,7 +45,7 @@ def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     # output dir name (under .scratch/): sf1 for the 10x point,
-    # sf10 for the 100x scaling point (round-6 verdict item 4)
+    # sf10 for the 100x scaling point
     name = sys.argv[3] if len(sys.argv) > 3 else "sf1"
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -1,8 +1,8 @@
 """Generate fixtures/warehouse — the committed mini warehouse tree
-that gives `cat_storage_size` a real DuckDB oracle (r9 verdict item 4:
-"commit a deterministic warehouse-listing fixture ... and hash the
-(path, bytes) inventory against a DuckDB projection of the same
-fixture", the same replay pattern as the Delta/Iceberg fixtures).
+that gives `cat_storage_size` a real DuckDB oracle: the (path, bytes)
+inventory of a deterministic warehouse listing is hashed against a
+DuckDB projection of the same tree, the same replay pattern as the
+Delta/Iceberg fixtures.
 
 The tree exercises both warehouse layouts the operator must parse:
   warehouse/region.parquet                      single-file table
