@@ -16,14 +16,12 @@ step so lineage plans stay shallow at any iteration count.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
+from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
 @register(

@@ -21,7 +21,6 @@ the business key once.
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

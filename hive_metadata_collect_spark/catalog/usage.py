@@ -18,14 +18,12 @@ low-cardinality aggregates before any join — shuffles carry
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_metadata_collect_spark.registry import register
-from hive_metadata_collect_spark.sources.fixtures import TABLES, load_table
+from hive_metadata_collect_spark.sources.fixtures import load_table
 
 
 @register(

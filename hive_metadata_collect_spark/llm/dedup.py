@@ -47,12 +47,14 @@ def _jaccard_pairs(items: DataFrame, tau: float) -> DataFrame:
         F.col("doc_id").alias("doc_a"), "item", F.col("set_size").alias("size_a")
     )
     b = items.select(
-        F.col("doc_id").alias("doc_b"), "item", F.col("set_size").alias("size_b")
+        F.col("doc_id").alias("doc_b"),
+        F.col("item").alias("item_b"),
+        F.col("set_size").alias("size_b"),
     )
     inter = (
         a.join(
             b,
-            (a["item"] == b["item"])
+            (F.col("item") == F.col("item_b"))
             & (F.col("doc_a") < F.col("doc_b"))
             & (F.col("size_a") >= F.ceil(tau * F.col("size_b")))
             & (F.col("size_b") >= F.ceil(tau * F.col("size_a"))),
@@ -1778,10 +1780,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = sets.select(
         F.col("sg").alias("sb"),
         F.col("ng").alias("nb"),
-        F.explode("grams").alias("item"),
+        F.explode("grams").alias("item_b"),
     )
     inter = (
-        a.join(b, (a["item"] == b["item"]) & (F.col("sa") < F.col("sb")))
+        a.join(b, (F.col("item") == F.col("item_b")) & (F.col("sa") < F.col("sb")))
         .groupBy("sa", "sb", "na", "nb")
         .agg(F.count(F.lit(1)).alias("ni"))
     )

@@ -25,6 +25,18 @@ Scale notes (the configs that matter at 100 TB / 1000 executors):
 - Arrow on: every pandas-UDF / toPandas crossing is columnar-batched.
 - Session timezone pinned to UTC: fixture timestamps are naive and the
   DuckDB oracle treats them as UTC (FIXTURES.md "Harness notes").
+- Generated-class cache: ``spark.sql.codegen.cache.maxEntries`` is
+  1024, not Spark's 100. Spark keeps one JVM-wide cache of the classes
+  Janino compiles, and the working sets measured on this engine are
+  larger than 100: about 282 distinct classes for the 9-operator serve
+  set and about 423 for one full collection. At 100, every warm pass
+  compiled most of its code again (about 201 classes per serve pass);
+  at 1024 a warm pass compiles none. Each cached class holds about
+  19 KB of heap, so a full cache costs about 19 MB. The conf is static:
+  the cache reads it once, at first use, so it is set on the builder
+  only and cannot reach a session someone else built (the driver
+  harness's sessions get only ``tune_session``). Size it from the
+  working set again when the served operators change.
 - The scratch dir is driver-local, which only works while the executors
   share the driver's filesystem (local mode). On a cluster it must
   become a per-application directory on the shared filesystem, as a
@@ -111,6 +123,9 @@ def _runtime_confs(profile: dict) -> dict[str, str]:
 _BUILDER_CONFS = {
     "spark.sql.cbo.enabled": "true",
     "spark.ui.enabled": "false",
+    # Static: holds the measured working sets of generated classes
+    # (module docstring, "Generated-class cache").
+    "spark.sql.codegen.cache.maxEntries": "1024",
     # No [Stage N] console progress bars: bench.py's caller parses its
     # LAST output line as JSON, and progress bars trailing that line
     # break the parse.
@@ -144,7 +159,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     plain session's 200 shuffle partitions make the suite ~3× slower
     than at 32 even with AQE coalescing (measured local[8], sf0.01);
     on a real cluster the driver-set value stays high and AQE
-    coalesces."""
+    coalesces. Static confs cannot be set here: such a session keeps
+    Spark's 100-class codegen cache, so its warm passes still compile
+    again the classes that ``configure`` would have kept cached."""
     for key, val in _runtime_confs(host_profile()).items():
         try:
             spark.conf.set(key, val)

@@ -4,6 +4,8 @@ BE the scale-appropriate plans, not merely produce correct rows.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -16,6 +18,7 @@ from hive_metadata_collect_spark.plans.explain import (
     scan_summary,
     shuffled_hash_joins,
 )
+from hive_metadata_collect_spark.session import scoped_conf
 from hive_metadata_collect_spark.sources.fixtures import load_table
 
 OPS = registry.load_all()
@@ -1266,3 +1269,29 @@ def test_pricing_summary_partials_are_int64(spark, sf_dir):
     first_partial = plan.rindex("partial_")  # deepest partial = scan-side
     partial_line = plan[first_partial : plan.index("\n", first_partial)]
     assert "decimal" not in partial_line.lower(), partial_line
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_near_minhash", "dedup_ngram_jaccard", "dedup_containment"],
+)
+def test_item_self_joins_compare_two_attributes(spark, sf_dir, name):
+    """The inverted-index self-joins (`_jaccard_pairs`,
+    dedup_containment) must name each side's item column apart. With
+    ``selfJoinAutoResolveAmbiguity`` off, Dataset.join no longer
+    rewrites an ``a["item"] == b["item"]`` condition on two projections
+    of one frame, which then compares one attribute with itself: an
+    always-true condition and a cartesian product of the item lists.
+    (dedup_containment's sides each explode their own attribute, so it
+    never depended on the rewrite; it stays listed as a guard.)"""
+    with scoped_conf(spark, {"spark.sql.selfJoinAutoResolveAmbiguity": "false"}):
+        analyzed = OPS[name].fn(spark, sf_dir)._jdf.queryExecution().analyzed()
+    pairs = [
+        (left, right)
+        for line in analyzed.toString().splitlines()
+        if line.lstrip(" :+-").startswith("Join ")
+        for left, right in re.findall(r"(item\w*#\d+) = (item\w*#\d+)", line)
+    ]
+    assert pairs, name
+    for left, right in pairs:
+        assert left != right, (name, left, right)

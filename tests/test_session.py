@@ -1,9 +1,11 @@
-"""The host profile, the conf table both session paths apply, and the
-scoped-conf helper."""
+"""The host profile, the conf table both session paths apply, the
+generated-class cache, and the scoped-conf helper."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from hive_metadata_collect_spark import session
 
@@ -99,3 +101,32 @@ def test_scoped_conf_restores_when_the_body_raises(spark):
             raise RuntimeError("body failed")
     assert spark.conf.get(changed) == before
     assert spark.conf.get(unset, None) is None
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_working_set_past_100_classes_compiles_nothing(spark):
+    """A working set larger than Spark's default 100-class codegen cache
+    compiles once; a second run finds every class cached. The literal
+    ``i`` is inlined into the generated code, so each of the 80 frames
+    compiles classes of its own (two each on Spark 4.1)."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert session.configure(SparkSession.Builder())._options[key] == "1024"
+    assert spark.sparkContext.getConf().get(key) == "1024"
+
+    def working_set():
+        for i in range(80):
+            frame = spark.range(4).select((F.col("id") * 7919 + i).alias("v"))
+            frame.write.format("noop").mode("overwrite").save()
+
+    start = _compiles(spark)
+    working_set()
+    cold = _compiles(spark) - start
+    working_set()
+    warm = _compiles(spark) - start - cold
+    assert cold > 100
+    assert warm == 0
